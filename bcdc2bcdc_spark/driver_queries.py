@@ -4541,6 +4541,13 @@ QUERIES["dml_delete_update"] = q_dml_delete_update
 ORACLES["dml_delete_update"] = SQL_DML_DELETE_UPDATE
 
 
+def _all_buckets(table) -> list[int]:
+    """Every bucket id of ``table``, read from its persisted bucket count:
+    the ``upsert(touched=...)`` superset for a delta spanning the table."""
+    n_buckets, _ = table.bucket_scheme()
+    return list(range(n_buckets))
+
+
 def q_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Version-rollback hard-signal row (sources/lake.py restore — Delta
     RESTORE / Iceberg rollback analog): the half-log LWW state is loaded
@@ -4577,7 +4584,7 @@ def q_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         # universe changes); ``touched`` accepts a superset, so passing the
         # full bucket range skips the upsert's discovery job — the change
         # plan then executes exactly once, in the staging write
-        t.upsert(delta, touched=list(range(16)))
+        t.upsert(delta, touched=_all_buckets(t))
         restored = t.restore(1)
         if restored != 3:
             raise AssertionError(f"expected restore commit 3, got {restored}")
@@ -4671,7 +4678,7 @@ def q_join_view_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         view.build()
         # touched superset: the half→full delta spans every fact bucket —
         # see q_restore_rollback
-        left.upsert(_delta_of(states), touched=list(range(16)))
+        left.upsert(_delta_of(states), touched=_all_buckets(left))
         right.upsert(
             spark.createDataFrame(
                 [("F", "fam-F2", "UPDATE")], "lang string, family string, op string"

@@ -13,6 +13,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from bcdc2bcdc_spark.operators.dedupe import cosine_expr
@@ -24,8 +26,15 @@ def _as_double(col: Column) -> Column:
 
 def _sql_double(x: float) -> str:
     """Exact SQL double literal: ``repr`` is the shortest decimal that
-    round-trips to ``x``, so parsing it back yields the identical bits."""
-    return repr(float(x)) + "D"
+    round-trips to ``x``, so parsing it back yields the identical bits.
+    NaN and ±Infinity (a degenerate input vector) have no literal form;
+    they render as the string casts Spark SQL parses to the same value."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    if math.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
 
 
 def brute_force_topk(
@@ -99,8 +108,6 @@ def _centroid_literal(centroids: DataFrame):
     call (guide §1.2: driver-side work counts too). ``repr(float)`` is
     the shortest round-tripping decimal, so the parsed doubles are
     bit-identical to the former ``F.lit`` values."""
-    import math
-
     rows = _collect_centroids(centroids)
     if not rows:
         return None

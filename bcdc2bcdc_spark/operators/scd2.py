@@ -217,7 +217,7 @@ class SCD2History:
         buckets = sorted({r["_b"] for r in kb.select("_b").distinct().collect()})
         return (
             hist._read_merged_raw(buckets=buckets, meta=meta)
-            .drop("_bucket", "_digest")
+            .drop("_digest")
             .where(F.col(VALID_TO).isNull())
             .join(F.broadcast(keys.distinct()), list(self.base.key_cols), "left_semi")
         )

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
@@ -55,11 +56,12 @@ class TableReplicator:
     #: the src version dst currently mirrors when no marker exists yet
     #: (1 = the empty/init version)
     initial_version: int = 1
-    #: optional DataFrame→DataFrame rewrite applied to every feed interval
-    #: before it is counted/applied (e.g. cross-instance FK translation —
-    #: the reference rewrites child foreign keys while copying,
-    #: DataCache.py:384-437). Must be deterministic given the same dst
-    #: state, so crash-replay of an interval stays idempotent.
+    #: optional DataFrame→DataFrame rewrite applied to every non-empty
+    #: feed interval before it is counted/applied (e.g. cross-instance FK
+    #: translation — the reference rewrites child foreign keys while
+    #: copying, DataCache.py:384-437). Must be deterministic given the same
+    #: dst state, so crash-replay of an interval stays idempotent, and must
+    #: not create rows: an interval with no changed src bucket skips it.
     transform: object | None = None
 
     def last_synced(self) -> int:
@@ -71,38 +73,34 @@ class TableReplicator:
         coalesced interval — versions in between are skipped over, their
         net effect captured by a single manifest-diff feed. Returns
         ``{"from": a, "to": b, "changes": n}`` (``changes`` is -1 when
-        nothing to do)."""
+        nothing to do).
+
+        The feed executes once, inside dst's staging write; this method
+        launches no Spark job of its own on a lake dst. ``changes`` is an
+        observed count (``DataFrame.observe``) riding that write, read
+        after it. The dst touched-bucket set comes from the src manifest
+        diff (``changed_buckets``), with no job, when the ids carry over:
+        same ``bucket_scheme`` at ``to_seq`` as dst's and no ``transform``
+        (which may rewrite the columns a bucket hashes). Otherwise — src
+        rebucketed in the interval or to a different scheme than dst, or
+        a transform — the upsert discovers them with its own job, as for
+        any caller that does not know them. A bucket whose manifest entry
+        changed but whose feed rows net to nothing (e.g. a src commit that
+        rewrote it unchanged) is rewritten unchanged in dst: the price of
+        not scanning the feed ahead of the write. An interval in which no
+        bucket changed is provably empty: no upsert, no job, ``changes``
+        0. A dst without ``bucket_scheme`` (not a lake table) gets a
+        ``count()`` and a plain ``upsert``."""
         frm = self.last_synced()
         head = int(to_seq) if to_seq is not None else int(self.src.commit_seq())
         if head <= frm:
             return {"from": frm, "to": frm, "changes": -1}
         self.checkpoints.acquire_writer_lock()
         try:
-            feed = self.src.read_changes(frm, head, digest_impl=digest_impl)
-            if self.transform is not None:
-                feed = self.transform(feed)
-            # count BEFORE the marker: a failure here (e.g. src retention
+            # the count precedes the marker: a failure (e.g. src retention
             # expired mid-sync) must precede the commit, and the result
-            # must never misreport a committed sync as an error. The one
-            # counting job ALSO collects the dst touched-bucket set
-            # (bounded by n_buckets), so the upsert skips its own
-            # discovery and the feed plan executes twice total (count +
-            # staging write) instead of three times — without caching
-            # O(changes) rows (guide §1.2).
-            if hasattr(self.dst, "bucket_expr"):
-                row = feed.agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.collect_set(self.dst.bucket_expr()).alias("_b"),
-                ).first()
-                n = int(row["_n"])
-                self.dst.upsert(
-                    feed,
-                    digest_impl=digest_impl,
-                    touched=sorted(int(b) for b in row["_b"]),
-                )
-            else:
-                n = feed.count()
-                self.dst.upsert(feed, digest_impl=digest_impl)
+            # must never misreport a committed sync as an error
+            n = self._apply(frm, head, digest_impl)
             self.checkpoints.commit(
                 head,
                 offset_start=frm,
@@ -114,6 +112,39 @@ class TableReplicator:
         finally:
             self.checkpoints.release_writer_lock()
         return {"from": frm, "to": head, "changes": n}
+
+    def _apply(self, frm: int, head: int, digest_impl: str) -> int:
+        """Upsert the ``frm → head`` feed into dst; returns its row count."""
+        changed = self.src.changed_buckets(frm, head)
+        if changed == []:
+            return 0
+        feed = self.src.read_changes(frm, head, digest_impl=digest_impl)
+        if self.transform is not None:
+            feed = self.transform(feed)
+        if not hasattr(self.dst, "bucket_scheme"):
+            n = feed.count()
+            self.dst.upsert(feed, digest_impl=digest_impl)
+            return n
+        touched = None
+        if (
+            changed is not None
+            and self.transform is None
+            and self.src.bucket_scheme(head) == self.dst.bucket_scheme()
+        ):
+            touched = changed
+        # touched is None or non-empty, so the upsert always runs a job
+        # over the observed feed before the read (which blocks until one has)
+        obs = Observation()
+        feed = feed.observe(obs, F.count(F.lit(1)).alias("n"))
+        self.dst.upsert(feed, digest_impl=digest_impl, touched=touched)
+        # Spark completes an observation with an EMPTY row when AQE pruned
+        # the observed subtree from the final plan, which it does to an
+        # empty shuffle side (an empty feed under the merge's full-outer
+        # join or the discovery aggregate); PySpark's ``get`` cannot
+        # convert that row, and the pruned feed had no rows
+        if obs._jo.getRow().length() == 0:
+            return 0
+        return int(obs.get["n"])
 
     def follow(self, digest_impl: str = "jvm") -> list[dict]:
         """Catch-up loop: one sync per outstanding src version (the

@@ -36,6 +36,14 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
     # Deterministic timestamps across Spark and the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
+    # PySpark 4 wraps every DataFrame/Column/functions call in call-site
+    # capture (walks the Python stack, pushes the origin to the JVM): ~5
+    # extra py4j round trips per call, more than half of all driver↔JVM
+    # traffic when a commit builds its plan. The engine builds its plans
+    # in code, so the capture only enriches error messages; turning it off
+    # halves the py4j commands of a small commit's plan building. Pass it
+    # as "true" through ``extra_conf`` to get Python call sites in errors.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Kept for user overwrite-mode writes; the lake backend itself now
     # commits via immutable generation dirs + an atomic manifest swap and
     # no longer relies on dynamic partition overwrite.

@@ -275,7 +275,7 @@ class SecondaryIndex:
         )
         ents = (
             t._read_merged_raw(buckets=buckets, meta=meta)
-            .drop("_bucket", "_digest")
+            .drop("_digest")
             .join(F.broadcast(probe), ic, "left_semi")
         )
         keys = ents.select(*self.base.key_cols).distinct()

@@ -966,7 +966,10 @@ class HashBucketParquetTable:
         construction — no partition discovery, no schema inference, and a
         fully-deleted table (empty map) reads as empty. ``_bucket`` is
         recomputed from the keys (deterministic), never parsed from paths."""
-        return self._read_raw_from(self._meta(), buckets)
+        meta = self._meta()
+        return self._read_raw_from(meta, buckets).withColumn(
+            "_bucket", self._bucket_of(meta)
+        )
 
     def _delta_file_schema(self, schema: T.StructType | None = None) -> T.StructType:
         """What MOR delta files physically hold: payload + persisted digest
@@ -1058,21 +1061,21 @@ class HashBucketParquetTable:
         digest_impl: str = "jvm",
     ) -> DataFrame:
         """Manifest-resolved read with outstanding MOR deltas FOLDED IN —
-        same output shape as ``_read_raw`` (payload + ``_digest`` +
-        ``_bucket``), so every rewrite path (CoW upsert base, compaction,
-        redigest, rebucket) sees the merged truth. Zero overhead when the
-        requested buckets have no deltas (plain base scan)."""
+        same output shape as ``_read_raw_from`` (payload + ``_digest``), so
+        every rewrite path (CoW upsert base, compaction, redigest, rebucket)
+        sees the merged truth. Zero overhead when the requested buckets
+        have no deltas (plain base scan). Callers that stage the result as
+        a generation add ``_bucket`` themselves (``_bucket_of``); readers
+        never pay for it."""
         if meta is None:
             meta = self._meta()
         schema = T.StructType.fromJson(meta["schema"])
-        n_buckets = self._n_buckets(meta)
         deltas = self._delta_index(meta, buckets)
         base = self._read_raw_from(meta, buckets)
         if not deltas:
             return base
         parts = [
-            base.drop("_bucket")
-            .withColumn("op", F.lit(None).cast("string"))
+            base.withColumn("op", F.lit(None).cast("string"))
             .withColumn("_seq", F.lit(-1).cast("long"))
         ]
         dschema = self._delta_file_schema(schema)
@@ -1091,16 +1094,14 @@ class HashBucketParquetTable:
             # evolution): recompute so the no-op fold compares digests
             # over ONE column set — same rule as the CoW upsert path
             u = with_row_digest(u.drop("_digest"), compare, "_digest", impl=digest_impl)
-        merged = self._merge_versions(u, schema, digest_impl=digest_impl)
-        return merged.withColumn(
-            "_bucket", _bucket_expr(self._bucket_cols_resolved(meta), n_buckets)
-        )
+        return self._merge_versions(u, schema, digest_impl=digest_impl)
 
     def _read_raw_from(
         self, meta: dict, buckets: Sequence[int] | None = None
     ) -> DataFrame:
         """``_read_raw`` against an EXPLICIT manifest (current or a frozen
-        history manifest — time travel shares the code path)."""
+        history manifest — time travel shares the code path), without the
+        ``_bucket`` column: payload + ``_digest``."""
         schema = T.StructType(
             list(T.StructType.fromJson(meta["schema"]).fields)
             + [T.StructField("_digest", T.StringType(), True)]
@@ -1113,16 +1114,11 @@ class HashBucketParquetTable:
         )
         dirs = [self._bucket_dir(int(b), gen) for b, gen in items]
         if not dirs:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*dirs)
-        return df.withColumn(
-            "_bucket",
-            _bucket_expr(self._bucket_cols_resolved(meta), self._n_buckets(meta)),
-        )
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
 
     def read(self) -> DataFrame:
-        return self._read_merged_raw().drop("_bucket", "_digest")
+        return self._read_merged_raw().drop("_digest")
 
     def lookup(self, keys: DataFrame, buckets: Sequence[int] | None = None) -> DataFrame:
         """Point lookup (S5): the current rows for a (small) key set,
@@ -1139,16 +1135,14 @@ class HashBucketParquetTable:
         own discovery job (guide §1/§2: fewer serial driver-side jobs)."""
         meta = self._meta()
         if buckets is None:
-            kb = keys.select(*self.key_cols).withColumn(
-                "_bucket",
-                _bucket_expr(self._bucket_cols_resolved(meta), self._n_buckets(meta)),
-            )
-            buckets = [r["_bucket"] for r in kb.select("_bucket").distinct().collect()]
+            buckets = [
+                r[0] for r in keys.select(self._bucket_of(meta)).distinct().collect()
+            ]
         base = self._read_merged_raw(buckets=sorted(set(buckets)), meta=meta)
         return base.join(
             F.broadcast(keys.select(*self.key_cols).distinct()),
             list(self.key_cols),
-        ).drop("_bucket", "_digest")
+        ).drop("_digest")
 
     #: hash pruning enumerates the cross product of per-bucket-column
     #: candidate value sets; past this many tuples the IN-list is no longer
@@ -1256,7 +1250,7 @@ class HashBucketParquetTable:
         pruned = self.prune_buckets(preds, meta)
         return (
             self._read_merged_raw(buckets=pruned, meta=meta)
-            .drop("_bucket", "_digest")
+            .drop("_digest")
             .filter(compile_predicates(preds))
         )
 
@@ -1278,7 +1272,7 @@ class HashBucketParquetTable:
         hist = self._hist_meta(seq)
         # a version captured mid-MOR folds ITS manifest's delta lists —
         # time travel and current reads share the merge path
-        return self._read_merged_raw(meta=hist).drop("_bucket", "_digest")
+        return self._read_merged_raw(meta=hist).drop("_digest")
 
     def _hist_meta(self, seq: int) -> dict:
         """Load + validate a frozen history manifest: it must exist and its
@@ -1302,7 +1296,12 @@ class HashBucketParquetTable:
         an IDENTICAL entry proves identical content — the feed reads only
         the returned buckets. ``None`` means the bucket scheme itself
         changed (rebucket) and no pruning is possible."""
-        m_from, m_to = self._hist_meta(from_seq), self._hist_meta(to_seq)
+        return self._changed_between(
+            self._hist_meta(from_seq), self._hist_meta(to_seq)
+        )
+
+    def _changed_between(self, m_from: dict, m_to: dict) -> list[int] | None:
+        """``changed_buckets`` over two already-loaded manifests."""
         if self._n_buckets(m_from) != self._n_buckets(m_to):
             return None
         def entry(m: dict, b: str):
@@ -1407,7 +1406,7 @@ class HashBucketParquetTable:
         if from_seq >= to_seq:
             raise ValueError(f"need from_seq < to_seq, got {from_seq} >= {to_seq}")
         m_from, m_to = self._hist_meta(from_seq), self._hist_meta(to_seq)
-        buckets = self.changed_buckets(from_seq, to_seq)
+        buckets = self._changed_between(m_from, m_to)
         schema_to = T.StructType.fromJson(m_to["schema"])
         key_cols = list(self.key_cols)
         payload = [f.name for f in schema_to.fields if f.name not in key_cols]
@@ -1427,10 +1426,10 @@ class HashBucketParquetTable:
             return self.spark.createDataFrame([], empty_feed)
         old = self._read_merged_raw(
             buckets=buckets, meta=m_from, digest_impl=digest_impl
-        ).drop("_bucket")
+        )
         new = self._read_merged_raw(
             buckets=buckets, meta=m_to, digest_impl=digest_impl
-        ).drop("_bucket")
+        )
         cmp_from = m_from.get("compare_cols", list(self.compare_cols))
         cmp_to = m_to.get("compare_cols", list(self.compare_cols))
         # Stored digests are only comparable when BOTH versions' digests
@@ -1504,7 +1503,17 @@ class HashBucketParquetTable:
         """The table's bucket assignment expression — callers that already
         scan the change batch (lineage) can collect touched buckets in the
         same job and pass them to ``upsert(touched=...)``."""
-        meta = self._meta() if self.exists() else {}
+        return self._bucket_of(self._meta() if self.exists() else {})
+
+    def bucket_scheme(self, seq: int | None = None) -> tuple[int, tuple[str, ...]]:
+        """``(n_buckets, bucket_cols)`` of the live table, or of committed
+        version ``seq``. Two tables with equal schemes put every key in the
+        same bucket id, so one's bucket ids are valid ids of the other."""
+        meta = self._meta() if seq is None else self._hist_meta(seq)
+        return self._n_buckets(meta), tuple(self._bucket_cols_resolved(meta))
+
+    def _bucket_of(self, meta: dict) -> F.Column:
+        """The bucket assignment expression under ``meta``'s scheme."""
         return _bucket_expr(self._bucket_cols_resolved(meta), self._n_buckets(meta))
 
     def upsert(
@@ -1570,9 +1579,7 @@ class HashBucketParquetTable:
                 "suppression against the stored _digest)"
             )
         digests_current = meta.get("digest_cols", persisted) == list(compare_cols)
-        n_buckets = self._n_buckets(meta)
-        bcols = self._bucket_cols_resolved(meta)
-        changes_b = changes.withColumn("_bucket", _bucket_expr(bcols, n_buckets))
+        bucket = self._bucket_of(meta)
         if touched is None:
             # Touched-bucket set: bounded by n_buckets (collect is
             # O(n_buckets)). This job executes the caller's change plan
@@ -1582,19 +1589,20 @@ class HashBucketParquetTable:
             # join-view refresh all do); an unconditional persist here was
             # measured to ADD ~0.2 s to the 1-row commit floor while
             # saving nothing for those callers.
-            touched = [
-                r["_bucket"] for r in changes_b.select("_bucket").distinct().collect()
-            ]
+            touched = [r[0] for r in changes.select(bucket).distinct().collect()]
         touched = sorted(set(touched))
         if not touched:
             return  # empty change set: no staging job, no orphan dir
         if self._write_mode_resolved(meta) == "mor":
             self._upsert_mor(
-                changes_b, list(compare_cols), digest_impl, base_seq
+                changes.withColumn("_bucket", bucket),
+                list(compare_cols),
+                digest_impl,
+                base_seq,
             )
             return
         merged = self._cow_merged_plan(
-            changes_b, list(compare_cols), digest_impl, meta, touched,
+            changes, list(compare_cols), digest_impl, meta, touched, bucket,
             digests_current=digests_current,
         )
         # No caching of the merged plan: it executes exactly once (the
@@ -1731,23 +1739,26 @@ class HashBucketParquetTable:
 
     def _cow_merged_plan(
         self,
-        changes_b: DataFrame,
+        changes: DataFrame,
         compare_cols: list[str],
         digest_impl: str,
         meta: dict,
         touched: Sequence[int],
+        bucket: F.Column,
         digests_current: bool | None = None,
     ) -> DataFrame:
         """The CoW merge plan: manifest-resolved read of exactly the
         touched buckets' dirs — MERGED (any outstanding MOR deltas fold in
         here and their lists are cleared by the commit that stages this
         plan's output: CoW rewrite supersedes them) — with the change set
-        MERGEd on top. Shared by ``upsert`` and ``stage_upsert``."""
+        MERGEd on top, plus ``bucket`` (``meta``'s bucket expression, built
+        once by the caller) as the ``_bucket`` the staging write partitions
+        by. Shared by ``upsert`` and ``stage_upsert``."""
         if digests_current is None:
             digests_current = meta.get("digest_cols", compare_cols) == compare_cols
         base = self._read_merged_raw(
             buckets=touched, meta=meta, digest_impl=digest_impl
-        ).drop("_bucket")
+        )
         # _read_merged_raw already recomputed digests over the current
         # compare set when deltas were outstanding (its lag branch) —
         # don't pay a second full digest pass in that case
@@ -1763,7 +1774,7 @@ class HashBucketParquetTable:
         # digest the (small) change set once; the base side reads its
         # persisted digest — no recompute over touched rows
         changes_d = with_row_digest(
-            changes_b.drop("_bucket"), list(compare_cols), "_cdigest", impl=digest_impl
+            changes, list(compare_cols), "_cdigest", impl=digest_impl
         )
         return apply_changes(
             base,
@@ -1774,10 +1785,7 @@ class HashBucketParquetTable:
             base_digest_col="_digest",
             changes_digest_col="_cdigest",
             out_digest_col="_digest",
-        ).withColumn(
-            "_bucket",
-            _bucket_expr(self._bucket_cols_resolved(meta), self._n_buckets(meta)),
-        )
+        ).withColumn("_bucket", bucket)
 
     def _upsert_mor(
         self,
@@ -1852,20 +1860,18 @@ class HashBucketParquetTable:
         meta = self._meta()
         base_seq = int(meta.get("commit_seq", 0))
         compare_cols = list(meta.get("compare_cols", self.compare_cols))
-        n_buckets = self._n_buckets(meta)
-        bcols = self._bucket_cols_resolved(meta)
-        changes_b = changes.withColumn("_bucket", _bucket_expr(bcols, n_buckets))
-        touched = sorted(
-            {r["_bucket"] for r in changes_b.select("_bucket").distinct().collect()}
-        )
+        bucket = self._bucket_of(meta)
+        touched = sorted({r[0] for r in changes.select(bucket).distinct().collect()})
         mode = self._write_mode_resolved(meta)
         if not touched:
             return StagedUpsert(self, None, set(), [], base_seq, meta, mode)
         if mode == "mor":
-            frame = self._mor_delta_frame(changes_b, compare_cols, digest_impl)
+            frame = self._mor_delta_frame(
+                changes.withColumn("_bucket", bucket), compare_cols, digest_impl
+            )
         else:
             frame = self._cow_merged_plan(
-                changes_b, compare_cols, digest_impl, meta, touched
+                changes, compare_cols, digest_impl, meta, touched, bucket
             )
         gen, written = self._write_generation(frame)
         return StagedUpsert(self, gen, written, touched, base_seq, meta, mode)
@@ -2080,7 +2086,9 @@ class HashBucketParquetTable:
         # optimistic-concurrency guarded like any commit: a concurrent
         # upsert wins and this maintenance rewrite aborts, never the reverse
         self._commit_generation(
-            self._read_merged_raw(buckets=crowded, meta=meta),
+            self._read_merged_raw(buckets=crowded, meta=meta).withColumn(
+                "_bucket", self._bucket_of(meta)
+            ),
             crowded,
             expected_seq=base_seq,
         )
@@ -2097,15 +2105,20 @@ class HashBucketParquetTable:
         Plan-side only — column expressions, no data rewrite."""
         from bcdc2bcdc_spark.evolution import reconcile_to_schema
 
+        fields = changes.schema.fields
         incoming = T.StructType(
-            [f for f in changes.schema.fields if f.name not in self._CONTROL_COLS]
+            [f for f in fields if f.name not in self._CONTROL_COLS]
         )
         self.evolve(incoming)
         target = self.data_schema()
         full = T.StructType(
             list(target.fields)
-            + [f for f in changes.schema.fields if f.name in self._CONTROL_COLS]
+            + [f for f in fields if f.name in self._CONTROL_COLS]
         )
+        if [(f.name, f.dataType) for f in fields] == [
+            (f.name, f.dataType) for f in full.fields
+        ]:
+            return changes  # already the target shape: the projection is identity
         return reconcile_to_schema(changes, full)
 
     def redigest(self, digest_impl: str = "jvm") -> None:
@@ -2126,7 +2139,7 @@ class HashBucketParquetTable:
             compare,
             "_digest",
             impl=digest_impl,
-        )
+        ).withColumn("_bucket", self._bucket_of(meta))
         # buckets live in the base map OR delta-only (MOR bucket never
         # yet folded) — both get a fresh base generation here
         touched = sorted(
@@ -2165,7 +2178,9 @@ class HashBucketParquetTable:
         # upsert wins and this maintenance rewrite aborts, never the reverse
         # (merged read: compacting a bucket also folds its MOR deltas)
         self._commit_generation(
-            self._read_merged_raw(buckets=crowded, meta=meta),
+            self._read_merged_raw(buckets=crowded, meta=meta).withColumn(
+                "_bucket", self._bucket_of(meta)
+            ),
             crowded,
             expected_seq=base_seq,
         )
@@ -2195,7 +2210,7 @@ class HashBucketParquetTable:
             raise ValueError(f"n_buckets must be ≥ 1, got {new_n_buckets}")
         if new_n_buckets == self._n_buckets(meta):
             return
-        rewritten = self._read_merged_raw(meta=meta).drop("_bucket").withColumn(
+        rewritten = self._read_merged_raw(meta=meta).withColumn(
             "_bucket", _bucket_expr(self._bucket_cols_resolved(meta), new_n_buckets)
         )
         self._commit_generation(
@@ -2271,7 +2286,7 @@ class StagedUpsert:
         self._check_open("read")
         return self.table._read_merged_raw(
             buckets=buckets, meta=self.candidate_meta()
-        ).drop("_bucket", "_digest")
+        ).drop("_digest")
 
     def publish(self) -> None:
         """The atomic commit: metadata-only (the data job already ran at

@@ -261,3 +261,25 @@ def test_rolling_fingerprint_order_sensitive(spark):
     assert rows[1][0] == rows[3][0]          # identical docs agree
     assert rows[1][0] != rows[2][0]          # permutation changes rolling fp
     assert rows[1][1] != rows[2][1]          # (set fp differs too: norm keeps order)
+
+
+def test_centroid_literal_keeps_non_finite_values(spark):
+    """A degenerate centroid (NaN / ±Infinity components) still renders a
+    literal Spark SQL parses, with the same values the engine would hold."""
+    import math
+
+    from pyspark.sql import Row
+
+    from bcdc2bcdc_spark.operators.ann import _centroid_literal
+
+    inf = float("inf")
+    lit = _centroid_literal(
+        [
+            Row(cell_id=0, centroid=[1.5, float("nan")]),
+            Row(cell_id=1, centroid=[inf, -inf]),
+        ]
+    )
+    got = spark.range(1).select(lit.alias("c")).first()["c"]
+    assert got[0]["centroid"][0] == 1.5 and math.isnan(got[0]["centroid"][1])
+    assert math.isnan(got[0]["norm"])
+    assert got[1]["centroid"] == [inf, -inf] and got[1]["norm"] == inf

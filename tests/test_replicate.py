@@ -131,6 +131,147 @@ def test_replication_propagates_schema_evolution(spark, tmp_path, src_table):
 
 
 # ---------------------------------------------------------------------------
+# job budget and observed change count
+# ---------------------------------------------------------------------------
+
+_PAYLOAD = ["repo", "path", "lang", "content"]
+
+
+def _one_change(src, content):
+    src.upsert(
+        src.read()
+        .orderBy("repo", "path")
+        .limit(3)
+        .withColumn("op", F.lit("UPDATE"))
+        .withColumn("content", F.lit(content))
+    )
+
+
+def _synced(rep):
+    """sync() result checked against the feed's own row count."""
+    frm, head = rep.last_synced(), rep.src.commit_seq()
+    want = rep.src.read_changes(frm, head).count()
+    res = rep.sync()
+    assert res["to"] == head
+    assert res["changes"] == want
+    return res
+
+
+def test_aligned_sync_launches_no_job_of_its_own(spark, tmp_path, src_table, monkeypatch):
+    """On a bucket-aligned CoW dst every job of a sync is dst's upsert: the
+    touched buckets come from the src manifest diff, and the change count
+    is observed on the staging write."""
+    import uuid
+
+    sc = spark.sparkContext
+    rep = _mk_replicator(spark, tmp_path, src_table, "budget")
+    sync_group, upsert_group = f"sync-{uuid.uuid4().hex}", f"upsert-{uuid.uuid4().hex}"
+    seen = {}
+    orig = rep.dst.upsert
+
+    def upsert(feed, **kw):
+        seen["touched"] = kw.get("touched")
+        sc.setJobGroup(upsert_group, "upsert")
+        try:
+            return orig(feed, **kw)
+        finally:
+            sc.setJobGroup(sync_group, "sync")
+
+    monkeypatch.setattr(rep.dst, "upsert", upsert)
+    want = src_table.read_changes(1, src_table.commit_seq()).count()
+    sc.setJobGroup(sync_group, "sync")
+    try:
+        res = rep.sync()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(sync_group) == []
+    assert tracker.getJobIdsForGroup(upsert_group)
+    assert seen["touched"] == src_table.changed_buckets(1, src_table.commit_seq())
+    assert res["changes"] == want > 0
+    assert _rows(rep.dst.read().select(*_PAYLOAD)) == _rows(
+        src_table.read().select(*_PAYLOAD)
+    )
+
+
+def test_sync_counts_equal_feed_rows_cow_and_mor(spark, tmp_path, src_table):
+    cow = _mk_replicator(spark, tmp_path, src_table, "cow")
+    mor = _mk_replicator(spark, tmp_path, src_table, "mor")
+    mor.dst.set_write_mode("mor")
+    for rep in (cow, mor):
+        _synced(rep)
+    _one_change(src_table, "second")
+    for rep in (cow, mor):
+        _synced(rep)
+        assert _rows(rep.dst.read().select(*_PAYLOAD)) == _rows(
+            src_table.read().select(*_PAYLOAD)
+        )
+
+
+def test_sync_counts_no_change_interval(spark, tmp_path, src_table):
+    """A commit that changes no bucket (a metadata flip) syncs with zero
+    changes and no dst commit; a commit that rewrites a bucket unchanged
+    syncs zero changes too."""
+    rep = _mk_replicator(spark, tmp_path, src_table, "quiet")
+    _synced(rep)
+    dst_seq = rep.dst.commit_seq()
+    src_table.set_stats_cols(["lang"])
+    assert src_table.changed_buckets(rep.last_synced(), src_table.commit_seq()) == []
+    assert _synced(rep)["changes"] == 0
+    assert rep.dst.commit_seq() == dst_seq
+    src_table.upsert(
+        src_table.read().orderBy("repo", "path").limit(2).withColumn("op", F.lit("UPDATE"))
+    )
+    assert src_table.changed_buckets(rep.last_synced(), src_table.commit_seq())
+    assert _synced(rep)["changes"] == 0
+    assert _rows(rep.dst.read().select(*_PAYLOAD)) == _rows(
+        src_table.read().select(*_PAYLOAD)
+    )
+
+
+def test_sync_counts_on_bucket_scheme_mismatch(spark, tmp_path, src_table):
+    """src rebucketed away from dst's n_buckets: the src bucket ids are not
+    dst's, so the upsert discovers the touched set itself."""
+    rep = _mk_replicator(spark, tmp_path, src_table, "rebucketed")
+    _synced(rep)
+    src_table.rebucket(4)
+    # the interval spans the rebucket: no manifest diff is possible
+    assert src_table.changed_buckets(rep.last_synced(), src_table.commit_seq()) is None
+    _synced(rep)
+    _one_change(src_table, "after-rebucket")
+    assert src_table.bucket_scheme() != rep.dst.bucket_scheme()
+    assert _synced(rep)["changes"] == 3
+    assert _rows(rep.dst.read().select(*_PAYLOAD)) == _rows(
+        src_table.read().select(*_PAYLOAD)
+    )
+
+
+def test_sync_counts_through_key_rewriting_transform(spark, tmp_path, src_table):
+    """A transform may rewrite the columns a bucket hashes (here: the repo
+    key), so src bucket ids do not carry over and the upsert discovers the
+    touched set itself."""
+
+    def mirror(feed):
+        return feed.withColumn("repo", F.concat(F.col("repo"), F.lit("-mirror")))
+
+    dst = HashBucketParquetTable(spark, str(tmp_path / "mirror"), n_buckets=8)
+    dst.init(spark.createDataFrame([], REPOS_SCHEMA))
+    rep = TableReplicator(
+        src=src_table,
+        dst=dst,
+        checkpoints=CheckpointStore(str(tmp_path / "mirror_ckpt")),
+        transform=mirror,
+    )
+    _synced(rep)
+    _one_change(src_table, "mirrored")
+    assert _synced(rep)["changes"] == 3
+    assert _rows(dst.read().select(*_PAYLOAD)) == _rows(
+        mirror(src_table.read()).select(*_PAYLOAD)
+    )
+
+
+# ---------------------------------------------------------------------------
 # multi-table feed replication (dependency-ordered, FK-remapped)
 # ---------------------------------------------------------------------------
 

@@ -177,3 +177,24 @@ def test_restore_rolls_back_schema_evolution(spark, tmp_path):
     t.upsert(evolved)  # re-evolves cleanly after the rollback
     assert "stars" in t.read().columns
     assert t.read().where("path = 's.py'").count() == 1
+
+
+@pytest.mark.parametrize("query", ["q_restore_rollback", "q_join_view_incremental"])
+def test_lifecycle_queries_touch_every_bucket_of_the_table(spark, monkeypatch, query):
+    """The two lifecycle queries pass ``touched`` for a delta spanning the
+    whole table; the superset must follow the table's bucket count, not a
+    literal, or rows of buckets outside it are staged outside the declared
+    set and the commit aborts."""
+    from bcdc2bcdc_spark import driver_queries
+    from bcdc2bcdc_spark.sources import lake
+    from tests.test_dataops import SF as sf
+
+    run = getattr(driver_queries, query)
+    want = sorted(map(tuple, run(spark, sf).collect()))
+
+    def wider(*args, **kwargs):
+        kwargs["n_buckets"] = 2 * kwargs.get("n_buckets", 16)
+        return HashBucketParquetTable(*args, **kwargs)
+
+    monkeypatch.setattr(lake, "HashBucketParquetTable", wider)
+    assert sorted(map(tuple, run(spark, sf).collect())) == want
