@@ -229,14 +229,15 @@ class IncrementalJoinView:
                 .select(*lk)
             )
         if rcur > rfrom:
-            # no pre-``distinct`` on the probe keys: the semi-join dedups
-            # inherently, so the extra shuffle bought nothing (guide §2.4)
+            # no ``distinct`` on the probe keys: the feed has one row per
+            # right key whose state changed, and ``on`` == right.key_cols,
+            # so the projection is already duplicate-free
             rkeys = self.right.read_changes(
                 rfrom, rcur, digest_impl=digest_impl
             ).select(*self.on)
             if self.fk_index is not None:
                 self.fk_index.refresh(digest_impl=digest_impl)
-                parts.append(self.fk_index.lookup(rkeys.distinct()).select(*lk))
+                parts.append(self.fk_index.lookup(rkeys).select(*lk))
             else:
                 parts.append(
                     self.left.read()

@@ -178,6 +178,27 @@ class CheckpointStore:
         )
 
 
+def _lineage_aggregate(
+    events: DataFrame, epoch: Column, bucket_expr: Column | None
+) -> DataFrame:
+    """The one lineage aggregate both public forms share, grouped by
+    (``epoch``, input partition)."""
+    aggs = [
+        F.count(F.lit(1)).alias("events_applied"),
+        F.sum(F.when(F.col("op") != OP_DELETE, 1).otherwise(0)).alias("upserts"),
+        F.sum(F.when(F.col("op") == OP_DELETE, 1).otherwise(0)).alias("deletes"),
+        F.sum(F.coalesce(F.octet_length("content"), F.lit(0))).cast("long").alias("bytes"),
+        F.min("event_seq").alias("_offset_lo"),
+        F.max("event_seq").alias("_offset_hi"),
+    ]
+    if bucket_expr is not None:
+        aggs.append(F.collect_set(bucket_expr).alias("_buckets"))
+    return events.groupBy(
+        epoch.cast("long").alias("epoch"),
+        F.spark_partition_id().alias("partition_id"),
+    ).agg(*aggs)
+
+
 def lineage_metrics(batch: DataFrame, epoch: int, bucket_expr: Column | None = None) -> DataFrame:
     """Per-input-partition metrics for one epoch's raw event batch:
     (epoch, partition_id, events_applied, upserts, deletes, bytes).
@@ -192,20 +213,7 @@ def lineage_metrics(batch: DataFrame, epoch: int, bucket_expr: Column | None = N
     never scans the batch for bookkeeping twice. The ``_``-prefixed
     columns are stripped before persisting.
     """
-    aggs = [
-        F.count(F.lit(1)).alias("events_applied"),
-        F.sum(F.when(F.col("op") != OP_DELETE, 1).otherwise(0)).alias("upserts"),
-        F.sum(F.when(F.col("op") == OP_DELETE, 1).otherwise(0)).alias("deletes"),
-        F.sum(F.coalesce(F.octet_length("content"), F.lit(0))).cast("long").alias("bytes"),
-        F.min("event_seq").alias("_offset_lo"),
-        F.max("event_seq").alias("_offset_hi"),
-    ]
-    if bucket_expr is not None:
-        aggs.append(F.collect_set(bucket_expr).alias("_buckets"))
-    return batch.groupBy(
-        F.lit(epoch).cast("long").alias("epoch"),
-        F.spark_partition_id().alias("partition_id"),
-    ).agg(*aggs)
+    return _lineage_aggregate(batch, F.lit(epoch), bucket_expr)
 
 
 def lineage_metrics_epochs(
@@ -217,17 +225,4 @@ def lineage_metrics_epochs(
     separate distinct-epochs probe (guide §1.2: fewer serial passes).
     Row set per epoch is identical to the per-epoch form — an epoch
     filter does not change ``spark_partition_id`` assignments."""
-    aggs = [
-        F.count(F.lit(1)).alias("events_applied"),
-        F.sum(F.when(F.col("op") != OP_DELETE, 1).otherwise(0)).alias("upserts"),
-        F.sum(F.when(F.col("op") == OP_DELETE, 1).otherwise(0)).alias("deletes"),
-        F.sum(F.coalesce(F.octet_length("content"), F.lit(0))).cast("long").alias("bytes"),
-        F.min("event_seq").alias("_offset_lo"),
-        F.max("event_seq").alias("_offset_hi"),
-    ]
-    if bucket_expr is not None:
-        aggs.append(F.collect_set(bucket_expr).alias("_buckets"))
-    return events.groupBy(
-        F.col(epoch_col).cast("long").alias("epoch"),
-        F.spark_partition_id().alias("partition_id"),
-    ).agg(*aggs)
+    return _lineage_aggregate(events, F.col(epoch_col), bucket_expr)

@@ -661,7 +661,6 @@ class LakeSnapshotReader(DataSourceReader):
         compare = meta.get("compare_cols", [])
         self.redigest = compare if meta.get("digest_cols", compare) != compare else None
         self._meta = meta  # frozen manifest — pushFilters prunes against it
-        self._path = path  # sidecar-mode bounds live beside it (_stats/)
         self._buckets = sorted(
             set(meta.get("buckets", {})) | set(meta.get("deltas", {})), key=int
         )
@@ -685,7 +684,6 @@ class LakeSnapshotReader(DataSourceReader):
         ``lookup`` when bucket-column pruning matters."""
         from bcdc2bcdc_spark.sources.lake import (
             _bounds_exclude_bucket,
-            _stats_lookup,
             _usable_bounds_preds,
         )
 
@@ -701,15 +699,10 @@ class LakeSnapshotReader(DataSourceReader):
             preds.append((attr[0], op, val))
         usable = _usable_bounds_preds(self._meta, preds)
         if usable:
-            # sidecar-mode bounds are plain JSON files beside the table —
-            # readable from this planning worker with the same reader the
-            # frozen manifest came through; one lazy load per live
-            # generation, cached across buckets by the lookup
-            stats_get = _stats_lookup(self._meta, self._path, _read_json)
             keep = [
                 (b, s)
                 for b, s in zip(self._buckets, self.specs)
-                if not _bounds_exclude_bucket(self._meta, int(b), usable, stats_get)
+                if not _bounds_exclude_bucket(self._meta, int(b), usable)
             ]
             self._buckets = [b for b, _ in keep]
             self.specs = [s for _, s in keep]

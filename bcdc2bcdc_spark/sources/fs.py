@@ -1,11 +1,11 @@
 """Filesystem abstraction for the lake backend's driver-side bookkeeping.
 
 HashBucketParquetTable needs a handful of tiny metadata operations outside
-Spark: list a partition dir, remove a dir/file, existence checks, and
+Spark: list a partition dir, remove a dir, existence checks, and
 read/atomic-write of the table metadata JSON. Routing them through this
 interface keeps the
 backend free of direct POSIX calls, so an object-store deployment (S3/GCS)
-only implements these six methods (list → prefix listing, remove → batch
+only implements these few methods (list → prefix listing, remove → batch
 delete, atomic write → put-then-rename or conditional put) — the Spark
 read/write paths already go through Hadoop FileSystem and need nothing.
 """
@@ -51,12 +51,6 @@ class LocalFS:
     def remove_dir(self, dir_path: str) -> None:
         if os.path.isdir(dir_path):
             shutil.rmtree(dir_path)
-
-    def remove_file(self, path: str) -> None:
-        try:
-            os.remove(path)
-        except FileNotFoundError:
-            pass
 
     def dir_age_s(self, dir_path: str) -> float:
         """Seconds since the newest modification anywhere in the

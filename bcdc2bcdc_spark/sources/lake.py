@@ -218,81 +218,30 @@ def _usable_bounds_preds(meta: dict, preds: Sequence[tuple]) -> list[tuple]:
     can act on — pure metadata, no Spark, usable from the Python data
     source planning worker (sources/datasource.py pushFilters) as well as
     the driver."""
-    has_stats = bool(meta.get("stats")) or (
-        meta.get("stats_storage") == "sidecar" and meta.get("stats_cols")
-    )
-    if not has_stats:
+    if not meta.get("stats"):
         return []
     scols = set(meta.get("stats_cols", []))
     return [p for p in preds if p[0] in scols]
 
 
-def _stats_lookup(meta: dict, table_path: str | None = None, read_json=None):
-    """Per-generation bounds resolver: ``get(gen) -> {bucket: {col: entry}}``.
-
-    Inline storage keeps bounds in the manifest itself; ``stats_storage:
-    "sidecar"`` shards them into immutable per-generation
-    ``_stats/<gen>.json`` files (the Iceberg manifest-file analog measured
-    in PLANS.md "manifest scaling curve") so the driver-side manifest stays
-    O(buckets × MOR depth) regardless of stats columns. This resolver hides
-    the difference from the pruning paths: the manifest's inline dict wins
-    (covers inline tables plus pre-flip entries on a flipped table), then a
-    sidecar table lazily loads each generation's file at most once per
-    prune pass (``cache``). A missing or unreadable sidecar resolves to
-    ``{}`` — the bucket stays readable, pruning is never load-bearing.
-    Pure metadata: usable from the Python data source planning worker
-    (pass its own JSON reader) as well as the driver (``fs.read_json``)."""
-    inline = meta.get("stats", {})
-    use_sidecar = (
-        meta.get("stats_storage") == "sidecar"
-        and table_path is not None
-        and read_json is not None
-    )
-    cache: dict = {}
-
-    def get(gen: str) -> dict:
-        if gen in inline:
-            return inline[gen]
-        if not use_sidecar:
-            return {}
-        if gen not in cache:
-            try:
-                cache[gen] = read_json(
-                    os.path.join(table_path, "_stats", f"{gen}.json")
-                )
-            except Exception:
-                cache[gen] = {}
-        return cache[gen]
-
-    return get
-
-
-def _bounds_exclude_bucket(
-    meta: dict, b: int, usable: Sequence[tuple], stats_get=None
-) -> bool:
+def _bounds_exclude_bucket(meta: dict, b: int, usable: Sequence[tuple]) -> bool:
     """True iff the manifest PROVES bucket ``b`` holds no matching row: for
     some predicate triple, EVERY generation contributing rows to the bucket
     (base + all outstanding MOR deltas) has a bounds entry excluding it.
     Any missing entry keeps the bucket — correct after schema evolution or
     a ``set_stats_cols`` flip. Sound under MOR merge: a merged row's
     payload always comes from SOME raw row of the bucket, so if no raw row
-    can match, no merged row can.
-
-    ``stats_get`` resolves a generation's bounds (``_stats_lookup``);
-    defaults to the manifest's inline dict so callers without sidecar
-    access stay correct (sidecar-annotated generations simply never
-    prune for them)."""
+    can match, no merged row can."""
     if not usable:
         return False
-    if stats_get is None:
-        stats_get = _stats_lookup(meta)
+    stats = meta.get("stats", {})
     gens = []
     if str(b) in meta.get("buckets", {}):
         gens.append(meta["buckets"][str(b)])
     gens += [e["gen"] for e in meta.get("deltas", {}).get(str(b), [])]
     return any(
         all(
-            _stats_entry_excludes(stats_get(g).get(str(b), {}).get(col), op, val)
+            _stats_entry_excludes(stats.get(g, {}).get(str(b), {}).get(col), op, val)
             for g in gens
         )
         for col, op, val in usable
@@ -396,7 +345,10 @@ class HashBucketParquetTable:
     #: generations, whose bounds cover only that commit's change set.
     #: Equality/IN predicates on the bucket columns themselves are pruned
     #: EXACTLY by hashing instead (see ``prune_buckets``) and need no
-    #: stats. Empty/None = keep no stats (zero write-path cost).
+    #: stats. Empty/None = keep no stats (zero write-path cost). The
+    #: manifest grows O(live generations × buckets × stats_cols): ~25 MB /
+    #: ~2 s of driver JSON per commit at the measured 8192×8×4 worst case
+    #: (PLANS.md "manifest scaling curve").
     stats_cols: tuple[str, ...] | None = None
     #: columns each generation's files are SORTED by within their bucket
     #: (Delta ``OPTIMIZE ZORDER BY`` / Iceberg sort-order analog, single
@@ -428,23 +380,6 @@ class HashBucketParquetTable:
     #: Persisted like cluster_cols; flip with ``set_cluster_strategy``.
     #: Layout-only: no read path changes either way.
     cluster_strategy: str = "lexicographic"
-    #: WHERE per-generation column bounds live:
-    #: * "inline" (default) — in the manifest itself. Zero extra files;
-    #:   the manifest grows O(live generations × buckets × stats_cols)
-    #:   (~25 MB / ~2 s of driver JSON per commit at the measured
-    #:   8192×8×4 worst case — PLANS.md "manifest scaling curve").
-    #: * "sidecar" — immutable ``_stats/<gen>.json`` per generation (the
-    #:   Iceberg manifest-file analog): the hot-path manifest stays
-    #:   O(buckets × MOR depth) regardless of stats columns; pruning
-    #:   paths load only the live generations' sidecars, lazily, cached
-    #:   per prune pass. Written with the generation's data job (before
-    #:   any reference exists), swept by GC with the generation dir.
-    #: Persisted like stats_cols; flip with ``set_stats_storage``
-    #: (affects generations written after the flip; bounds already
-    #: written stay where they are and keep pruning — except sidecar
-    #: bounds after a sidecar→inline flip, which stop being consulted:
-    #: those generations simply stop pruning, never misread).
-    stats_storage: str = "inline"
     #: per-bucket column bounds computed for generations this handle wrote
     #: but has not yet committed (WAP stagings park here until publish).
     _pending_gen_stats: dict = field(
@@ -506,7 +441,6 @@ class HashBucketParquetTable:
             "stats_cols": list(self.stats_cols or ()),
             "cluster_cols": list(self.cluster_cols or ()),
             "cluster_strategy": self._validated_strategy(self.cluster_strategy),
-            "stats_storage": self._validated_stats_storage(self.stats_storage),
             "commit_seq": 1,
         }
         if gen in self._pending_gen_stats:
@@ -563,15 +497,7 @@ class HashBucketParquetTable:
         if written:
             stats = self._collect_gen_stats(out)
             if stats:
-                if self._stats_storage_resolved() == "sidecar":
-                    # immutable per-generation sidecar, written with the
-                    # data job (no reference to it exists yet — a crashed
-                    # or abandoned staging's sidecar is swept with the
-                    # generation dir); the commit itself stays a
-                    # constant-size manifest swap
-                    self.fs.write_json_atomic(self._sidecar_path(gen), stats)
-                else:
-                    self._pending_gen_stats[gen] = stats
+                self._pending_gen_stats[gen] = stats
         return gen, written
 
     def _zorder_sort_col(self, df: DataFrame, cols: Sequence[str]) -> F.Column:
@@ -777,44 +703,6 @@ class HashBucketParquetTable:
             default="lexicographic",
         )
 
-    @staticmethod
-    def _validated_stats_storage(mode: str) -> str:
-        if mode not in ("inline", "sidecar"):
-            raise ValueError(
-                f"stats_storage must be 'inline' or 'sidecar', got {mode!r}"
-            )
-        return mode
-
-    def _stats_storage_resolved(self, meta: dict | None = None) -> str:
-        """Same resolution contract as ``_stats_cols_resolved`` (persisted
-        wins, ctor seeds init, no ctor fallback once the table exists)."""
-        if meta is None:
-            if getattr(self, "_initializing", False) or not self.exists():
-                return self._validated_stats_storage(self.stats_storage)
-            meta = self._meta()
-        return meta.get("stats_storage", "inline")
-
-    def set_stats_storage(self, mode: str) -> None:
-        """Flip WHERE future generations' bounds are stored — a real
-        commit, same contract as ``set_stats_cols``. Bounds already
-        written stay put: inline entries keep pruning in either mode;
-        sidecar files keep pruning while the mode is "sidecar" and are
-        merely ignored (conservative, never misread) after a flip back
-        to "inline"."""
-        self._commit_meta_flip(
-            "stats_storage",
-            self._validated_stats_storage(mode),
-            default="inline",
-        )
-
-    def _stats_get(self, meta: dict):
-        """Driver-side bounds resolver for one prune pass (see
-        ``_stats_lookup``)."""
-        return _stats_lookup(meta, self.path, self.fs.read_json)
-
-    def _sidecar_path(self, gen: str) -> str:
-        return os.path.join(self.path, "_stats", f"{gen}.json")
-
     def _sweep_unreferenced_generations(
         self, expired_now: Sequence[str] = ()
     ) -> None:
@@ -844,16 +732,6 @@ class HashBucketParquetTable:
             if d not in expired_set and self.fs.dir_age_s(full) < self.staging_grace_s:
                 continue
             self.fs.remove_dir(full)
-            self.fs.remove_file(self._sidecar_path(d))
-        # orphan sidecars: a stats file whose generation dir is already
-        # gone (crash between the two removals, or an abandon() that
-        # predates the sidecar cleanup) can never prune again — the data
-        # job always creates the dir before the sidecar, so dir-absent
-        # means dead, not in-flight
-        live_dirs = self.fs.list_subdirs(self.data_path)
-        for f in self.fs.list_files(os.path.join(self.path, "_stats"), ".json"):
-            if f[: -len(".json")] not in live_dirs:
-                self.fs.remove_file(os.path.join(self.path, "_stats", f))
 
     @staticmethod
     def _referenced_gens(meta: dict) -> set[str]:
@@ -1002,12 +880,7 @@ class HashBucketParquetTable:
             key=lambda t: t[1],
         )
 
-    def _merge_versions(
-        self,
-        union_df: DataFrame,
-        schema: T.StructType,
-        digest_impl: str = "jvm",
-    ) -> DataFrame:
+    def _merge_versions(self, union_df: DataFrame, schema: T.StructType) -> DataFrame:
         """Fold base + delta versions per key into the final row — MERGE
         semantics resolved AT READ TIME. Per key: versions sorted by commit
         seq, then left-folded with exactly apply_changes' branch rules
@@ -1094,7 +967,7 @@ class HashBucketParquetTable:
             # evolution): recompute so the no-op fold compares digests
             # over ONE column set — same rule as the CoW upsert path
             u = with_row_digest(u.drop("_digest"), compare, "_digest", impl=digest_impl)
-        return self._merge_versions(u, schema, digest_impl=digest_impl)
+        return self._merge_versions(u, schema)
 
     def _read_raw_from(
         self, meta: dict, buckets: Sequence[int] | None = None
@@ -1226,12 +1099,11 @@ class HashBucketParquetTable:
         usable = _usable_bounds_preds(meta, preds)
         if hashed is None and not usable:
             return None
-        stats_get = self._stats_get(meta)
         keep = []
         for b in _live_buckets(meta):
             if hashed is not None and b not in hashed:
                 continue
-            if not _bounds_exclude_bucket(meta, b, usable, stats_get):
+            if not _bounds_exclude_bucket(meta, b, usable):
                 keep.append(b)
         return keep
 
@@ -2340,7 +2212,7 @@ class StagedUpsert:
             self.table.fs.remove_dir(
                 os.path.join(self.table.data_path, self.gen)
             )
-            self.table.fs.remove_file(self.table._sidecar_path(self.gen))
+            self.table._pending_gen_stats.pop(self.gen, None)
         self.done = "abandoned"
 
     def _check_open(self, action: str) -> None:

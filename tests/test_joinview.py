@@ -172,6 +172,28 @@ def test_crash_replay_idempotent(spark, tables, tmp_path):
     _assert_parity(v, tables, "inner")
 
 
+def test_right_feed_probe_keys_are_distinct(spark, tables, tmp_path):
+    """The right-driven probe broadcasts the feed projected onto ``on``
+    with no ``distinct``: that projection is duplicate-free because the
+    feed has one row per changed right key and ``on`` == right.key_cols,
+    even when one interval rewrites the same key in several commits."""
+    left, right = tables
+    v = _view(tables, tmp_path)
+    langs = [
+        r["lang"] for r in right.read().orderBy("lang").limit(3).collect()
+    ]
+    hot = langs[0]
+    rfrom = right.commit_seq()
+    right.upsert(_rchanges(spark, [(hot, "fam-A", OP_UPDATE), (langs[1], "fam-B", OP_UPDATE)]))
+    right.upsert(_rchanges(spark, [(hot, "fam-C", OP_UPDATE), (langs[2], None, OP_DELETE)]))
+    right.upsert(_rchanges(spark, [(hot, None, OP_DELETE)]))
+    right.upsert(_rchanges(spark, [(hot, "fam-D", OP_ADD), (langs[2], "fam-E", OP_ADD)]))
+    probe = right.read_changes(rfrom, right.commit_seq()).select(*v.on)
+    assert probe.count() == probe.distinct().count() == 3
+    v.refresh()
+    _assert_parity(v, tables, "inner")
+
+
 def test_validation(spark, tables, tmp_path):
     left, right = tables
     with pytest.raises(ValueError, match="right table's key"):

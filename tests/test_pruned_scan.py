@@ -155,6 +155,14 @@ def test_delete_only_delta_keeps_pruning_safe(spark, table):
     # and results stay exact for both a surviving and the deleted lang
     _assert_pruned_equals_full(table, [("lang", "=", "lang4")])
     assert n > 0 and table.read_where([("lang", "=", "lang4")]).count() == 0
+    # MOR: the tombstone delta's entry is nonnull=0 and still EXCLUDES, so
+    # a value outside every base bound keeps pruning to nothing
+    meta = table._meta()
+    for entries in meta["deltas"].values():
+        for e in entries:
+            for entry in meta["stats"][e["gen"]].values():
+                assert entry["lang"]["nonnull"] == 0
+    assert table.prune_buckets([("lang", "=", "zzz")]) == []
 
 
 def test_set_stats_cols_is_a_commit_and_backfills_naturally(spark, tmp_path):
@@ -188,12 +196,27 @@ def test_set_stats_cols_is_a_commit_and_backfills_naturally(spark, tmp_path):
     )
 
 
-def test_missing_stats_never_breaks_reads(table):
+def test_missing_stats_never_breaks_reads(spark, table):
     meta = table._meta()
     meta.pop("stats", None)
     table._write_meta(meta)
     _assert_pruned_equals_full(table, [("lang", "=", "lang3")])
     _assert_pruned_equals_full(table, [("repo", "=", "r3")])  # hash path intact
+    # a manifest written by the removed per-generation ``_stats/`` file
+    # mode: no inline bounds, a stale mode key, and a leftover bounds file
+    # that would exclude everything if it were consulted — opens, reads
+    # exactly, prunes nothing
+    meta["stats_storage"] = "sidecar"
+    table._write_meta(meta)
+    gen = next(iter(meta["buckets"].values()))
+    table.fs.write_json_atomic(
+        f"{table.path}/_stats/{gen}.json",
+        {b: {"lang": {"min": "a", "max": "b", "nonnull": 1}} for b in meta["buckets"]},
+    )
+    legacy = HashBucketParquetTable(spark, table.path, stats_cols=("lang",))
+    assert legacy.prune_buckets([("lang", "=", "lang3")]) is None
+    _assert_pruned_equals_full(legacy, [("lang", "=", "lang3")])
+    assert legacy.read().count() == table.read().count() > 0
 
 
 def test_dml_dsl_predicates_prune_and_converge(table):
@@ -215,9 +238,13 @@ def test_dml_dsl_predicates_prune_and_converge(table):
 
 def test_stats_survive_restore_and_gc_with_generations(spark, table):
     seq0 = table.commit_seq()
+    pruned0 = table.prune_buckets([("lang", "=", "lang1")])
+    assert len(pruned0) < len(table._meta()["buckets"])
     table.delete_where([("repo", "=", "r1")])
     table.restore(seq0)
-    # resurrected generations still carry their bounds: pruned reads exact
+    # resurrected generations still carry their bounds: they prune as
+    # before the delete, and pruned reads stay exact
+    assert table.prune_buckets([("lang", "=", "lang1")]) == pruned0
     _assert_pruned_equals_full(table, [("lang", "=", "lang1")])
     assert table.read().filter("repo = 'r1'").count() > 0
     # stats map never references unknown generations (GC'd with retention)
@@ -234,6 +261,12 @@ def test_wap_staging_stats_land_at_publish(spark, table):
         [("r0", "p0", "c-wap", "lang0", "wap-body")],
         "repo string, path string, commit string, lang string, content string",
     ).withColumn("op", F.lit(OP_UPDATE))
+    # an abandoned staging leaves no bounds behind, pending or live
+    dropped = table.stage_upsert(up)
+    assert dropped.gen in table._pending_gen_stats
+    dropped.abandon()
+    assert dropped.gen not in table._pending_gen_stats
+    assert dropped.gen not in table._meta().get("stats", {})
     staged = table.stage_upsert(up)
     # bounds for the still-unpublished staging are PENDING, not live
     assert staged.gen not in table._meta().get("stats", {})
@@ -242,3 +275,24 @@ def test_wap_staging_stats_land_at_publish(spark, table):
     # ... and land in the manifest at the publish commit
     assert staged.gen in table._meta()["stats"]
     _assert_pruned_equals_full(table, [("lang", "=", "lang0")])
+
+
+def test_long_value_gets_no_bound_and_stays_readable(spark, table):
+    """A stats-column value longer than the parquet writer's statistics
+    limit: the writer drops that column chunk's min/max (it never
+    truncates), so the generation gets NO bound for the column in that
+    bucket — and the bucket, never excluded, still serves the row."""
+    long_lang = "x" * 5000
+    up = spark.createDataFrame(
+        [("r3", "p-long", "c-long", long_lang, "long-body")],
+        "repo string, path string, commit string, lang string, content string",
+    ).withColumn("op", F.lit(OP_UPDATE))
+    table.upsert(up)
+    (b,) = table.prune_buckets([("repo", "=", "r3")])
+    meta = table._meta()
+    deltas = meta["deltas"].get(str(b))
+    gen = deltas[-1]["gen"] if deltas else meta["buckets"][str(b)]
+    assert "lang" not in meta.get("stats", {}).get(gen, {}).get(str(b), {})
+    assert b in table.prune_buckets([("lang", "=", long_lang)])
+    res = table.read_where([("lang", "=", long_lang)]).collect()
+    assert len(res) == 1 and res[0]["path"] == "p-long"
