@@ -1442,7 +1442,7 @@ def q_diff_apply_converges(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = cdc_state(ev, None)
     dest = cdc_state(ev, half)
     delta = snapshot_diff(src, dest, canonicalize=False, digest_impl="jvm")
-    converged = apply_changes(dest, delta, digest_impl="jvm")
+    converged = apply_changes(dest, delta)
     return converged.select("repo", "path", "lang", "content")
 
 
@@ -3754,8 +3754,8 @@ def q_replication_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         rep = TableReplicator(
             src=src, dst=dst, checkpoints=CheckpointStore(f"{work}/ckpt")
         )
-        first = rep.sync(to_seq=2, digest_impl="arrow")
-        second = rep.sync(digest_impl="arrow")
+        first = rep.sync(to_seq=2)
+        second = rep.sync()
         if first["changes"] < 0 or second["changes"] < 0:
             raise AssertionError(f"replication made no progress: {first} {second}")
         (
@@ -3882,7 +3882,7 @@ def q_secondary_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             t, f"{work}/idx", index_cols=("content",), n_buckets=8
         )
         built = idx.build(as_of=2)  # pinned epoch-0 version
-        stats = idx.refresh(digest_impl="arrow")  # feed-advance 2 → head
+        stats = idx.refresh()  # feed-advance 2 → head
         if built != 2 or stats["to_seq"] != t.commit_seq():
             raise AssertionError(f"index did not advance: {built} {stats}")
         probe = spark.createDataFrame(
@@ -3932,7 +3932,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         h = SCD2History(t, f"{work}/hist", n_buckets=8)
         built = h.build(as_of=2)
-        stats = h.advance(digest_impl="arrow")
+        stats = h.advance()
         if built != 2 or stats["to_seq"] != t.commit_seq():
             raise AssertionError(f"history did not advance: {built} {stats}")
         (
@@ -4408,7 +4408,7 @@ def q_multi_replication_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             pkg_base.filter((F.col("_sk") % 2 == 0)).drop("_sk", "_nk")
             .withColumn("op", F.lit("ADD"))
         )
-        rep.sync_all(digest_impl="arrow")
+        rep.sync_all()
         # pass 2: remaining parents; child adds (odd keys), updates
         # (sk%6==0 and not deleted -> re-pointed to (nk+7)%25), deletes
         # (sk%10==0)
@@ -4432,7 +4432,7 @@ def q_multi_replication_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_sk", "_nk").withColumn("op", F.lit("DELETE"))
         )
         lakes["src_pkgs"].upsert(adds.unionByName(updates).unionByName(deletes))
-        rep.sync_all(digest_impl="arrow")
+        rep.sync_all()
         result = (
             lakes["dst_pkgs"].read()
             .unionByName(lakes["dst_orgs"].read())

@@ -5,8 +5,6 @@ from bcdc2bcdc_spark.functions.canonicalize import (
 )
 from bcdc2bcdc_spark.functions.digest import (
     row_digest_expr,
-    sha256_arrow,
-    sha256_expr,
     with_row_digest,
 )
 
@@ -15,7 +13,5 @@ __all__ = [
     "canonicalize_events",
     "canonicalize_snapshot",
     "row_digest_expr",
-    "sha256_arrow",
-    "sha256_expr",
     "with_row_digest",
 ]

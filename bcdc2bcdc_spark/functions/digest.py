@@ -5,14 +5,17 @@ The reference detects UPDATEs by deep-diffing canonicalized records
 canonical record is reduced to a sha256 digest and "changed" is digest
 inequality — associative, order-insensitive, and computable map-side.
 
-Two implementations, identical output, both tested against each other:
+Two implementations of the row digest, identical output, both tested
+against each other (``with_row_digest(impl=...)``):
 
-* ``sha256_expr``  — JVM built-in ``F.sha2(..., 256)``: stays inside
-  whole-stage codegen, zero Python boundary. The fast path.
-* ``sha256_arrow`` — vectorized pandas/Arrow UDF (the north-rule mandated
-  form; Arrow batch transfer, hashlib over a pandas Series). Used at the
-  schema-reconciliation boundary where rows already cross into Arrow, and
-  selectable engine-wide via ``impl="arrow"``.
+* ``"jvm"``   — built-in ``F.sha2(..., 256)`` (``row_digest_expr``): stays
+  inside whole-stage codegen, zero Python boundary. Every digest a lake
+  table computes over its own rows (init, lag re-digests, the change
+  feed, ``redigest``) and every feed consumer's upsert uses it.
+* ``"arrow"`` — vectorized pandas/Arrow UDF over ``pd_row_digest`` (the
+  north-rule form; Arrow batch transfer, hashlib per cell). The producer
+  of an incoming change set picks it: ``CDCPipeline.digest_impl``
+  defaults to it for the event change set it upserts.
 
 NULL handling: digests must distinguish NULL from any real string while
 treating every canonical-falsy as the same NULL (canonicalize first!).
@@ -37,23 +40,6 @@ _SEP = "\x1f"
 
 def _tagged(col: Column) -> Column:
     return F.when(col.isNull(), F.lit(_NULL_TAG)).otherwise(F.concat(F.lit(_VAL_TAG), col))
-
-
-def sha256_expr(col: Column | str) -> Column:
-    """JVM-side sha256 hex digest of one (nullable) string column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(_tagged(c), 256)
-
-
-@pandas_udf(T.StringType())
-def sha256_arrow(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized sha256 hex digest; bit-identical to sha256_expr."""
-
-    def one(v: object) -> str:
-        data = _NULL_TAG if v is None or pd.isna(v) else _VAL_TAG + str(v)
-        return hashlib.sha256(data.encode("utf-8")).hexdigest()
-
-    return s.map(one, na_action=None)
 
 
 def row_digest_expr(cols: list[Column | str]) -> Column:
@@ -192,8 +178,10 @@ def with_row_digest(
 ) -> DataFrame:
     """Attach a canonical-payload digest column.
 
-    impl="arrow"  → pandas/Arrow UDF (north-rule mandated path).
-    impl="jvm"    → whole-stage-codegen ``sha2`` (fastest; identical output).
+    impl="arrow"  → pandas/Arrow UDF, the north-rule path for an incoming
+                    change set's content diff (``CDCPipeline`` picks it).
+    impl="jvm"    → whole-stage-codegen ``sha2``: identical output, no
+                    Python boundary; what the lake uses for its own rows.
     """
     if not cols:
         # empty compare set (a pure-mapping table, e.g. the secondary

@@ -37,7 +37,6 @@ def apply_changes(
     key_cols: Sequence[str] = KEY_COLS,
     compare_cols: Sequence[str] = COMPARE_COLS,
     suppress_noops: bool = True,
-    digest_impl: str = "jvm",
     base_digest_col: str | None = None,
     changes_digest_col: str | None = None,
     out_digest_col: str | None = None,
@@ -63,12 +62,12 @@ def apply_changes(
     b = (
         base
         if base_digest_col
-        else with_row_digest(base, list(compare_cols), "_b_digest", impl=digest_impl)
+        else with_row_digest(base, list(compare_cols), "_b_digest", impl="jvm")
     )
     c = (
         changes
         if changes_digest_col
-        else with_row_digest(changes, list(compare_cols), "_c_digest", impl=digest_impl)
+        else with_row_digest(changes, list(compare_cols), "_c_digest", impl="jvm")
     )
     out_cols = list(payload_cols)
     b_fields = [F.col(f"b.{p}").alias(p) for p in payload_cols]

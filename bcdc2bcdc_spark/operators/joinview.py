@@ -175,7 +175,7 @@ class IncrementalJoinView:
     def read(self) -> DataFrame:
         return self._table().read()
 
-    def refresh(self, digest_impl: str = "jvm") -> dict:
+    def refresh(self) -> dict:
         """Advance to both tables' current versions from their feeds —
         see the module docstring for the O(affected rows) plan.
 
@@ -195,7 +195,7 @@ class IncrementalJoinView:
         infl = st.get("inflight_to")
         if infl is not None and (int(infl[0]) > lfrom or int(infl[1]) > rfrom):
             affected += self._apply_interval(
-                lfrom, rfrom, int(infl[0]), int(infl[1]), digest_impl
+                lfrom, rfrom, int(infl[0]), int(infl[1])
             )
             lfrom, rfrom = int(infl[0]), int(infl[1])
             self._write_state(lfrom, rfrom)
@@ -208,7 +208,7 @@ class IncrementalJoinView:
             )
         if (lcur, rcur) != (lfrom, rfrom):
             self._write_state(lfrom, rfrom, inflight_to=(lcur, rcur))
-            affected += self._apply_interval(lfrom, rfrom, lcur, rcur, digest_impl)
+            affected += self._apply_interval(lfrom, rfrom, lcur, rcur)
             self._write_state(lcur, rcur)
         return {
             "affected": affected,
@@ -216,27 +216,20 @@ class IncrementalJoinView:
             "right_seq": max(rcur, rfrom),
         }
 
-    def _apply_interval(
-        self, lfrom: int, rfrom: int, lcur: int, rcur: int, digest_impl: str
-    ) -> int:
+    def _apply_interval(self, lfrom: int, rfrom: int, lcur: int, rcur: int) -> int:
         """Apply ONE pinned interval pair: affected keys from the pinned
         feeds, recompute from the current table states."""
         lk = list(self.left.key_cols)
         parts = []
         if lcur > lfrom:
-            parts.append(
-                self.left.read_changes(lfrom, lcur, digest_impl=digest_impl)
-                .select(*lk)
-            )
+            parts.append(self.left.read_changes(lfrom, lcur).select(*lk))
         if rcur > rfrom:
             # no ``distinct`` on the probe keys: the feed has one row per
             # right key whose state changed, and ``on`` == right.key_cols,
             # so the projection is already duplicate-free
-            rkeys = self.right.read_changes(
-                rfrom, rcur, digest_impl=digest_impl
-            ).select(*self.on)
+            rkeys = self.right.read_changes(rfrom, rcur).select(*self.on)
             if self.fk_index is not None:
-                self.fk_index.refresh(digest_impl=digest_impl)
+                self.fk_index.refresh()
                 parts.append(self.fk_index.lookup(rkeys).select(*lk))
             else:
                 parts.append(
@@ -304,7 +297,6 @@ class IncrementalJoinView:
                     # superset — the upsert skips its discovery job
                     view.upsert(
                         present.unionByName(gone),
-                        digest_impl=digest_impl,
                         touched=sorted({int(b) for b in row["_vbs"]}),
                     )
                 finally:

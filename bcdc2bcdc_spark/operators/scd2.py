@@ -117,7 +117,7 @@ class SCD2History:
         self._write_state(seq, built=seq)
         return seq
 
-    def advance(self, digest_impl: str = "jvm") -> dict:
+    def advance(self) -> dict:
         """Apply the base feed since the last tracked version: one
         bucket-pruned feed read, one pruned read of the touched keys'
         OPEN history rows, one upsert per interval.
@@ -136,7 +136,7 @@ class SCD2History:
         inflight = st.get("inflight_to")
         if inflight is not None and int(inflight) > frm:
             # finish (or idempotently re-apply) the crashed interval first
-            c, o = self._apply_interval(frm, int(inflight), digest_impl)
+            c, o = self._apply_interval(frm, int(inflight))
             closed += c
             opened += o
             frm = int(inflight)
@@ -149,7 +149,7 @@ class SCD2History:
             )
         if cur > frm:
             self._write_state(frm, inflight_to=cur)  # intent: [frm, cur]
-            c, o = self._apply_interval(frm, cur, digest_impl)
+            c, o = self._apply_interval(frm, cur)
             closed += c
             opened += o
             self._write_state(cur)
@@ -160,11 +160,9 @@ class SCD2History:
             "opened": opened,
         }
 
-    def _apply_interval(
-        self, frm: int, cur: int, digest_impl: str
-    ) -> tuple[int, int]:
+    def _apply_interval(self, frm: int, cur: int) -> tuple[int, int]:
         """Apply the net feed of ONE pinned interval to the history."""
-        feed = self.base.read_changes(frm, cur, digest_impl=digest_impl)
+        feed = self.base.read_changes(frm, cur)
         kc = list(self.base.key_cols)
         payload = self._payload_cols()
         hist = self._table()
@@ -200,7 +198,7 @@ class SCD2History:
                 n_closed = changes.where(F.col(VALID_TO).isNotNull()).count()
                 n_opened = changes.where(F.col(VALID_TO).isNull()).count()
                 if n_closed or n_opened:
-                    hist.upsert(changes, digest_impl=digest_impl)
+                    hist.upsert(changes)
             finally:
                 changes.unpersist()
         finally:

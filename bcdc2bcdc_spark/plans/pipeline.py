@@ -36,8 +36,12 @@ class CDCPipeline:
     """Applies change-event epochs to a lake table with exactly-once resume.
 
     ``table`` is any object with ``read() -> DataFrame`` and
-    ``upsert(changes, digest_impl=...)`` (HashBucketParquetTable or
-    IcebergLakeTable). ``transforms`` are named canonicalizers applied in
+    ``upsert(changes, digest_impl=..., touched=...)``
+    (HashBucketParquetTable or IcebergLakeTable). ``digest_impl`` picks how
+    the epoch's change set is digested for the content diff against the
+    table's stored digests — the one place the engine runs the Arrow UDF;
+    everything the table digests itself uses the JVM. ``transforms`` are
+    named canonicalizers applied in
     order after the built-in null-ish canonicalization (the reference's
     config-dispatched CustomTransformers, T4); they must be
     KEY-PRESERVING (never rewrite repo/path) — bucket discovery reads the
@@ -49,7 +53,7 @@ class CDCPipeline:
     ignore_repos: tuple[str, ...] = ()  # config-driven (TransformConfig.ignore_repos)
     lww_strategy: str = "maxby"
     n_salts: int = 16
-    digest_impl: str = "arrow"  # north-rule mandated default; "jvm" is faster
+    digest_impl: str = "arrow"  # change-set digest (north rule); "jvm" is bit-identical
     key_cols: Sequence[str] = KEY_COLS
     order_cols: Sequence[str] = ORDER_COLS
     transforms: list[Callable[[DataFrame], DataFrame]] = field(default_factory=list)

@@ -68,7 +68,7 @@ class TableReplicator:
         done = self.checkpoints.committed_epochs()
         return max(done) if done else self.initial_version
 
-    def sync(self, to_seq: int | None = None, digest_impl: str = "jvm") -> dict:
+    def sync(self, to_seq: int | None = None) -> dict:
         """Advance dst to src version ``to_seq`` (default: src head) in ONE
         coalesced interval — versions in between are skipped over, their
         net effect captured by a single manifest-diff feed. Returns
@@ -100,7 +100,7 @@ class TableReplicator:
             # the count precedes the marker: a failure (e.g. src retention
             # expired mid-sync) must precede the commit, and the result
             # must never misreport a committed sync as an error
-            n = self._apply(frm, head, digest_impl)
+            n = self._apply(frm, head)
             self.checkpoints.commit(
                 head,
                 offset_start=frm,
@@ -113,17 +113,17 @@ class TableReplicator:
             self.checkpoints.release_writer_lock()
         return {"from": frm, "to": head, "changes": n}
 
-    def _apply(self, frm: int, head: int, digest_impl: str) -> int:
+    def _apply(self, frm: int, head: int) -> int:
         """Upsert the ``frm → head`` feed into dst; returns its row count."""
         changed = self.src.changed_buckets(frm, head)
         if changed == []:
             return 0
-        feed = self.src.read_changes(frm, head, digest_impl=digest_impl)
+        feed = self.src.read_changes(frm, head)
         if self.transform is not None:
             feed = self.transform(feed)
         if not hasattr(self.dst, "bucket_scheme"):
             n = feed.count()
-            self.dst.upsert(feed, digest_impl=digest_impl)
+            self.dst.upsert(feed)
             return n
         touched = None
         if (
@@ -136,7 +136,7 @@ class TableReplicator:
         # over the observed feed before the read (which blocks until one has)
         obs = Observation()
         feed = feed.observe(obs, F.count(F.lit(1)).alias("n"))
-        self.dst.upsert(feed, digest_impl=digest_impl, touched=touched)
+        self.dst.upsert(feed, touched=touched)
         # Spark completes an observation with an EMPTY row when AQE pruned
         # the observed subtree from the final plan, which it does to an
         # empty shuffle side (an empty feed under the merge's full-outer
@@ -146,14 +146,14 @@ class TableReplicator:
             return 0
         return int(obs.get["n"])
 
-    def follow(self, digest_impl: str = "jvm") -> list[dict]:
+    def follow(self) -> list[dict]:
         """Catch-up loop: one sync per outstanding src version (the
         fine-grained mode — audit trails that want one dst commit per src
         commit; ``sync()`` alone is the cheap coalescing mode)."""
         out = []
         for v in self.src.versions():
             if v > self.last_synced():
-                out.append(self.sync(to_seq=v, digest_impl=digest_impl))
+                out.append(self.sync(to_seq=v))
         return out
 
 
@@ -241,10 +241,7 @@ class MultiTableReplicator:
     def sync_order(self) -> list[str]:
         return [e.name for e in self._order]
 
-    def sync_all(self, digest_impl: str = "jvm") -> dict[str, dict]:
+    def sync_all(self) -> dict[str, dict]:
         """One coalescing pass: every entity advances to its src head, in
         dependency order. Returns per-entity sync stats."""
-        return {
-            e.name: self._replicators[e.name].sync(digest_impl=digest_impl)
-            for e in self._order
-        }
+        return {e.name: self._replicators[e.name].sync() for e in self._order}

@@ -193,7 +193,7 @@ class CatalogTransaction:
     _staged: dict = field(default_factory=dict)
     done: str | None = None  # "committed" | "aborted"
 
-    def stage(self, name: str, changes: DataFrame, digest_impl: str = "jvm"):
+    def stage(self, name: str, changes: DataFrame):
         self._check_open("stage")
         if name in self._staged:
             raise ValueError(
@@ -201,7 +201,7 @@ class CatalogTransaction:
                 "union the change sets instead (one MERGE per table)"
             )
         t = self.catalog._require(name)
-        self._staged[name] = t.stage_upsert(changes, digest_impl=digest_impl)
+        self._staged[name] = t.stage_upsert(changes)
         return self
 
     def read(self, name: str) -> DataFrame:

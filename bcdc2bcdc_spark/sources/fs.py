@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 
 class LocalFS:
@@ -81,7 +82,10 @@ class LocalFS:
 
     def write_json_atomic(self, path: str, payload: dict) -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
+        # a private staging name per call: a shared one lets an
+        # interleaved writer rename the other's half-written file into
+        # place; the suffix never ends in the listed ".json"
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(payload, fh)
         os.replace(tmp, path)

@@ -161,7 +161,7 @@ class SecondaryIndex:
         self._write_state(seq)
         return seq
 
-    def refresh(self, digest_impl: str = "jvm") -> dict:
+    def refresh(self) -> dict:
         """Advance the index to the base table's current version by
         applying ONLY its change feed since the last indexed version —
         O(changes) work, bucket-pruned on both sides (the feed reads
@@ -185,7 +185,7 @@ class SecondaryIndex:
         entries = 0
         inflight = st.get("inflight_to")
         if inflight is not None and int(inflight) > frm:
-            entries += self._apply_interval(frm, int(inflight), digest_impl)
+            entries += self._apply_interval(frm, int(inflight))
             frm = int(inflight)
             self._write_state(frm)
         cur = self.base.commit_seq()
@@ -196,18 +196,16 @@ class SecondaryIndex:
             )
         if cur > frm:
             self._write_state(frm, inflight_to=cur)  # intent: [frm, cur]
-            entries += self._apply_interval(frm, cur, digest_impl)
+            entries += self._apply_interval(frm, cur)
             self._write_state(cur)
         return {"from_seq": frm0, "to_seq": max(cur, frm), "entries": entries}
 
-    def _apply_interval(self, frm: int, cur: int, digest_impl: str) -> int:
+    def _apply_interval(self, frm: int, cur: int) -> int:
         """Apply the net feed of ONE pinned interval to the index."""
         # persist: the dels and adds branches BOTH read the feed's
         # full-outer join — one materialization serves the pair (and the
         # downstream count + upsert)
-        feed = self.base.read_changes(
-            frm, cur, include_pre=True, digest_impl=digest_impl
-        ).persist()
+        feed = self.base.read_changes(frm, cur, include_pre=True).persist()
         ic = list(self.index_cols)
         kc = list(self.base.key_cols)
         pre = [f"pre_{c}" for c in ic]
@@ -238,7 +236,7 @@ class SecondaryIndex:
         try:
             n = changes.count()
             if n:
-                self._table().upsert(changes, digest_impl=digest_impl)
+                self._table().upsert(changes)
         finally:
             changes.unpersist()
             feed.unpersist()

@@ -404,7 +404,7 @@ class HashBucketParquetTable:
                 "refusing mutation"
             )
 
-    def init(self, df: DataFrame, digest_impl: str = "jvm") -> None:
+    def init(self, df: DataFrame) -> None:
         """Create the table from a snapshot. Overwrites any prior state.
         Computes and persists the `_digest` column."""
         self._check_writable()
@@ -416,7 +416,7 @@ class HashBucketParquetTable:
                 "of row identity)"
             )
         with_digest = with_row_digest(
-            df, [c for c in self.compare_cols if c in df.columns], "_digest", impl=digest_impl
+            df, [c for c in self.compare_cols if c in df.columns], "_digest", impl="jvm"
         )
         self._initializing = True  # stats_cols resolve from the ctor, not a prior table
         try:
@@ -931,7 +931,6 @@ class HashBucketParquetTable:
         self,
         buckets: Sequence[int] | None = None,
         meta: dict | None = None,
-        digest_impl: str = "jvm",
     ) -> DataFrame:
         """Manifest-resolved read with outstanding MOR deltas FOLDED IN —
         same output shape as ``_read_raw_from`` (payload + ``_digest``), so
@@ -966,7 +965,7 @@ class HashBucketParquetTable:
             # stored digests predate a compare-set change (schema
             # evolution): recompute so the no-op fold compares digests
             # over ONE column set — same rule as the CoW upsert path
-            u = with_row_digest(u.drop("_digest"), compare, "_digest", impl=digest_impl)
+            u = with_row_digest(u.drop("_digest"), compare, "_digest", impl="jvm")
         return self._merge_versions(u, schema)
 
     def _read_raw_from(
@@ -1251,7 +1250,6 @@ class HashBucketParquetTable:
         from_seq: int,
         to_seq: int,
         include_pre: bool = False,
-        digest_impl: str = "jvm",
     ) -> DataFrame:
         """The CHANGE DATA FEED between two committed versions (Delta
         Lake ``table_changes`` / Iceberg changelog-scan analog): one row
@@ -1296,12 +1294,8 @@ class HashBucketParquetTable:
         )
         if buckets is not None and not buckets:
             return self.spark.createDataFrame([], empty_feed)
-        old = self._read_merged_raw(
-            buckets=buckets, meta=m_from, digest_impl=digest_impl
-        )
-        new = self._read_merged_raw(
-            buckets=buckets, meta=m_to, digest_impl=digest_impl
-        )
+        old = self._read_merged_raw(buckets=buckets, meta=m_from)
+        new = self._read_merged_raw(buckets=buckets, meta=m_to)
         cmp_from = m_from.get("compare_cols", list(self.compare_cols))
         cmp_to = m_to.get("compare_cols", list(self.compare_cols))
         # Stored digests are only comparable when BOTH versions' digests
@@ -1323,10 +1317,8 @@ class HashBucketParquetTable:
             from bcdc2bcdc_spark.evolution import reconcile_to_schema
 
             old = reconcile_to_schema(old.drop("_digest"), schema_to)
-            old = with_row_digest(old, cmp_to, "_digest", impl=digest_impl)
-            new = with_row_digest(
-                new.drop("_digest"), cmp_to, "_digest", impl=digest_impl
-            )
+            old = with_row_digest(old, cmp_to, "_digest", impl="jvm")
+            new = with_row_digest(new.drop("_digest"), cmp_to, "_digest", impl="jvm")
         o = old.select(
             *key_cols,
             *[F.col(c).alias(f"_pre_{c}") for c in payload],
@@ -1411,6 +1403,11 @@ class HashBucketParquetTable:
         (``digest_cols`` lags); upserts then recompute base digests for
         touched buckets until ``redigest()`` re-baselines the table.
 
+        ``digest_impl`` is how the change set is digested for the content
+        diff against the stored ``_digest`` (``with_row_digest``): the
+        producer of the change set picks it — CDCPipeline passes its own,
+        every other caller leaves the JVM default.
+
         Crash safety — ATOMIC commit: the merged buckets are staged into a
         fresh immutable generation directory, then the bucket→generation
         manifest is swapped with one atomic metadata write (Iceberg's
@@ -1431,10 +1428,12 @@ class HashBucketParquetTable:
         advanced since this upsert's base read (Iceberg's
         validate-and-retry model), so a racing writer can never merge
         against a stale manifest and silently drop the other's rows. The
-        check-then-rename pair is not itself mutually excluded — two
-        commits inside that millisecond window still race — so writers
-        that must never retry should serialize externally, as CDCPipeline
-        does via the checkpoint writer lock.
+        check-then-rename pair is not itself mutually excluded — of two
+        commits inside that millisecond window the later rename wins and
+        the other commit is lost — so writers that must never retry should
+        serialize externally, as CDCPipeline does via the checkpoint
+        writer lock. Each manifest write stages through its own file, so
+        the race can lose a commit but never leaves a torn manifest.
         """
         self._check_writable()
         changes = self._evolve_and_reconcile(changes)
@@ -1491,7 +1490,7 @@ class HashBucketParquetTable:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         return self.read().where(pred)
 
-    def delete_where(self, predicate, digest_impl: str = "jvm") -> int:
+    def delete_where(self, predicate) -> int:
         """Predicate DELETE (Delta/Iceberg ``DELETE WHERE``), compiled to
         ordinary keyed DELETE change events and committed through
         ``upsert``. The reference can only delete by enumerated ids
@@ -1533,18 +1532,12 @@ class HashBucketParquetTable:
             ).first()
             n = int(row["_n"])
             if n:
-                self.upsert(
-                    changes,
-                    digest_impl=digest_impl,
-                    touched=sorted(int(b) for b in row["_b"]),
-                )
+                self.upsert(changes, touched=sorted(int(b) for b in row["_b"]))
         finally:
             changes.unpersist()
         return n
 
-    def update_where(
-        self, predicate, assignments: dict, digest_impl: str = "jvm"
-    ) -> int:
+    def update_where(self, predicate, assignments: dict) -> int:
         """Predicate UPDATE (Delta/Iceberg ``UPDATE ... SET``): rows
         matching ``predicate`` get each ``assignments`` column replaced by
         its expression (a Column or SQL string, evaluated against the
@@ -1600,11 +1593,7 @@ class HashBucketParquetTable:
             ).first()
             n = int(row["_n"])
             if n:
-                self.upsert(
-                    changes,
-                    digest_impl=digest_impl,
-                    touched=sorted(int(b) for b in row["_b"]),
-                )
+                self.upsert(changes, touched=sorted(int(b) for b in row["_b"]))
         finally:
             changes.unpersist()
         return n
@@ -1628,9 +1617,7 @@ class HashBucketParquetTable:
         by. Shared by ``upsert`` and ``stage_upsert``."""
         if digests_current is None:
             digests_current = meta.get("digest_cols", compare_cols) == compare_cols
-        base = self._read_merged_raw(
-            buckets=touched, meta=meta, digest_impl=digest_impl
-        )
+        base = self._read_merged_raw(buckets=touched, meta=meta)
         # _read_merged_raw already recomputed digests over the current
         # compare set when deltas were outstanding (its lag branch) —
         # don't pay a second full digest pass in that case
@@ -1653,7 +1640,6 @@ class HashBucketParquetTable:
             changes_d,
             key_cols=self.key_cols,
             compare_cols=compare_cols,
-            digest_impl=digest_impl,
             base_digest_col="_digest",
             changes_digest_col="_cdigest",
             out_digest_col="_digest",
@@ -1993,7 +1979,7 @@ class HashBucketParquetTable:
             return changes  # already the target shape: the projection is identity
         return reconcile_to_schema(changes, full)
 
-    def redigest(self, digest_impl: str = "jvm") -> None:
+    def redigest(self) -> None:
         """Maintenance: recompute the persisted ``_digest`` of EVERY bucket
         over the table's current compare set and advance ``digest_cols``.
         Run after schema evolution to restore the zero-digest-work fast
@@ -2007,10 +1993,10 @@ class HashBucketParquetTable:
         if meta.get("digest_cols") == compare:
             return
         rewritten = with_row_digest(
-            self._read_merged_raw(meta=meta, digest_impl=digest_impl).drop("_digest"),
+            self._read_merged_raw(meta=meta).drop("_digest"),
             compare,
             "_digest",
-            impl=digest_impl,
+            impl="jvm",
         ).withColumn("_bucket", self._bucket_of(meta))
         # buckets live in the base map OR delta-only (MOR bucket never
         # yet folded) — both get a fresh base generation here

@@ -52,7 +52,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--lww-strategy", choices=["maxby", "window", "salted"], default="maxby")
     p.add_argument("--n-salts", type=int, default=16)
-    p.add_argument("--digest-impl", choices=["arrow", "jvm"], default="arrow")
     p.add_argument(
         "--write-mode",
         choices=["cow", "mor"],
@@ -85,7 +84,7 @@ def main(argv: list[str] | None = None) -> int:
 
         src = spark.read.parquet(args.src)
         dest = spark.read.parquet(args.dest)
-        change_set = snapshot_diff(src, dest, digest_impl=args.digest_impl)
+        change_set = snapshot_diff(src, dest, digest_impl="arrow")
         change_set.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"mode": "diff", "changes": spark.read.parquet(args.out).count()}))
         return 0
@@ -128,7 +127,6 @@ def main(argv: list[str] | None = None) -> int:
         ignore_repos=ignore_repos,
         lww_strategy=args.lww_strategy,
         n_salts=args.n_salts,
-        digest_impl=args.digest_impl,
         transforms=transforms,
     )
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bcdc2bcdc_spark.functions.canonicalize import canonicalize_events, canonicalize_snapshot
-from bcdc2bcdc_spark.functions.digest import sha256_arrow, sha256_expr, with_row_digest
+from bcdc2bcdc_spark.functions.digest import row_digest_expr, with_row_digest
 from bcdc2bcdc_spark.generator import IGNORED_REPOS, gen_events, gen_repos, gen_snapshot_pair
 from bcdc2bcdc_spark.operators.apply import apply_changes
 from bcdc2bcdc_spark.operators.diff import datasets_equal, snapshot_diff
@@ -48,12 +48,13 @@ def test_generator_events_dirtiness(spark):
 
 
 def test_digest_arrow_jvm_parity(spark):
+    # one-column payload: NULL, '', 'None', a 5,000-char value, unicode
     df = spark.createDataFrame(
         [("a",), (None,), ("",), ("None",), ("x" * 5000,), ("naïve ünïcode",)],
         ["v"],
     )
-    got = df.select(
-        sha256_expr(F.col("v")).alias("jvm"), sha256_arrow(F.col("v")).alias("arrow")
+    got = with_row_digest(
+        with_row_digest(df, ["v"], "jvm", impl="jvm"), ["v"], "arrow", impl="arrow"
     )
     assert got.filter(F.col("jvm") != F.col("arrow")).count() == 0
     # row digest parity across impls on a multi-column payload
@@ -67,7 +68,7 @@ def test_digest_arrow_jvm_parity(spark):
 
 def test_digest_distinguishes_null_empty_after_no_canon(spark):
     df = spark.createDataFrame([(None,), ("",)], ["v"])
-    vals = [r["d"] for r in df.select(sha256_expr(F.col("v")).alias("d")).collect()]
+    vals = [r["d"] for r in df.select(row_digest_expr(["v"]).alias("d")).collect()]
     assert vals[0] != vals[1]  # raw: null ≠ '' ; canonicalization is what unifies
 
 

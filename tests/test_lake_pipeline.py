@@ -645,3 +645,32 @@ def test_table_stats_metadata_only(spark, tmp_path):
     assert t.compact_deltas(max_deltas=1) == [hot["bucket"]]
     after = {r["bucket"]: r for r in t.table_stats().collect()}
     assert after[hot["bucket"]]["n_deltas"] == 0
+
+
+def test_interleaved_manifest_writes_never_tear(tmp_path, monkeypatch):
+    """A manifest write that lands while another is inside ``json.dump``
+    (the commit race window ``upsert`` documents) must neither fail the
+    first writer nor leave a torn file: the later rename wins whole."""
+    import json
+
+    from bcdc2bcdc_spark.sources.fs import LocalFS
+
+    fs = LocalFS()
+    path = str(tmp_path / "_table.json")
+    outer = {"a": 1}
+    inner = {"a": 2, "pad": "x" * 4096}  # longer than the outer payload
+    real_dump = json.dump
+    nested = []
+
+    def dump(obj, fh, *args, **kwargs):
+        if not nested:
+            nested.append(obj)
+            fs.write_json_atomic(path, inner)  # lands mid-write
+        return real_dump(obj, fh, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", dump)
+    fs.write_json_atomic(path, outer)
+    monkeypatch.undo()
+    assert nested == [outer]
+    assert fs.read_json(path) == outer
+    assert os.listdir(tmp_path) == ["_table.json"]  # no staging file left

@@ -114,3 +114,51 @@ def test_cc_round_no_single_partition(spark):
         .select("id", F.col("label2").alias("label"))
     )
     assert "SinglePartition" not in _plan(comp)
+
+
+def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypatch):
+    """The one place the Arrow digest UDF runs is the epoch change set
+    ``CDCPipeline`` upserts; a replica sync and a predicate DELETE commit
+    with JVM digests only (the perf split between write and sync rests on
+    it)."""
+    from bcdc2bcdc_spark.generator import gen_events
+    from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
+    from bcdc2bcdc_spark.plans.pipeline import CDCPipeline
+    from bcdc2bcdc_spark.plans.replicate import TableReplicator
+    from bcdc2bcdc_spark.schema import REPOS_SCHEMA
+    from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+
+    plans = []
+    real = HashBucketParquetTable._write_generation
+
+    def capture(self, df_with_bucket):
+        plans.append(_plan(df_with_bucket))
+        return real(self, df_with_bucket)
+
+    monkeypatch.setattr(HashBucketParquetTable, "_write_generation", capture)
+
+    def lake(name):
+        t = HashBucketParquetTable(spark, str(tmp_path / name), n_buckets=4)
+        t.init(spark.createDataFrame([], REPOS_SCHEMA))
+        return t
+
+    src, dst = lake("src"), lake("dst")
+    ev = gen_events(spark, n_events=200, n_keys=50, n_epochs=1, seed=5).drop("epoch")
+
+    plans.clear()
+    CDCPipeline(table=src, checkpoints=CheckpointStore(str(tmp_path / "ck"))).apply_epoch(
+        ev, 0
+    )
+    assert len(plans) == 1 and "ArrowEvalPython" in plans[0]
+
+    plans.clear()
+    rep = TableReplicator(
+        src=src, dst=dst, checkpoints=CheckpointStore(str(tmp_path / "rck"))
+    )
+    assert rep.sync()["changes"] > 0
+    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+
+    plans.clear()
+    lang = src.read().where("lang IS NOT NULL").first()["lang"]
+    assert src.delete_where(F.col("lang") == lang) > 0
+    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
