@@ -41,11 +41,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(F.filter(pieces, lambda t: t != ""))
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are neither alphanumeric nor space."""
     c = F.col(col) if isinstance(col, str) else col

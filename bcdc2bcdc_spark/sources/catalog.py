@@ -108,9 +108,6 @@ class LakeCatalog:
         self.fs.write_json_atomic(self.state_path, st)
         return ver
 
-    def pinned_seq(self, name: str, version: int) -> int:
-        return int(self._pins(version)[name]["seq"])
-
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """``name`` as of catalog ``version`` (default: latest snapshot).
         All reads through one version form a consistent join surface."""

@@ -39,6 +39,19 @@ Write modes (Iceberg v2's ``write.merge.mode`` duality):
   rewrite actions), restoring scan-speed reads; read-time-merge results
   are bit-identical before and after.
 
+One commit path. An upsert is a staging published at once: ``_stage``
+runs the merge (CoW) or delta (MOR) write job and returns a
+``StagedUpsert``; ``upsert`` publishes it immediately, ``stage_upsert``
+hands it to the caller for an audit first. ``_apply_generation`` is the
+one mapping of a staged generation into a manifest (CoW swap, MOR delta
+append, full-table replace), shared by the commit and the audit preview.
+Every manifest change — upserts, publishes, maintenance rewrites,
+metadata flips, ``restore`` — goes through the one commit head
+``_commit``: it re-reads the manifest, aborts with
+``ConcurrentWriteError`` unless ``commit_seq`` is still the caller's
+expected sequence, applies the caller's mutation and hands the manifest
+to ``_finalize_commit`` for the atomic swap.
+
 Write-guard: like the reference's ``CKAN_DO_NOT_WRITE_URL`` check
 (CKAN.py:431-460), a table opened with ``protected=True`` refuses mutation.
 """
@@ -205,6 +218,50 @@ def _stats_entry_excludes(entry: dict | None, op: str, val) -> bool:
     return False
 
 
+def _apply_generation(
+    meta: dict, gen: str, written: set[int], touched: Sequence[int], mode: str, seq: int
+) -> None:
+    """Map staged generation ``gen`` (which holds rows for the ``written``
+    buckets) into manifest ``meta`` in place, as commit ``seq``:
+
+    * ``mor`` — append ``gen`` to each written bucket's delta list;
+    * ``cow`` — each touched bucket's base becomes ``gen``, or leaves the
+      map when the merge emptied it, and its outstanding deltas are
+      superseded (the staged output was read merged). Output outside the
+      declared touched set aborts: the bucket scheme changed under the
+      writer, or the caller passed an incomplete touched list;
+    * ``full_replace`` — ``gen`` IS the whole table (rebucket): every prior
+      mapping and delta is superseded.
+
+    Pure: the commit applies it to the live manifest, the WAP preview to a
+    copy of the staging's base manifest."""
+    bmap = meta.setdefault("buckets", {})
+    dmap = meta.setdefault("deltas", {})
+    if mode == "mor":
+        for b in sorted(written):
+            dmap.setdefault(str(b), []).append({"gen": gen, "seq": seq})
+        return
+    if mode == "full_replace":
+        bmap.clear()
+        dmap.clear()
+        touched = written
+    extra = set(written) - {int(b) for b in touched}
+    if extra:
+        raise ConcurrentWriteError(
+            f"staged output holds buckets {sorted(extra)} outside the "
+            "declared touched set — the bucket scheme changed under "
+            "this writer (concurrent rebucket?) or the caller passed "
+            f"an incomplete touched list; staged generation {gen} "
+            "left for the next sweep, manifest untouched"
+        )
+    for b in touched:
+        if b in written:
+            bmap[str(b)] = gen
+        else:
+            bmap.pop(str(b), None)  # every row deleted → bucket is empty
+        dmap.pop(str(b), None)
+
+
 def _live_buckets(meta: dict) -> list[int]:
     """Bucket ids holding any rows (base map ∪ outstanding MOR deltas)."""
     return sorted(
@@ -285,8 +342,8 @@ class HashBucketParquetTable:
     k distinct buckets rewrites k/n_buckets of the table. At 100 TB pick
     n_buckets so one bucket ≈ a few GB (e.g. 8192); at test scale 16.
 
-    Concurrent writers: upserts validate at commit that the manifest has
-    not advanced since their base read and abort with
+    Concurrent writers: every commit validates (``_commit``) that the
+    manifest has not advanced since its base read and aborts with
     ``ConcurrentWriteError`` when it has (optimistic concurrency, one
     winner). Engine writers (CDCPipeline) additionally serialize via the
     checkpoint writer lock.
@@ -377,8 +434,9 @@ class HashBucketParquetTable:
     #:   O(written bytes)) and the ranks' bits are interleaved into one
     #:   sort value, so row-group min/max become selective on EVERY
     #:   cluster dimension at the cost of coarser per-dimension locality.
-    #: Persisted like cluster_cols; flip with ``set_cluster_strategy``.
-    #: Layout-only: no read path changes either way.
+    #: Seeds ``init()`` (an unknown value is rejected there) and is
+    #: persisted; it is not flippable afterwards. Layout-only: no read
+    #: path changes either way.
     cluster_strategy: str = "lexicographic"
     #: per-bucket column bounds computed for generations this handle wrote
     #: but has not yet committed (WAP stagings park here until publish).
@@ -628,23 +686,16 @@ class HashBucketParquetTable:
 
     def _commit_meta_flip(self, field: str, value, default=None) -> None:
         """Shared metadata-flip commit (``write_mode`` / ``stats_cols`` /
-        ``cluster_cols``): one manifest read, mutate one field, then a REAL
-        commit whose ``expect_base_seq`` makes ``_finalize_commit`` re-read
-        the manifest IMMEDIATELY before the atomic swap and abort with
-        ``ConcurrentWriteError`` on any interleaved commit — one shared
-        optimistic-concurrency path instead of a copied double-read per
-        setter (the window is now the swap itself, not two stacked reads)."""
+        ``cluster_cols``): a no-op when the field already holds ``value``,
+        else a REAL commit through ``_commit`` that sets the one field — a
+        commit interleaved since this read aborts the flip with
+        ``ConcurrentWriteError`` instead of being clobbered by it."""
         self._check_writable()
         meta = self._meta()
         if meta.get(field, default) == value:
             return
-        base_seq = int(meta.get("commit_seq", 0))
-        meta[field] = value
-        self._finalize_commit(
-            meta,
-            base_seq + 1,
-            self._referenced_gens(meta),
-            expect_base_seq=base_seq,
+        self._commit(
+            int(meta.get("commit_seq", 0)), lambda m, _seq: m.update({field: value})
         )
 
     def set_stats_cols(self, cols: Sequence[str]) -> None:
@@ -692,16 +743,6 @@ class HashBucketParquetTable:
                 return self._validated_strategy(self.cluster_strategy)
             meta = self._meta()
         return meta.get("cluster_strategy", "lexicographic")
-
-    def set_cluster_strategy(self, strategy: str) -> None:
-        """Flip the persisted cluster strategy — a real commit, same
-        contract as ``set_cluster_cols`` (affects generations written
-        after the flip; ``rebucket`` re-lays history out)."""
-        self._commit_meta_flip(
-            "cluster_strategy",
-            self._validated_strategy(strategy),
-            default="lexicographic",
-        )
 
     def _sweep_unreferenced_generations(
         self, expired_now: Sequence[str] = ()
@@ -1226,24 +1267,20 @@ class HashBucketParquetTable:
         if seq == cur:
             return cur
         old = self._hist_meta(seq)
-        before_refs = self._referenced_gens(meta)
-        for k in self._DATA_STATE_FIELDS:
-            if k in old:
-                meta[k] = old[k]
-            else:
-                meta.pop(k, None)
-        # re-referencing a retired generation resurrects it — it is live
-        # table state again, not awaiting expiry
-        retired = meta.setdefault("retired", {})
-        for g in self._referenced_gens(meta):
-            retired.pop(g, None)
-        if int(self._meta().get("commit_seq", 0)) != cur:
-            raise ConcurrentWriteError(
-                f"a commit landed during restore (expected seq {cur}) — "
-                "re-run against the current state"
-            )
-        self._finalize_commit(meta, cur + 1, before_refs)
-        return cur + 1
+
+        def repoint(m: dict, _seq: int) -> None:
+            for k in self._DATA_STATE_FIELDS:
+                if k in old:
+                    m[k] = old[k]
+                else:
+                    m.pop(k, None)
+            # re-referencing a retired generation resurrects it — it is
+            # live table state again, not awaiting expiry
+            retired = m.setdefault("retired", {})
+            for g in self._referenced_gens(m):
+                retired.pop(g, None)
+
+        return self._commit(cur, repoint)
 
     def read_changes(
         self,
@@ -1408,6 +1445,10 @@ class HashBucketParquetTable:
         producer of the change set picks it — CDCPipeline passes its own,
         every other caller leaves the JVM default.
 
+        An upsert is ``stage_upsert`` published at once: the same
+        ``_stage`` writes the generation, and ``StagedUpsert.publish``
+        commits it.
+
         Crash safety — ATOMIC commit: the merged buckets are staged into a
         fresh immutable generation directory, then the bucket→generation
         manifest is swapped with one atomic metadata write (Iceberg's
@@ -1423,33 +1464,45 @@ class HashBucketParquetTable:
         id set, saving this method its own discovery job — the change-set
         plan (canonicalize + LWW dedup) then executes exactly once.
 
-        Concurrency — OPTIMISTIC, single-winner: the commit re-reads the
-        manifest and ABORTS with ``ConcurrentWriteError`` if ``commit_seq``
-        advanced since this upsert's base read (Iceberg's
-        validate-and-retry model), so a racing writer can never merge
-        against a stale manifest and silently drop the other's rows. The
-        check-then-rename pair is not itself mutually excluded — of two
-        commits inside that millisecond window the later rename wins and
-        the other commit is lost — so writers that must never retry should
-        serialize externally, as CDCPipeline does via the checkpoint
-        writer lock. Each manifest write stages through its own file, so
-        the race can lose a commit but never leaves a torn manifest.
+        Concurrency — OPTIMISTIC, single-winner: the commit head
+        (``_commit``) re-reads the manifest and ABORTS with
+        ``ConcurrentWriteError`` if ``commit_seq`` advanced since this
+        upsert's base read (Iceberg's validate-and-retry model), so a
+        racing writer can never merge against a stale manifest and
+        silently drop the other's rows. The check-then-rename pair is not
+        itself mutually excluded — of two commits inside that millisecond
+        window the later rename wins and the other commit is lost — so
+        writers that must never retry should serialize externally, as
+        CDCPipeline does via the checkpoint writer lock. Each manifest
+        write stages through its own file, so the race can lose a commit
+        but never leaves a torn manifest.
         """
+        self._stage(changes, compare_cols, digest_impl, touched).publish()
+
+    def _stage(
+        self,
+        changes: DataFrame,
+        compare_cols: Sequence[str] | None,
+        digest_impl: str,
+        touched: Sequence[int] | None,
+    ) -> "StagedUpsert":
+        """The one staging body of ``upsert`` and ``stage_upsert``: evolve
+        the schema, validate the compare set, find the touched buckets,
+        build the CoW merge or MOR delta frame and write it as a
+        generation. Commits nothing; the returned handle's ``publish``
+        does."""
         self._check_writable()
         changes = self._evolve_and_reconcile(changes)
         meta = self._meta()
         base_seq = int(meta.get("commit_seq", 0))
         persisted = list(meta.get("compare_cols", self.compare_cols))
-        if compare_cols is None:
-            compare_cols = persisted
-        elif list(compare_cols) != persisted:
+        if compare_cols is not None and list(compare_cols) != persisted:
             raise ValueError(
                 f"compare_cols {list(compare_cols)} differs from the table's "
                 f"persisted compare set {persisted}; pass compare_cols=None "
                 "to use the persisted set (mixing sets breaks no-op "
                 "suppression against the stored _digest)"
             )
-        digests_current = meta.get("digest_cols", persisted) == list(compare_cols)
         bucket = self._bucket_of(meta)
         if touched is None:
             # Touched-bucket set: bounded by n_buckets (collect is
@@ -1462,24 +1515,27 @@ class HashBucketParquetTable:
             # saving nothing for those callers.
             touched = [r[0] for r in changes.select(bucket).distinct().collect()]
         touched = sorted(set(touched))
+        mode = self._write_mode_resolved(meta)
         if not touched:
-            return  # empty change set: no staging job, no orphan dir
-        if self._write_mode_resolved(meta) == "mor":
-            self._upsert_mor(
-                changes.withColumn("_bucket", bucket),
-                list(compare_cols),
-                digest_impl,
-                base_seq,
+            # empty change set: no staging job, no orphan dir
+            return StagedUpsert(self, None, set(), [], base_seq, meta, mode)
+        if mode == "mor":
+            frame = self._mor_delta_frame(
+                changes.withColumn("_bucket", bucket), persisted, digest_impl
             )
-            return
-        merged = self._cow_merged_plan(
-            changes, list(compare_cols), digest_impl, meta, touched, bucket,
-            digests_current=digests_current,
-        )
-        # No caching of the merged plan: it executes exactly once (the
-        # staging write), and at scale cache memory is better spent on
-        # shuffle.
-        self._commit_generation(merged, touched, expected_seq=base_seq)
+        else:
+            # No caching of the merged plan: it executes exactly once (the
+            # staging write), and at scale cache memory is better spent on
+            # shuffle.
+            frame = self._cow_merged_plan(
+                changes, persisted, digest_impl, meta, touched, bucket
+            )
+        gen, written = self._write_generation(frame)
+        if mode == "mor" and not written:
+            # an empty delta changes nothing: no commit, no dir left behind
+            self.fs.remove_dir(os.path.join(self.data_path, gen))
+            gen = None
+        return StagedUpsert(self, gen, written, touched, base_seq, meta, mode)
 
     def _dml_matched(self, predicate) -> DataFrame:
         """Resolve a DML predicate — Column, SQL string, or the predicate
@@ -1606,7 +1662,6 @@ class HashBucketParquetTable:
         meta: dict,
         touched: Sequence[int],
         bucket: F.Column,
-        digests_current: bool | None = None,
     ) -> DataFrame:
         """The CoW merge plan: manifest-resolved read of exactly the
         touched buckets' dirs — MERGED (any outstanding MOR deltas fold in
@@ -1614,21 +1669,18 @@ class HashBucketParquetTable:
         plan's output: CoW rewrite supersedes them) — with the change set
         MERGEd on top, plus ``bucket`` (``meta``'s bucket expression, built
         once by the caller) as the ``_bucket`` the staging write partitions
-        by. Shared by ``upsert`` and ``stage_upsert``."""
-        if digests_current is None:
-            digests_current = meta.get("digest_cols", compare_cols) == compare_cols
+        by. ``digest_impl`` digests the change set only."""
         base = self._read_merged_raw(buckets=touched, meta=meta)
-        # _read_merged_raw already recomputed digests over the current
-        # compare set when deltas were outstanding (its lag branch) —
-        # don't pay a second full digest pass in that case
-        had_deltas = any(str(b) in meta.get("deltas", {}) for b in touched)
-        digests_current = digests_current or had_deltas
-        if not digests_current:
-            # stored digests predate a compare-set change (schema evolution):
-            # recompute over the touched rows — correct, costs one digest
-            # pass per touched bucket until redigest() re-baselines
+        # Stored digests predate a compare-set change (schema evolution):
+        # recompute over the touched rows — correct, costs one digest pass
+        # per touched bucket until redigest() re-baselines. Not when deltas
+        # were outstanding: _read_merged_raw's lag branch already did. The
+        # lake digests its own rows on the JVM, whatever the change set uses.
+        if meta.get("digest_cols", compare_cols) != compare_cols and not any(
+            str(b) in meta.get("deltas", {}) for b in touched
+        ):
             base = with_row_digest(
-                base.drop("_digest"), list(compare_cols), "_digest", impl=digest_impl
+                base.drop("_digest"), list(compare_cols), "_digest", impl="jvm"
             )
         # digest the (small) change set once; the base side reads its
         # persisted digest — no recompute over touched rows
@@ -1645,57 +1697,27 @@ class HashBucketParquetTable:
             out_digest_col="_digest",
         ).withColumn("_bucket", bucket)
 
-    def _upsert_mor(
-        self,
-        changes_b: DataFrame,
-        compare_cols: list[str],
-        digest_impl: str,
-        expected_seq: int,
-    ) -> None:
-        """Merge-on-read upsert: stage the change set AS a delta generation
-        (no base read, no base rewrite — write cost O(changes)), then
-        atomically append it to the touched buckets' delta lists. The
-        ``op`` column rides along: DELETE rows are tombstones, ADD/UPDATE
-        rows are upserts; ``read()`` resolves them per key. The change set
-        must be key-unique (lww_dedup first), same precondition as CoW."""
-        delta = self._mor_delta_frame(changes_b, compare_cols, digest_impl)
-        gen, written = self._write_generation(delta)
-        if not written:
-            return  # empty change set — nothing staged but an empty dir
-        self._commit_delta(gen, written, expected_seq)
-
     def _mor_delta_frame(
         self, changes_b: DataFrame, compare_cols: list[str], digest_impl: str
     ) -> DataFrame:
+        """The merge-on-read staging frame: the change set AS a delta
+        generation (no base read, no base rewrite — write cost
+        O(changes)). The ``op`` column rides along: DELETE rows are
+        tombstones, ADD/UPDATE rows are upserts; ``read()`` resolves them
+        per key. The change set must be key-unique (lww_dedup first), same
+        precondition as CoW."""
         schema_cols = [f.name for f in self.data_schema().fields]
         return with_row_digest(
             changes_b, compare_cols, "_digest", impl=digest_impl
         ).select(*schema_cols, "_digest", "op", "_bucket")
-
-    def _commit_delta(self, gen: str, written: set[int], expected_seq: int) -> None:
-        """Atomically append a STAGED delta generation to the touched
-        buckets' delta lists (the MOR commit tail — shared by the direct
-        upsert and a published WAP staging)."""
-        meta = self._meta()
-        if int(meta.get("commit_seq", 0)) != expected_seq:
-            raise ConcurrentWriteError(
-                f"commit_seq advanced {expected_seq} → "
-                f"{int(meta.get('commit_seq', 0))} during this MOR upsert; "
-                f"staged delta {gen} left for the next sweep"
-            )
-        before_refs = self._referenced_gens(meta)
-        seq = int(meta.get("commit_seq", 0)) + 1
-        dmap = meta.setdefault("deltas", {})
-        for b in sorted(written):
-            dmap.setdefault(str(b), []).append({"gen": gen, "seq": seq})
-        self._finalize_commit(meta, seq, before_refs)
 
     def stage_upsert(
         self, changes: DataFrame, digest_impl: str = "jvm"
     ) -> "StagedUpsert":
         """WRITE–AUDIT–PUBLISH staging (the Iceberg WAP pattern on this
         backend): run the FULL merge (CoW) or delta-stage (MOR) write job
-        now, but commit nothing — return a handle whose ``read()``
+        now — the same ``_stage`` that ``upsert`` publishes at once — but
+        commit nothing; return a handle whose ``read()``
         exposes the exact would-be table state for audits (row counts,
         quality rules, reconciliation against a source) and whose
         ``publish()`` performs only the atomic manifest swap. Audited
@@ -1713,26 +1735,7 @@ class HashBucketParquetTable:
         candidate and must re-run against a fresh staging. A staging
         whose process dies is ordinary never-referenced garbage, swept
         after ``staging_grace_s``."""
-        self._check_writable()
-        changes = self._evolve_and_reconcile(changes)
-        meta = self._meta()
-        base_seq = int(meta.get("commit_seq", 0))
-        compare_cols = list(meta.get("compare_cols", self.compare_cols))
-        bucket = self._bucket_of(meta)
-        touched = sorted({r[0] for r in changes.select(bucket).distinct().collect()})
-        mode = self._write_mode_resolved(meta)
-        if not touched:
-            return StagedUpsert(self, None, set(), [], base_seq, meta, mode)
-        if mode == "mor":
-            frame = self._mor_delta_frame(
-                changes.withColumn("_bucket", bucket), compare_cols, digest_impl
-            )
-        else:
-            frame = self._cow_merged_plan(
-                changes, compare_cols, digest_impl, meta, touched, bucket
-            )
-        gen, written = self._write_generation(frame)
-        return StagedUpsert(self, gen, written, touched, base_seq, meta, mode)
+        return self._stage(changes, None, digest_impl, None)
 
     def _commit_generation(
         self,
@@ -1740,31 +1743,29 @@ class HashBucketParquetTable:
         touched: Sequence[int],
         expected_seq: int | None = None,
         meta_updates: dict | None = None,
-        full_replace: bool = False,
+        mode: str = "cow",
     ) -> None:
-        """Stage → validate → swap → sweep. The manifest rewrite is the
-        atomic commit point; a touched bucket with no staged output was
-        emptied and simply leaves the map. Generations that lost their last
-        reference RETIRE at this commit's sequence number and are physically
-        deleted only after ``retain_generations`` further commits (snapshot
-        retention), so readers pinned to a recent manifest stay valid.
-        A partially superseded generation keeps its dead bucket dirs until
-        it fully retires — bounded dead space, reclaimed by later commits
-        or compact().
+        """Stage → commit for the maintenance rewrites: write ``merged``
+        as a generation, then ``_apply_staged`` it as a CoW swap of the
+        ``touched`` buckets (or, in ``full_replace`` mode, as the whole
+        table) plus ``meta_updates``. A touched bucket with no staged
+        output was emptied and simply leaves the map.
 
-        ``expected_seq`` arms the optimistic-concurrency check: if the
-        manifest's commit_seq no longer equals it, another writer committed
-        since the caller's base read and this commit ABORTS
-        (``ConcurrentWriteError``) leaving the staged generation
-        unreferenced — the winner's table state is untouched."""
+        ``expected_seq`` is the caller's base read; None takes the
+        sequence current before the write. If another writer commits
+        meanwhile, this commit ABORTS (``ConcurrentWriteError``) leaving
+        the staged generation unreferenced — the winner's table state is
+        untouched."""
+        if expected_seq is None:
+            expected_seq = self.commit_seq()
         gen, written = self._write_generation(merged)
         self._apply_staged(
             gen,
             written,
             touched,
-            expected_seq=expected_seq,
+            expected_seq,
+            mode=mode,
             meta_updates=meta_updates,
-            full_replace=full_replace,
         )
 
     def _apply_staged(
@@ -1772,72 +1773,53 @@ class HashBucketParquetTable:
         gen: str,
         written: set[int],
         touched: Sequence[int],
-        expected_seq: int | None = None,
+        expected_seq: int,
+        mode: str = "cow",
         meta_updates: dict | None = None,
-        full_replace: bool = False,
     ) -> None:
-        """The commit half of ``_commit_generation``: swap an ALREADY
-        STAGED generation into the manifest (also the publish step of a
-        WAP staging)."""
+        """Commit an ALREADY STAGED generation (a published WAP staging,
+        an upsert, a maintenance rewrite): one ``_commit`` whose mutation
+        is ``_apply_generation`` in ``mode`` plus ``meta_updates``."""
+
+        def stage_in(meta: dict, seq: int) -> None:
+            _apply_generation(meta, gen, written, touched, mode, seq)
+            meta.update(meta_updates or {})
+
+        self._commit(expected_seq, stage_in)
+
+    def _commit(self, expected_seq: int, mutate) -> int:
+        """The one commit head: every manifest change goes through here.
+        Reads the manifest and raises ``ConcurrentWriteError`` unless its
+        ``commit_seq`` is still ``expected_seq`` (the caller's base read),
+        so a commit that landed meanwhile is never overwritten. The check
+        runs after all of the caller's Spark work, on the very dict that
+        gets written: ``mutate(meta, seq)`` applies the caller's change to
+        it, then ``_finalize_commit`` swaps it in as commit ``seq``.
+        Returns ``seq``."""
         meta = self._meta()
-        if expected_seq is not None and int(meta.get("commit_seq", 0)) != expected_seq:
+        on_disk = int(meta.get("commit_seq", 0))
+        if on_disk != expected_seq:
             raise ConcurrentWriteError(
-                f"commit_seq advanced {expected_seq} → "
-                f"{int(meta.get('commit_seq', 0))} during this upsert; "
-                "another writer committed first — re-run against the new "
-                f"state (staged generation {gen} left for the next sweep)"
+                f"commit_seq advanced {expected_seq} → {on_disk} since this "
+                "writer's base read; another writer committed first — re-run "
+                "against the new table state (anything this writer staged is "
+                "left for the next sweep)"
             )
-        bmap = meta.setdefault("buckets", {})
-        dmap = meta.setdefault("deltas", {})
         before_refs = self._referenced_gens(meta)
-        if full_replace:
-            # the staged generation IS the whole table (rebucket): every
-            # prior mapping AND every outstanding delta is superseded in
-            # the same atomic swap (the staged output was read merged)
-            bmap.clear()
-            dmap.clear()
-            for b in written:
-                bmap[str(b)] = gen
-        else:
-            extra = set(written) - {int(b) for b in touched}
-            if extra:
-                raise ConcurrentWriteError(
-                    f"staged output holds buckets {sorted(extra)} outside the "
-                    "declared touched set — the bucket scheme changed under "
-                    "this writer (concurrent rebucket?) or the caller passed "
-                    f"an incomplete touched list; staged generation {gen} "
-                    "left for the next sweep, manifest untouched"
-                )
-            for b in touched:
-                if b in written:
-                    bmap[str(b)] = gen
-                else:
-                    bmap.pop(str(b), None)  # every row deleted → bucket is empty
-                # the new base encodes the merged state — outstanding
-                # deltas for this bucket are folded in and superseded
-                dmap.pop(str(b), None)
-        seq = int(meta.get("commit_seq", 0)) + 1
-        if meta_updates:
-            meta.update(meta_updates)
-        self._finalize_commit(meta, seq, before_refs)
+        mutate(meta, on_disk + 1)
+        self._finalize_commit(meta, on_disk + 1, before_refs)
+        return on_disk + 1
 
-    def _finalize_commit(
-        self,
-        meta: dict,
-        seq: int,
-        before_refs: set[str],
-        expect_base_seq: int | None = None,
-    ) -> None:
-        """Shared commit tail for base-swap and delta-append commits:
+    def _finalize_commit(self, meta: dict, seq: int, before_refs: set[str]) -> None:
+        """The commit tail of ``_commit``, after its sequence check:
         advance the sequence, RETIRE generations that lost their last
-        reference (snapshot retention), atomically swap the manifest,
-        freeze it into history, then GC.
-
-        ``expect_base_seq``: optimistic-concurrency re-check performed
-        IMMEDIATELY before the atomic swap — aborts with
-        ``ConcurrentWriteError`` if the on-disk manifest has advanced past
-        this sequence (used by the metadata-flip commits, whose staged
-        ``meta`` would otherwise silently clobber an interleaved commit)."""
+        reference — they are physically deleted only after
+        ``retain_generations`` further commits (snapshot retention), so
+        readers pinned to a recent manifest stay valid — atomically swap
+        the manifest, freeze it into history, then GC. A partially
+        superseded generation keeps its dead bucket dirs until it fully
+        retires — bounded dead space, reclaimed by later commits or
+        compact()."""
         meta["commit_seq"] = seq
         retired = meta.setdefault("retired", {})
         for g in before_refs - self._referenced_gens(meta):
@@ -1860,14 +1842,6 @@ class HashBucketParquetTable:
                 del stats[g]
             if not stats:
                 meta.pop("stats", None)
-        if expect_base_seq is not None:
-            on_disk = int(self._meta().get("commit_seq", 0))
-            if on_disk != expect_base_seq:
-                raise ConcurrentWriteError(
-                    f"a commit landed during a metadata flip (manifest at "
-                    f"{on_disk}, expected {expect_base_seq}) — re-run "
-                    "against the new table state"
-                )
         self._write_meta(meta)  # ← ATOMIC COMMIT POINT
         # manifest history: one frozen manifest per commit (time travel /
         # version diff); readable while its generations survive retention
@@ -1932,7 +1906,6 @@ class HashBucketParquetTable:
         every epoch (the reason the table is MOR in the first place)."""
         self._check_writable()
         meta = self._meta()
-        base_seq = int(meta.get("commit_seq", 0))
         crowded = [
             int(b)
             for b, entries in meta.get("deltas", {}).items()
@@ -1941,16 +1914,22 @@ class HashBucketParquetTable:
         if not crowded:
             return []
         crowded = sorted(crowded)
-        # optimistic-concurrency guarded like any commit: a concurrent
-        # upsert wins and this maintenance rewrite aborts, never the reverse
+        self._rewrite_buckets(meta, crowded)
+        return crowded
+
+    def _rewrite_buckets(self, meta: dict, buckets: list[int]) -> None:
+        """The maintenance rewrite of ``compact`` and ``compact_deltas``:
+        each bucket's merged rows (outstanding MOR deltas fold in) become
+        one fresh base generation. Guarded like any commit against
+        ``meta``'s sequence: a concurrent upsert wins and this rewrite
+        aborts, never the reverse."""
         self._commit_generation(
-            self._read_merged_raw(buckets=crowded, meta=meta).withColumn(
+            self._read_merged_raw(buckets=buckets, meta=meta).withColumn(
                 "_bucket", self._bucket_of(meta)
             ),
-            crowded,
-            expected_seq=base_seq,
+            buckets,
+            expected_seq=int(meta.get("commit_seq", 0)),
         )
-        return crowded
 
     #: event-control columns that never belong to the table schema
     _CONTROL_COLS = ("op", "event_seq", "epoch")
@@ -2025,23 +2004,13 @@ class HashBucketParquetTable:
         is unchanged (idempotent); returns the compacted bucket ids."""
         self._check_writable()
         meta = self._meta()
-        base_seq = int(meta.get("commit_seq", 0))
         bmap = meta.get("buckets", {})
         crowded = [
             int(b) for b in bmap if len(self._part_files(int(b))) > max_files_per_bucket
         ]
         if not crowded:
             return []
-        # optimistic-concurrency guarded like any commit: a concurrent
-        # upsert wins and this maintenance rewrite aborts, never the reverse
-        # (merged read: compacting a bucket also folds its MOR deltas)
-        self._commit_generation(
-            self._read_merged_raw(buckets=crowded, meta=meta).withColumn(
-                "_bucket", self._bucket_of(meta)
-            ),
-            crowded,
-            expected_seq=base_seq,
-        )
+        self._rewrite_buckets(meta, crowded)
         return crowded
 
     def rebucket(self, new_n_buckets: int, expected_seq: int | None = None) -> None:
@@ -2076,7 +2045,7 @@ class HashBucketParquetTable:
             touched=[],
             expected_seq=expected_seq,
             meta_updates={"n_buckets": new_n_buckets},
-            full_replace=True,
+            mode="full_replace",
         )
 
     def _part_files(self, bucket: int) -> set[str]:
@@ -2093,8 +2062,8 @@ class StagedUpsert:
 
     Lifecycle: ``read()`` any number of times (the audit), then exactly
     one of ``publish()`` / ``abandon()``. ``gen is None`` marks an empty
-    change set — publish is then a recorded no-op, matching ``upsert``'s
-    empty-set short-circuit."""
+    change set or an empty MOR delta — publish is then a recorded no-op.
+    ``mode`` is the table's write mode at staging time."""
 
     table: HashBucketParquetTable
     gen: str | None
@@ -2106,36 +2075,17 @@ class StagedUpsert:
     done: str | None = None  # "published" | "abandoned"
 
     def candidate_meta(self) -> dict:
-        """The manifest AS IF this staging were committed — derived from
-        the frozen base manifest, so the audit always sees one coherent
-        snapshot even while other writers race."""
+        """The manifest AS IF this staging were committed — the commit's
+        own ``_apply_generation`` run on a copy of the frozen base
+        manifest, so the audit always sees one coherent snapshot even
+        while other writers race."""
         import copy
 
         m = copy.deepcopy(self.base_meta)
-        if self.gen is None:
-            return m
-        if self.mode != "mor" and not self.written:
-            # CoW staging whose merge EMPTIED every touched bucket (e.g.
-            # a staged full purge): no files, but the candidate manifest
-            # must still drop the buckets — fall through to the pop loop
-            pass
-        elif not self.written:
-            return m  # MOR: empty delta = no changes
-        if self.mode == "mor":
-            dmap = m.setdefault("deltas", {})
-            for b in sorted(self.written):
-                dmap.setdefault(str(b), []).append(
-                    {"gen": self.gen, "seq": self.expected_seq + 1}
-                )
-        else:
-            bmap = m.setdefault("buckets", {})
-            dmap = m.setdefault("deltas", {})
-            for b in self.touched:
-                if b in self.written:
-                    bmap[str(b)] = self.gen
-                else:
-                    bmap.pop(str(b), None)  # bucket emptied by the staging
-                dmap.pop(str(b), None)  # CoW rewrite supersedes deltas
+        if self.gen is not None:
+            _apply_generation(
+                m, self.gen, self.written, self.touched, self.mode, self.expected_seq + 1
+            )
         return m
 
     def read(self, buckets=None) -> DataFrame:
@@ -2152,25 +2102,14 @@ class StagedUpsert:
         landed since staging."""
         self._check_open("publish")
         t = self.table
-        if self.gen is None:
-            self.done = "published"
-            return
         try:
-            if self.mode == "mor":
-                if not self.written:
-                    # MOR with an empty delta frame: nothing changed
-                    t.fs.remove_dir(os.path.join(t.data_path, self.gen))
-                    self.done = "published"
-                    return
-                t._commit_delta(self.gen, self.written, self.expected_seq)
-            else:
-                # NOTE written may be EMPTY here: a CoW merge that emptied
-                # every touched bucket still must commit (the manifest pops
-                # those buckets) — _apply_staged handles written=∅ by popping
+            if self.gen is not None:
                 t._apply_staged(
-                    self.gen, self.written, self.touched, expected_seq=self.expected_seq
+                    self.gen, self.written, self.touched, self.expected_seq, mode=self.mode
                 )
                 if not self.written:
+                    # a CoW merge that emptied every touched bucket: the
+                    # commit popped them, and the staging holds no file
                     t.fs.remove_dir(os.path.join(t.data_path, self.gen))
         except BaseException:
             # TERMINAL: the failure may have landed AFTER the atomic

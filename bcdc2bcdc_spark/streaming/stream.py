@@ -66,16 +66,6 @@ class StreamingTailer:
         )
         q.awaitTermination()
 
-    def start_continuous(self, processing_time: str = "10 seconds"):
-        """Long-running tail (micro-batch every trigger interval)."""
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
 
 def streaming_lineage(
     events: DataFrame,

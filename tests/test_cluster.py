@@ -282,25 +282,16 @@ def test_zorder_real_rowgroup_stats_prune(spark, tmp_path):
     assert admit / md.num_row_groups < 0.5
 
 
-def test_cluster_strategy_persisted_and_flippable(spark, tmp_path):
-    """cluster_strategy follows the same persisted-commit contract as
-    cluster_cols: a fresh ctor-less handle resolves it, the flip is a
-    real commit, invalid values are rejected."""
-    t = _mk_grid_table(spark, tmp_path, "t", "zorder")
+def test_cluster_strategy_persisted(spark, tmp_path):
+    """cluster_strategy seeds init() and is persisted: a fresh ctor-less
+    handle resolves it and writes its next generation Z-ordered, not in
+    its own default layout. An unknown strategy is rejected at init."""
+    _mk_grid_table(spark, tmp_path, "t", "zorder")
     t2 = HashBucketParquetTable(
         spark, str(tmp_path / "t"), key_cols=("repo", "path"), n_buckets=2,
         compare_cols=("x", "y"),
     )
     assert t2._cluster_strategy_resolved() == "zorder"
-    seq = t2.commit_seq()
-    t2.set_cluster_strategy("lexicographic")
-    assert t2.commit_seq() == seq + 1
-    assert t2._cluster_strategy_resolved() == "lexicographic"
-    t2.set_cluster_strategy("lexicographic")  # no-op flip: no commit
-    assert t2.commit_seq() == seq + 1
-    with pytest.raises(ValueError, match="cluster_strategy"):
-        t2.set_cluster_strategy("hilbert")
-    # post-flip generations are lexicographic again: x fully sorted
     before = set(_gen_files(t2))
     t2.upsert(
         _grid_df(spark, 512).withColumn("op", F.lit("UPDATE")).withColumn(
@@ -309,4 +300,8 @@ def test_cluster_strategy_persisted_and_flippable(spark, tmp_path):
     )
     new = [f for f in _gen_files(t2) if f not in before]
     assert new
-    _assert_sorted_within_files(new, "x")
+    y, total = _chunk_overlaps(new, "y", "08", "15")
+    assert y / total < 0.5, f"not Z-ordered: {y}/{total}"
+    with pytest.raises(ValueError, match="cluster_strategy"):
+        _mk_grid_table(spark, tmp_path, "bad", "hilbert")
+    assert not HashBucketParquetTable(spark, str(tmp_path / "bad")).exists()

@@ -5,6 +5,7 @@ kill-and-resume, lineage invariants, full-log replay convergence."""
 import glob
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from bcdc2bcdc_spark.operators.diff import datasets_equal
 from bcdc2bcdc_spark.operators.lww import lww_dedup
 from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
 from bcdc2bcdc_spark.plans.pipeline import CDCPipeline
+from bcdc2bcdc_spark.sources.fs import LocalFS
 from bcdc2bcdc_spark.sources.lake import (
     HashBucketParquetTable,
     ProtectedTableError,
@@ -89,14 +91,18 @@ def _backdate_tree(root, secs):
         os.utime(r, (old, old))
 
 
-def test_concurrent_upsert_loses_cleanly(spark, tmp_table):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
     """Optimistic concurrency: a writer whose base read predates another
     writer's commit ABORTS at its own commit (ConcurrentWriteError) instead
     of merging against the stale manifest and silently dropping the
-    winner's rows; the winner's state survives and the loser's staged
-    generation is swept at the next commit."""
+    winner's rows; the winner's manifest survives untouched and the
+    loser's staged generation is swept at the next commit."""
     from bcdc2bcdc_spark.sources.lake import ConcurrentWriteError
 
+    tmp_table = HashBucketParquetTable(
+        spark, str(tmp_path / "lake"), n_buckets=8, write_mode=mode
+    )
     base = canonicalize_snapshot(gen_repos(spark, n_keys=200, seed=13))
     tmp_table.init(base)
 
@@ -111,11 +117,13 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_table):
 
     winner = HashBucketParquetTable(spark, tmp_table.path, n_buckets=8)
     orig_stage = tmp_table._write_generation
+    won = []
 
     def _interleaved_stage(df):
         out = orig_stage(df)
         # the OTHER writer commits while this writer is still staging
         winner.upsert(_change("winner-content", 2))
+        won.append(winner._meta())
         return out
 
     tmp_table._write_generation = _interleaved_stage
@@ -125,6 +133,7 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_table):
     finally:
         tmp_table._write_generation = orig_stage
 
+    assert tmp_table._meta() == won[0]
     contents = {r["content"] for r in tmp_table.read().collect()}
     assert "winner-content" in contents and "loser-content" not in contents
     # the loser's orphaned staging is swept by the next successful commit
@@ -132,11 +141,126 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_table):
     for d in tmp_table.fs.list_subdirs(tmp_table.data_path):
         _backdate_tree(os.path.join(tmp_table.data_path, d), 2 * tmp_table.staging_grace_s)
     tmp_table.upsert(_change("after-content", 3))
-    live = set(tmp_table._meta()["buckets"].values()) | set(
+    live = tmp_table._referenced_gens(tmp_table._meta()) | set(
         tmp_table._meta().get("retired", {})
     )
     on_disk = set(tmp_table.fs.list_subdirs(tmp_table.data_path))
     assert on_disk <= live
+
+
+class _RacingFS(LocalFS):
+    """A metadata FS that runs ``race`` once, right after the next
+    manifest read it serves — another writer committing inside that
+    window."""
+
+    race = None
+
+    def read_json(self, path):
+        out = super().read_json(path)
+        if self.race is not None and path.endswith("_table.json"):
+            race, self.race = self.race, None
+            race()
+        return out
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda t: t.set_stats_cols(["lang"]),
+        lambda t: t.set_cluster_cols(["content"]),
+        lambda t: t.set_write_mode("mor"),
+        lambda t: t.restore(1),
+    ],
+    ids=["set_stats_cols", "set_cluster_cols", "set_write_mode", "restore"],
+)
+def test_metadata_commit_loses_cleanly(spark, tmp_path, op):
+    """Metadata-only commits carry the upserts' guard: a second handle
+    committing right after the op's first manifest read makes the op
+    raise ConcurrentWriteError, and the winner's manifest is left as it
+    wrote it."""
+    from bcdc2bcdc_spark.sources.lake import ConcurrentWriteError
+
+    fs = _RacingFS()
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4, fs=fs)
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
+    other = HashBucketParquetTable(spark, t.path, n_buckets=4)
+
+    def _change(content):
+        return (
+            other.read()
+            .limit(1)
+            .withColumn("op", F.lit("UPDATE"))
+            .withColumn("content", F.lit(content))
+        )
+
+    other.upsert(_change("second"))  # seq 2, so restore(1) has work
+    won = []
+
+    def _race():
+        other.upsert(_change("winner"))
+        won.append(other._meta())
+
+    fs.race = _race
+    with pytest.raises(ConcurrentWriteError):
+        op(t)
+    assert won and t._meta() == won[0]
+    assert "winner" in {r["content"] for r in t.read().collect()}
+
+
+def _jobs_in_group(sc, fn):
+    """Run ``fn`` under a fresh job group; return the group's job ids."""
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_metadata_commits_launch_no_job(spark, tmp_path):
+    """restore and set_stats_cols are manifest-only commits: 0 Spark jobs."""
+    sc = spark.sparkContext
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
+    t.upsert(t.read().limit(1).withColumn("op", F.lit("DELETE")))
+    assert _jobs_in_group(sc, lambda: t.restore(1)) == []
+    assert _jobs_in_group(sc, lambda: t.set_stats_cols(["lang"])) == []
+    assert t.commit_seq() == 4
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_upsert_with_touched_runs_jobs_only_in_staging_write(spark, tmp_path, mode):
+    """With ``touched`` given, every Spark job of an upsert belongs to its
+    staging write: no discovery, plan-build or commit job."""
+    sc = spark.sparkContext
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "lake"), n_buckets=4, write_mode=mode
+    )
+    base = canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8))
+    t.init(base)
+    row = base.orderBy("repo", "path").first()
+    changes = spark.createDataFrame(
+        [(row["repo"], row["path"], "c9", row["lang"], "budgeted", "UPDATE")],
+        "repo string, path string, commit string, lang string, content string, op string",
+    )
+    touched = [r[0] for r in changes.select(t.bucket_expr()).collect()]
+    staging = f"staging-{uuid.uuid4().hex}"
+    orig = t._write_generation
+
+    def _write_generation(df):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(staging, "staging write")
+        try:
+            return orig(df)
+        finally:
+            sc.setJobGroup(outer, "budget")
+
+    t._write_generation = _write_generation
+    assert _jobs_in_group(sc, lambda: t.upsert(changes, touched=touched)) == []
+    assert sc.statusTracker().getJobIdsForGroup(staging)
+    assert t.read().where(F.col("content") == "budgeted").count() == 1
 
 
 def test_write_guard(spark, tmp_path):

@@ -5,7 +5,7 @@ the design says broadcast, and shuffle-free where it claims zero
 shuffles."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from bcdc2bcdc_spark.functions.sampling import split_column, stratified_sample
 from bcdc2bcdc_spark.operators.decontam import contamination_hits
@@ -120,7 +120,9 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
     """The one place the Arrow digest UDF runs is the epoch change set
     ``CDCPipeline`` upserts; a replica sync and a predicate DELETE commit
     with JVM digests only (the perf split between write and sync rests on
-    it)."""
+    it). On an evolved table, whose stored digests lag the compare set,
+    the touched base rows are re-digested on the JVM too: the staged plan
+    still holds exactly one Arrow digest, the change set's."""
     from bcdc2bcdc_spark.generator import gen_events
     from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
     from bcdc2bcdc_spark.plans.pipeline import CDCPipeline
@@ -162,3 +164,14 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
     lang = src.read().where("lang IS NOT NULL").first()["lang"]
     assert src.delete_where(F.col("lang") == lang) > 0
     assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+
+    assert src.evolve(
+        T.StructType(src.data_schema().fields + [T.StructField("stars", T.LongType())])
+    )
+    assert src._meta()["digest_cols"] != src.resolved_compare_cols()
+    plans.clear()
+    ev2 = gen_events(spark, n_events=200, n_keys=50, n_epochs=1, seed=6).drop("epoch")
+    CDCPipeline(table=src, checkpoints=CheckpointStore(str(tmp_path / "ck"))).apply_epoch(
+        ev2, 1
+    )
+    assert len(plans) == 1 and plans[0].count("ArrowEvalPython") == 1

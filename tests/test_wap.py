@@ -91,8 +91,9 @@ def test_abandon_leaves_no_trace(spark, tmp_path):
     assert datasets_equal(t.read(), _expected_after(spark, t, changes))
 
 
-def test_concurrent_commit_defeats_publish(spark, tmp_path):
-    t = _table(spark, tmp_path)
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_concurrent_commit_defeats_publish(spark, tmp_path, mode):
+    t = _table(spark, tmp_path, mode)
     changes, rows = _changes(spark, t)
     staged = t.stage_upsert(changes)
     # another writer lands a commit between staging and publish
@@ -101,9 +102,11 @@ def test_concurrent_commit_defeats_publish(spark, tmp_path):
         "repo string, path string, commit string, lang string, content string, op string",
     )
     t.upsert(other)
+    won = t._meta()
     with pytest.raises(ConcurrentWriteError):
         staged.publish()
     # the winner's state survives untouched
+    assert t._meta() == won
     assert t.read().where(F.col("content") == "winner").count() == 1
 
 
