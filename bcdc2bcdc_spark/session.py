@@ -44,6 +44,17 @@ _DEFAULT_CONF = {
     # halves the py4j commands of a small commit's plan building. Pass it
     # as "true" through ``extra_conf`` to get Python call sites in errors.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Python workers fork from the engine's daemon (``_pydaemon``), not
+    # ``pyspark.daemon``. Every Python task (the Arrow digest, the
+    # mapInArrow / mapInPandas boundaries, streaming state) calls
+    # ``importlib.invalidate_caches()``, and stock workers then re-read the
+    # directory of every zip on their path — pyspark.zip and the spark-core
+    # jar, tens of ms to 0.2 s per task, for archives that never change.
+    # The engine's daemon re-reads an archive only when its (mtime_ns,
+    # size) changed since the last read, or when the stat fails. Pass
+    # ``{"spark.python.daemon.module": "pyspark.daemon"}`` through
+    # ``extra_conf`` to run the stock daemon.
+    "spark.python.daemon.module": "bcdc2bcdc_spark._pydaemon",
     # Kept for user overwrite-mode writes; the lake backend itself now
     # commits via immutable generation dirs + an atomic manifest swap and
     # no longer relies on dynamic partition overwrite.
@@ -98,6 +109,15 @@ def get_spark(
         conf.setdefault("spark.sql.shuffle.partitions", "32")
     if extra_conf:
         conf.update(extra_conf)
+    # workers import this package (the daemon module, pickled UDFs) with
+    # the driver's cwd as their only guaranteed path entry: put the
+    # package's parent on their path too (Spark appends the inherited
+    # PYTHONPATH after it)
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = (
+        f"{worker_path}{os.pathsep}{pkg_parent}" if worker_path else pkg_parent
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

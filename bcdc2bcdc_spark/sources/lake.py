@@ -439,7 +439,8 @@ class HashBucketParquetTable:
     #: path changes either way.
     cluster_strategy: str = "lexicographic"
     #: per-bucket column bounds computed for generations this handle wrote
-    #: but has not yet committed (WAP stagings park here until publish).
+    #: but has not yet committed (WAP stagings park here until publish; a
+    #: lost commit race or ``abandon()`` drops them).
     _pending_gen_stats: dict = field(
         default_factory=dict, init=False, repr=False, compare=False
     )
@@ -1785,7 +1786,13 @@ class HashBucketParquetTable:
             _apply_generation(meta, gen, written, touched, mode, seq)
             meta.update(meta_updates or {})
 
-        self._commit(expected_seq, stage_in)
+        try:
+            self._commit(expected_seq, stage_in)
+        except ConcurrentWriteError:
+            # raised before any manifest write: ``gen`` stays unreferenced,
+            # so its bounds will never be committed
+            self._pending_gen_stats.pop(gen, None)
+            raise
 
     def _commit(self, expected_seq: int, mutate) -> int:
         """The one commit head: every manifest change goes through here.

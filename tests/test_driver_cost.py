@@ -5,10 +5,12 @@ building on every commit, before any Spark job runs."""
 
 import threading
 
+import pandas as pd
 import py4j.clientserver
 import pytest
 from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bcdc2bcdc_spark.functions.canonicalize import canonicalize_snapshot
 from bcdc2bcdc_spark.generator import gen_repos
@@ -22,6 +24,23 @@ FEED_PLAN_BUDGET = 243  # measured: 195
 def test_get_spark_turns_off_dataframe_debugging(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+
+
+def test_workers_run_the_engine_daemon(spark):
+    """Python workers fork from the engine's daemon, so their zipimporters
+    carry its stat-checked ``invalidate_caches`` on every task — not just
+    the first one a fresh worker runs."""
+    assert spark.conf.get("spark.python.daemon.module") == "bcdc2bcdc_spark._pydaemon"
+
+    @F.pandas_udf(T.StringType())
+    def patched_by(s: pd.Series) -> pd.Series:
+        import zipimport
+
+        return pd.Series([zipimport.zipimporter.invalidate_caches.__module__] * len(s))
+
+    one = spark.range(1, numPartitions=1)
+    for _ in range(3):
+        assert one.select(patched_by("id")).first()[0] == "bcdc2bcdc_spark._pydaemon"
 
 
 @pytest.fixture

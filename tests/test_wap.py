@@ -110,6 +110,32 @@ def test_concurrent_commit_defeats_publish(spark, tmp_path, mode):
     assert t.read().where(F.col("content") == "winner").count() == 1
 
 
+def test_lost_publish_races_leave_no_pending_bounds(spark, tmp_path):
+    """A publish that loses the commit race wrote no manifest, so the
+    column bounds its handle collected for the staged generation go with
+    it: nothing piles up on a handle that keeps losing."""
+    path = str(tmp_path / "lake_stats")
+    t = HashBucketParquetTable(spark, path, n_buckets=8, stats_cols=("lang",))
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=200)))
+    winner = HashBucketParquetTable(spark, path, n_buckets=8, stats_cols=("lang",))
+    changes, rows = _changes(spark, t)
+    for i in range(3):
+        staged = t.stage_upsert(changes)
+        assert staged.gen in t._pending_gen_stats
+        winner.upsert(
+            spark.createDataFrame(
+                [(rows[0]["repo"], rows[0]["path"], f"c-{i}", "rust", f"w{i}", OP_UPDATE)],
+                "repo string, path string, commit string, lang string, content string, op string",
+            )
+        )
+        won = t._meta()
+        with pytest.raises(ConcurrentWriteError):
+            staged.publish()
+        assert t._meta() == won  # manifest and its stats untouched
+    assert won["stats"]
+    assert t._pending_gen_stats == {}
+
+
 def test_empty_staging_and_lifecycle(spark, tmp_path):
     t = _table(spark, tmp_path)
     empty = spark.createDataFrame(
