@@ -3835,9 +3835,9 @@ def q_lake_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/lake.py lookup): fetch the CURRENT rows for a key set —
     including keys that were deleted or never existed (absent from the
     result) — reading only the buckets those keys hash to (manifest
-    pruning) with key-sorted row-group stats inside and a broadcast
-    semi-join on top. Must equal the SQL replay state filtered to the
-    same key predicate."""
+    pruning), every row group of them, under a broadcast semi-join.
+    Must equal the SQL replay state filtered to the same key
+    predicate."""
     t = _feed_lake(spark, sf_dir)
     keys = (
         cdc_events(spark, sf_dir)

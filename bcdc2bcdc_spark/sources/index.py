@@ -25,8 +25,8 @@ Probe path at 100 TB (``lookup``)::
     alt values ──hash──▶ index buckets (k/n_buckets of the INDEX, which
       is itself ~1/1000th of the base table: keys only, no payload)
         ──semi-join──▶ primary keys
-          ──base.lookup()──▶ base buckets (manifest-pruned, key-sorted
-            row groups, broadcast semi-join)
+          ──base.lookup()──▶ base buckets (manifest-pruned, broadcast
+            semi-join)
 
     Two bounded point reads; the base table's payload columns are read
     only for the final matching buckets.

@@ -62,7 +62,9 @@ import os
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.types import _make_type_verifier
 
 from bcdc2bcdc_spark.functions.digest import with_row_digest
 from bcdc2bcdc_spark.operators.apply import apply_changes
@@ -409,16 +411,16 @@ class HashBucketParquetTable:
     stats_cols: tuple[str, ...] | None = None
     #: columns each generation's files are SORTED by within their bucket
     #: (Delta ``OPTIMIZE ZORDER BY`` / Iceberg sort-order analog, single
-    #: dimension). Default None = sort by key_cols (point-lookup row-group
-    #: pruning). Declaring cluster_cols makes parquet row-group min/max
-    #: stats SELECTIVE for range/equality predicates on those columns —
+    #: dimension). Default None = sort by key_cols. Declaring
+    #: cluster_cols makes parquet row-group min/max stats SELECTIVE for
+    #: range/equality predicates on those columns —
     #: the residual filter Catalyst pushes into the scan then skips row
     #: groups inside every bucket, which is where pruning has to come from
     #: for non-bucket columns (a hash bucket sees a uniform sample, so
     #: per-BUCKET bounds on an uncorrelated column never prune; per-ROW-
     #: GROUP bounds on a sorted column always do). Key columns are
-    #: appended as tiebreak, but lookups lose their leading-key row-group
-    #: locality — the same tradeoff ZORDER makes. Persisted like
+    #: appended as tiebreak, so rows lose their leading-key order — the
+    #: same tradeoff ZORDER makes. Persisted like
     #: stats_cols; flip with ``set_cluster_cols`` (affects generations
     #: written after the flip; rewrite everything via ``rebucket`` to
     #: re-cluster history).
@@ -524,9 +526,10 @@ class HashBucketParquetTable:
         # sortWithinPartitions: rows inside each bucket file are ordered by
         # the cluster columns (key_cols when none are declared, keys as
         # tiebreak otherwise), so parquet row-group min/max stats on those
-        # columns become selective — point lookups / clustered-range scans
-        # skip row groups inside the buckets they read (free at write
-        # time, the sort rides the same shuffle)
+        # columns become selective — a filter Catalyst pushes into the
+        # scan (a clustered-range read_where) skips row groups inside the
+        # buckets it reads (free at write time, the sort rides the same
+        # shuffle). A lookup's semi-join pushes no such filter.
         ccols = self._cluster_cols_resolved()
         present = [c for c in ccols if c in df_with_bucket.columns]
         tiebreak = [k for k in self.key_cols if k not in ccols]
@@ -1036,27 +1039,42 @@ class HashBucketParquetTable:
 
     def lookup(self, keys: DataFrame, buckets: Sequence[int] | None = None) -> DataFrame:
         """Point lookup (S5): the current rows for a (small) key set,
-        reading ONLY the buckets those keys hash to. The scan is pruned
-        three ways at 100 TB: manifest → k/n_buckets of the table's
-        directories; parquet row-group min/max on the key columns (rows
-        are written key-sorted, see ``_write_generation``); and a
-        broadcast semi-join keeps only the requested keys. ``keys`` must
-        be a DataFrame of exactly the key columns; the touched-bucket
-        set is collected driver-side — bounded by n_buckets — like every
+        reading ONLY the buckets those keys hash to. Two prunings: the
+        manifest keeps k/n_buckets of the table's directories, and a
+        broadcast ``left_semi`` join keeps only the requested keys. The
+        join pushes no filter into the scan (the plan's ``PushedFilters``
+        are the key columns' ``IsNotNull`` only), so every row group of
+        the read buckets is scanned. ``keys`` must be a DataFrame of
+        exactly the key columns. Duplicate keys return each row once,
+        and a key with a NULL part matches nothing; the semi-join's
+        build side is the raw key projection, so a caller holding a key
+        frame with many duplicate rows dedups it first.
+
+        Bucket discovery: when the keys' bucket projection optimizes to
+        a ``LocalRelation`` (an inline ``VALUES`` list, a pandas-built
+        frame), Catalyst folds the hash at plan time and the ``collect``
+        runs no job; any other key frame runs one ``distinct`` collect,
+        whose driver transfer is bounded by n_buckets like every
         upsert's. ``buckets`` may pass a precomputed (superset of the)
         bucket-id set — callers that already scan the key set (e.g. the
-        join-view refresh's one bookkeeping job) then skip this method's
-        own discovery job (guide §1/§2: fewer serial driver-side jobs)."""
+        join-view refresh's one bookkeeping job) then skip discovery."""
         meta = self._meta()
         if buckets is None:
-            buckets = [
-                r[0] for r in keys.select(self._bucket_of(meta)).distinct().collect()
-            ]
+            proj = keys.select(self._bucket_of(meta))
+            # not ``isLocal()``: it is False for a VALUES frame. The
+            # collect reuses the plan this check optimized.
+            plan = proj._jdf.queryExecution().optimizedPlan()
+            if plan.getClass().getSimpleName() == "LocalRelation":
+                buckets = {r[0] for r in proj.collect()}
+            else:
+                buckets = [r[0] for r in proj.distinct().collect()]
+        kc = list(self.key_cols)
         base = self._read_merged_raw(buckets=sorted(set(buckets)), meta=meta)
-        return base.join(
-            F.broadcast(keys.select(*self.key_cols).distinct()),
-            list(self.key_cols),
-        ).drop("_digest")
+        # key columns first, then the payload in table order
+        rest = [c for c in base.columns if c not in kc and c != "_digest"]
+        return base.join(F.broadcast(keys.select(*kc)), kc, "left_semi").select(
+            *kc, *rest
+        )
 
     #: hash pruning enumerates the cross product of per-bucket-column
     #: candidate value sets; past this many tuples the IN-list is no longer
@@ -1070,8 +1088,9 @@ class HashBucketParquetTable:
         when a conjunction pins every bucket column to a finite candidate
         set, the only directories that can hold matching rows are the
         hashes of the candidate tuples. Hashing goes through the SAME
-        ``_bucket_expr`` over a literal DataFrame (one driver-side job over
-        O(candidates) rows), so Python never re-implements xxhash64.
+        ``_bucket_expr`` over a driver-built literal frame (no Spark job
+        when it is a ``LocalRelation``; one over O(candidates) rows when
+        it is not), so Python never re-implements xxhash64.
         Returns None when the predicates don't pin all bucket columns."""
         bcols = self._bucket_cols_resolved(meta)
         cand: dict[str, set] = {}
@@ -1101,11 +1120,26 @@ class HashBucketParquetTable:
         types = {f.name: f.dataType for f in T.StructType.fromJson(meta["schema"]).fields}
         schema = T.StructType([T.StructField(c, types[c], True) for c in bcols])
         try:
-            probe = self.spark.createDataFrame(tuples, schema).withColumn(
-                "_bucket", _bucket_expr(bcols, self._n_buckets(meta))
+            # the check a row-backed createDataFrame makes: Arrow would
+            # coerce some mismatches (7.0 into a bigint column) it refuses
+            verify = _make_type_verifier(schema)
+            for t in tuples:
+                verify(t)
+            # a pandas frame goes through Arrow into a LocalRelation, so
+            # the hash folds at plan time and the collect runs no job.
+            # Arrow reads a naive datetime in the session time zone where
+            # the row path reads the host's, so TIMESTAMP columns keep the
+            # row path; so does any frame Arrow cannot convert (its
+            # fallback).
+            rows = (
+                tuples
+                if any(isinstance(types[c], T.TimestampType) for c in bcols)
+                else pd.DataFrame(tuples, columns=bcols)
             )
+            probe = self.spark.createDataFrame(rows, schema)
             return {
-                int(r["_bucket"]) for r in probe.select("_bucket").distinct().collect()
+                int(r[0])
+                for r in probe.select(_bucket_expr(bcols, self._n_buckets(meta))).collect()
             }
         except Exception:
             # a candidate value whose Python type can't verify against the

@@ -5,7 +5,6 @@ kill-and-resume, lineage invariants, full-log replay convergence."""
 import glob
 import os
 import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +23,7 @@ from bcdc2bcdc_spark.sources.lake import (
     iceberg_merge_sql,
 )
 
+from tests.conftest import count_jobs
 from tests.oracle import content_sha_index, replay
 
 
@@ -207,26 +207,14 @@ def test_metadata_commit_loses_cleanly(spark, tmp_path, op):
     assert "winner" in {r["content"] for r in t.read().collect()}
 
 
-def _jobs_in_group(sc, fn):
-    """Run ``fn`` under a fresh job group; return the group's job ids."""
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "budget")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return sc.statusTracker().getJobIdsForGroup(group)
-
-
 def test_metadata_commits_launch_no_job(spark, tmp_path):
     """restore and set_stats_cols are manifest-only commits: 0 Spark jobs."""
     sc = spark.sparkContext
     t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
     t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
     t.upsert(t.read().limit(1).withColumn("op", F.lit("DELETE")))
-    assert _jobs_in_group(sc, lambda: t.restore(1)) == []
-    assert _jobs_in_group(sc, lambda: t.set_stats_cols(["lang"])) == []
+    assert count_jobs(sc, lambda: t.restore(1))[0] == 0
+    assert count_jobs(sc, lambda: t.set_stats_cols(["lang"]))[0] == 0
     assert t.commit_seq() == 4
 
 
@@ -246,20 +234,17 @@ def test_upsert_with_touched_runs_jobs_only_in_staging_write(spark, tmp_path, mo
         "repo string, path string, commit string, lang string, content string, op string",
     )
     touched = [r[0] for r in changes.select(t.bucket_expr()).collect()]
-    staging = f"staging-{uuid.uuid4().hex}"
+    staging = []
     orig = t._write_generation
 
     def _write_generation(df):
-        outer = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setJobGroup(staging, "staging write")
-        try:
-            return orig(df)
-        finally:
-            sc.setJobGroup(outer, "budget")
+        jobs, out = count_jobs(sc, lambda: orig(df))
+        staging.append(jobs)
+        return out
 
     t._write_generation = _write_generation
-    assert _jobs_in_group(sc, lambda: t.upsert(changes, touched=touched)) == []
-    assert sc.statusTracker().getJobIdsForGroup(staging)
+    assert count_jobs(sc, lambda: t.upsert(changes, touched=touched))[0] == 0
+    assert sum(staging)
     assert t.read().where(F.col("content") == "budgeted").count() == 1
 
 

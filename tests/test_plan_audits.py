@@ -175,3 +175,21 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
         ev2, 1
     )
     assert len(plans) == 1 and plans[0].count("ArrowEvalPython") == 1
+
+
+def test_inline_key_lookup_is_one_broadcast_semi_join(spark, tmp_path):
+    """A point lookup on an inline key list is a scan under one broadcast
+    semi-join: no shuffle and no aggregate to dedup the keys."""
+    from bcdc2bcdc_spark.functions.canonicalize import canonicalize_snapshot
+    from bcdc2bcdc_spark.generator import gen_repos
+    from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=50, seed=4)))
+    keys = spark.sql(
+        "SELECT * FROM VALUES ('org/repo_00', 'a'), ('org/repo_00', 'a') AS k(repo, path)"
+    )
+    plan = _plan(t.lookup(keys))
+    assert plan.count("BroadcastHashJoin") == 1 and "LeftSemi" in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange") == 1
+    assert "HashAggregate" not in plan

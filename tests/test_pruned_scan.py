@@ -9,15 +9,20 @@ dumps (/root/reference/bcdc2bcdc/CKANData.py:1010-1050); here the driver
 answers "which directories can hold matching rows" from manifest metadata
 before Spark plans the scan."""
 
+import datetime
+import time
+
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from bcdc2bcdc_spark.operators.diff import datasets_equal
 from bcdc2bcdc_spark.schema import OP_DELETE, OP_UPDATE
 from bcdc2bcdc_spark.sources.lake import (
     HashBucketParquetTable,
+    _bucket_expr,
     compile_predicates,
 )
+from tests.conftest import count_jobs
 
 N_BUCKETS = 8
 
@@ -84,6 +89,55 @@ def test_hash_pruning_exact_on_bucket_col(spark, table):
     pruned_in = table.prune_buckets([("repo", "in", ["r3", "r5"])])
     assert expected in pruned_in and len(pruned_in) <= 2
     _assert_pruned_equals_full(table, [("repo", "in", ["r3", "r5"])])
+
+
+def _one_col_meta(name, dtype):
+    """A manifest's hashing fields for a table bucketed by one column."""
+    schema = T.StructType([T.StructField(name, dtype, True)])
+    return {"schema": schema.jsonValue(), "bucket_cols": [name], "n_buckets": N_BUCKETS}
+
+
+def test_hash_pruning_runs_no_job(spark, tmp_path):
+    """The candidate hash folds at plan time: pruning a predicate read on
+    the bucket column launches no Spark job. A candidate whose type does
+    not match the column prunes exactly as a row-backed literal frame
+    does: an int on a string column hashes as its string, and a float on
+    a bigint column, which that frame refuses, does not prune."""
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "t"), n_buckets=N_BUCKETS, bucket_cols=("repo",)
+    )
+    t.init(_clustered_df(spark, paths_per_repo=4))
+    sc = spark.sparkContext
+    jobs, pruned = count_jobs(sc, lambda: t.prune_buckets([("repo", "in", ["r3", "r5"])]))
+    assert jobs == 0 and 1 <= len(pruned) <= 2
+    assert count_jobs(sc, lambda: t.read_where([("repo", "=", "r3")]))[0] == 0
+    assert t.prune_buckets([("repo", "=", 7)]) == t.prune_buckets([("repo", "=", "7")])
+    meta = _one_col_meta("n", T.LongType())
+    assert t._hash_pruned_buckets([("n", "=", 7.0)], meta) is None
+    assert len(t._hash_pruned_buckets([("n", "=", 7)], meta)) == 1
+
+
+def test_hash_pruning_timestamp_in_host_time_zone(spark, tmp_path, monkeypatch):
+    """A naive datetime candidate hashes as the row-backed literal frame
+    reads it (host time zone), also when the host is not on the session's
+    UTC: the residual filter's literal reads it the same way."""
+    meta = _one_col_meta("ts", T.TimestampType())
+    schema = T.StructType.fromJson(meta["schema"])
+    t = HashBucketParquetTable(spark, str(tmp_path / "none"), n_buckets=N_BUCKETS)
+    when = [datetime.datetime(2020, 1, 2, h) for h in range(3)]
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        want = {
+            r[0]
+            for r in spark.createDataFrame([(w,) for w in when], schema)
+            .select(_bucket_expr(["ts"], N_BUCKETS))
+            .collect()
+        }
+        assert t._hash_pruned_buckets([("ts", "in", when)], meta) == want
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_hash_pruning_requires_all_bucket_cols_pinned(spark, tmp_path):

@@ -14,6 +14,7 @@ from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
 from bcdc2bcdc_spark.plans.replicate import TableReplicator
 from bcdc2bcdc_spark.schema import REPOS_SCHEMA
 from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+from tests.conftest import count_jobs
 
 
 def _rows(df):
@@ -161,33 +162,22 @@ def test_aligned_sync_launches_no_job_of_its_own(spark, tmp_path, src_table, mon
     """On a bucket-aligned CoW dst every job of a sync is dst's upsert: the
     touched buckets come from the src manifest diff, and the change count
     is observed on the staging write."""
-    import uuid
-
     sc = spark.sparkContext
     rep = _mk_replicator(spark, tmp_path, src_table, "budget")
-    sync_group, upsert_group = f"sync-{uuid.uuid4().hex}", f"upsert-{uuid.uuid4().hex}"
-    seen = {}
+    seen = {"upsert_jobs": 0}
     orig = rep.dst.upsert
 
     def upsert(feed, **kw):
         seen["touched"] = kw.get("touched")
-        sc.setJobGroup(upsert_group, "upsert")
-        try:
-            return orig(feed, **kw)
-        finally:
-            sc.setJobGroup(sync_group, "sync")
+        jobs, out = count_jobs(sc, lambda: orig(feed, **kw))
+        seen["upsert_jobs"] += jobs
+        return out
 
     monkeypatch.setattr(rep.dst, "upsert", upsert)
     want = src_table.read_changes(1, src_table.commit_seq()).count()
-    sc.setJobGroup(sync_group, "sync")
-    try:
-        res = rep.sync()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    assert tracker.getJobIdsForGroup(sync_group) == []
-    assert tracker.getJobIdsForGroup(upsert_group)
+    sync_jobs, res = count_jobs(sc, rep.sync)
+    assert sync_jobs == 0
+    assert seen["upsert_jobs"]
     assert seen["touched"] == src_table.changed_buckets(1, src_table.commit_seq())
     assert res["changes"] == want > 0
     assert _rows(rep.dst.read().select(*_PAYLOAD)) == _rows(
