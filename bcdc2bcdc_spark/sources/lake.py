@@ -62,9 +62,7 @@ import os
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.types import _make_type_verifier
 
 from bcdc2bcdc_spark.functions.digest import with_row_digest
 from bcdc2bcdc_spark.operators.apply import apply_changes
@@ -1050,24 +1048,15 @@ class HashBucketParquetTable:
         build side is the raw key projection, so a caller holding a key
         frame with many duplicate rows dedups it first.
 
-        Bucket discovery: when the keys' bucket projection optimizes to
-        a ``LocalRelation`` (an inline ``VALUES`` list, a pandas-built
-        frame), Catalyst folds the hash at plan time and the ``collect``
-        runs no job; any other key frame runs one ``distinct`` collect,
-        whose driver transfer is bounded by n_buckets like every
-        upsert's. ``buckets`` may pass a precomputed (superset of the)
-        bucket-id set — callers that already scan the key set (e.g. the
-        join-view refresh's one bookkeeping job) then skip discovery."""
+        Bucket discovery collects one bucket id per key row (the same
+        number of rows the broadcast ships); for an inline key list
+        Catalyst folds the hash at plan time and the collect runs no job.
+        ``buckets`` may pass a precomputed (superset of the) bucket-id
+        set — callers that already scan the key set (e.g. the join-view
+        refresh's one bookkeeping job) then skip discovery."""
         meta = self._meta()
         if buckets is None:
-            proj = keys.select(self._bucket_of(meta))
-            # not ``isLocal()``: it is False for a VALUES frame. The
-            # collect reuses the plan this check optimized.
-            plan = proj._jdf.queryExecution().optimizedPlan()
-            if plan.getClass().getSimpleName() == "LocalRelation":
-                buckets = {r[0] for r in proj.collect()}
-            else:
-                buckets = [r[0] for r in proj.distinct().collect()]
+            buckets = {r[0] for r in keys.select(self._bucket_of(meta)).collect()}
         kc = list(self.key_cols)
         base = self._read_merged_raw(buckets=sorted(set(buckets)), meta=meta)
         # key columns first, then the payload in table order
@@ -1088,9 +1077,8 @@ class HashBucketParquetTable:
         when a conjunction pins every bucket column to a finite candidate
         set, the only directories that can hold matching rows are the
         hashes of the candidate tuples. Hashing goes through the SAME
-        ``_bucket_expr`` over a driver-built literal frame (no Spark job
-        when it is a ``LocalRelation``; one over O(candidates) rows when
-        it is not), so Python never re-implements xxhash64.
+        ``_bucket_expr`` over a literal DataFrame (one driver-side job over
+        O(candidates) rows), so Python never re-implements xxhash64.
         Returns None when the predicates don't pin all bucket columns."""
         bcols = self._bucket_cols_resolved(meta)
         cand: dict[str, set] = {}
@@ -1120,23 +1108,7 @@ class HashBucketParquetTable:
         types = {f.name: f.dataType for f in T.StructType.fromJson(meta["schema"]).fields}
         schema = T.StructType([T.StructField(c, types[c], True) for c in bcols])
         try:
-            # the check a row-backed createDataFrame makes: Arrow would
-            # coerce some mismatches (7.0 into a bigint column) it refuses
-            verify = _make_type_verifier(schema)
-            for t in tuples:
-                verify(t)
-            # a pandas frame goes through Arrow into a LocalRelation, so
-            # the hash folds at plan time and the collect runs no job.
-            # Arrow reads a naive datetime in the session time zone where
-            # the row path reads the host's, so TIMESTAMP columns keep the
-            # row path; so does any frame Arrow cannot convert (its
-            # fallback).
-            rows = (
-                tuples
-                if any(isinstance(types[c], T.TimestampType) for c in bcols)
-                else pd.DataFrame(tuples, columns=bcols)
-            )
-            probe = self.spark.createDataFrame(rows, schema)
+            probe = self.spark.createDataFrame(tuples, schema)
             return {
                 int(r[0])
                 for r in probe.select(_bucket_expr(bcols, self._n_buckets(meta))).collect()

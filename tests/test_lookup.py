@@ -118,7 +118,7 @@ def test_inline_lookup_job_budget(spark, lake, tmp_path):
     """An inline key list's buckets fold at plan time: ``lookup`` runs no
     job, and its ``collect`` runs the broadcast and the scan (plus the
     merge's shuffle when a delta is outstanding). A key frame read from
-    files pays one ``distinct`` discovery on top."""
+    files pays one discovery job on top."""
     sc = spark.sparkContext
     scan = {"cow": 2, "mor": 3}[lake.write_mode]
     keys = _keys(lake, 4)
@@ -129,4 +129,4 @@ def test_inline_lookup_job_budget(spark, lake, tmp_path):
     _inline(spark, keys).write.parquet(str(tmp_path / "keys"))
     from_file = spark.read.parquet(str(tmp_path / "keys"))
     jobs, _ = count_jobs(sc, lambda: lake.lookup(from_file).collect())
-    assert jobs <= scan + 2
+    assert jobs == scan + 1
