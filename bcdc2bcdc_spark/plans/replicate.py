@@ -83,14 +83,14 @@ class TableReplicator:
         same ``bucket_scheme`` at ``to_seq`` as dst's and no ``transform``
         (which may rewrite the columns a bucket hashes). Otherwise — src
         rebucketed in the interval or to a different scheme than dst, or
-        a transform — the upsert discovers them with its own job, as for
-        any caller that does not know them. A bucket whose manifest entry
-        changed but whose feed rows net to nothing (e.g. a src commit that
-        rewrote it unchanged) is rewritten unchanged in dst: the price of
-        not scanning the feed ahead of the write. An interval in which no
-        bucket changed is provably empty: no upsert, no job, ``changes``
-        0. A dst without ``bucket_scheme`` (not a lake table) gets a
-        ``count()`` and a plain ``upsert``."""
+        a transform — the upsert gets none: a CoW dst needs none (its
+        merge tasks run per bucket of the feed), and a MOR dst discovers
+        them with its own job. A bucket whose manifest entry changed but
+        whose feed rows net to nothing (e.g. a src commit that rewrote it
+        unchanged) gets no merge task in a CoW dst and is left as it is.
+        An interval in which no bucket changed is provably empty: no
+        upsert, no job, ``changes`` 0. A dst without ``bucket_scheme``
+        (not a lake table) gets a ``count()`` and a plain ``upsert``."""
         frm = self.last_synced()
         head = int(to_seq) if to_seq is not None else int(self.src.commit_seq())
         if head <= frm:
@@ -139,8 +139,8 @@ class TableReplicator:
         self.dst.upsert(feed, touched=touched)
         # Spark completes an observation with an EMPTY row when AQE pruned
         # the observed subtree from the final plan, which it does to an
-        # empty shuffle side (an empty feed under the merge's full-outer
-        # join or the discovery aggregate); PySpark's ``get`` cannot
+        # empty shuffle side (an empty feed under the merge's shuffle by
+        # bucket or the MOR discovery aggregate); PySpark's ``get`` cannot
         # convert that row, and the pruned feed had no rows
         if obs._jo.getRow().length() == 0:
             return 0

@@ -36,6 +36,11 @@ commits behind loses the frozen manifests it needs — same contract as
 Rows are yielded as Arrow RecordBatches (one per partition), not
 per-row tuples — the Arrow path keeps the Python-source overhead at the
 batch level.
+
+The same executor-side fold runs the lake's copy-on-write commit: one
+``applyInArrow`` task per touched bucket (``cow_merge_bucket``) folds the
+bucket's change group in as its newest generation and writes the
+bucket's new file with pyarrow.
 """
 
 from __future__ import annotations
@@ -79,10 +84,12 @@ OP_DELETE = "DELETE"  # schema.py constant, inlined: executors import nothing he
 
 
 def _nullable_dtypes():
-    """pyarrow→pandas nullable dtype map for ints/bools: a NULL in any
-    file must NOT float-promote the column (str(42.0) != the JVM digest's
-    '42' — functions/digest.py pd_row_digest is dtype-aware and relies on
-    this)."""
+    """pyarrow→pandas nullable dtype map for ints/bools/floats: a NULL in
+    any file must NOT float-promote the column (str(42.0) != the JVM
+    digest's '42' — functions/digest.py pd_row_digest is dtype-aware and
+    relies on this), and a float NULL must stay apart from a float NaN
+    (the JVM digest renders NaN as 'NaN', and the CoW merge writes the
+    column back)."""
     import pandas as pd
     import pyarrow as pa
 
@@ -92,6 +99,8 @@ def _nullable_dtypes():
         pa.int32(): pd.Int32Dtype(),
         pa.int64(): pd.Int64Dtype(),
         pa.bool_(): pd.BooleanDtype(),
+        pa.float32(): pd.Float32Dtype(),
+        pa.float64(): pd.Float64Dtype(),
     }
 
 
@@ -263,38 +272,44 @@ class UnsortedGenerationError(RuntimeError):
 
 class _SortedGenStream:
     """Sequential batched reader over ONE generation's bucket dir,
-    exploiting the writer's layout guarantee (lake._write_generation:
-    every bucket file is sorted by key_cols when no cluster_cols are
-    declared; a task's file splits stay globally sorted in filename
-    order). Keys are UNIQUE per generation (each generation is one
-    LWW-deduped batch), so a buffered prefix reaching key K holds ALL of
-    this generation's rows with key ≤ K.
+    exploiting the writer's layout guarantee (every bucket file is sorted
+    by key_cols when no cluster_cols are declared: the Spark writer's
+    ``sortWithinPartitions`` keeps a task's file splits globally sorted
+    in filename order, and a CoW merge task writes one key-sorted file).
+    Keys are UNIQUE per generation (each generation is one LWW-deduped
+    batch), so a buffered prefix reaching key K holds ALL of this
+    generation's rows with key ≤ K. ``source`` may instead be an
+    in-memory key-sorted pandas frame (a CoW merge's change group).
 
     Monotonicity across batch/file boundaries is verified as batches
     arrive (two scalar tuple compares per batch); a violation raises
     ``UnsortedGenerationError`` rather than silently mis-folding."""
 
-    def __init__(self, path: str, seq: int, key_cols: list[str],
+    def __init__(self, source, seq: int, key_cols: list[str],
                  columns: list[str], batch_rows: int) -> None:
         self.seq = seq
         self.key_cols = key_cols
         self.columns = columns  # payload + _digest (+ op when seq >= 0)
         self.batch_rows = batch_rows
-        self.path = path
+        self.path = source if isinstance(source, str) else "<change set>"
         self.buf = None  # pandas frame, key-sorted
         self.exhausted = False
         self._last_seen: tuple | None = None
-        self._iter = self._batches(path)
+        self._iter = self._batches(source)
 
-    def _batches(self, path: str):
+    def _batches(self, source):
         import pyarrow.parquet as pq
 
+        if not isinstance(source, str):
+            for i in range(0, len(source), self.batch_rows):
+                yield source.iloc[i : i + self.batch_rows].reset_index(drop=True)
+            return
         nullable = _nullable_dtypes()
-        if os.path.isdir(path):
-            for f in sorted(os.listdir(path)):
+        if os.path.isdir(source):
+            for f in sorted(os.listdir(source)):
                 if not f.endswith(".parquet"):
                     continue
-                pf = pq.ParquetFile(os.path.join(path, f))
+                pf = pq.ParquetFile(os.path.join(source, f))
                 have = [c for c in self.columns if c in pf.schema_arrow.names]
                 for rb in pf.iter_batches(batch_size=self.batch_rows, columns=have):
                     import pyarrow as pa
@@ -378,9 +393,12 @@ class _SortedGenStream:
 
 def _fold_bucket_streamed(spec: dict, key_cols: list[str], columns: list[str],
                           redigest_cols: list[str] | None = None,
-                          batch_rows: int = STREAM_FOLD_BATCH_ROWS):
+                          batch_rows: int = STREAM_FOLD_BATCH_ROWS,
+                          changes=None):
     """Bounded-memory version of ``_fold_bucket``: a boundary-chunked
-    k-way merge over the bucket's (base + delta) generation streams.
+    k-way merge over the bucket's (base + delta) generation streams, plus
+    ``changes`` (a key-sorted in-memory frame with ``op``, the CoW
+    merge's change group) as the newest stream when given.
 
     Each round picks boundary B = min over non-exhausted streams of their
     buffered max key. Every live stream's buffer is a prefix reaching
@@ -405,6 +423,11 @@ def _fold_bucket_streamed(spec: dict, key_cols: list[str], columns: list[str],
             _SortedGenStream(d["dir"], int(d["seq"]), key_cols,
                              columns + ["_digest", "op"], batch_rows)
         )
+    if changes is not None:
+        streams.append(
+            _SortedGenStream(changes, _CHANGES_SEQ, key_cols,
+                             columns + ["_digest", "op"], batch_rows)
+        )
     all_cols = columns + ["_digest", "op", "_seq"]
     while True:
         for s in streams:
@@ -425,6 +448,215 @@ def _fold_bucket_streamed(spec: dict, key_cols: list[str], columns: list[str],
         out = _fold_frame(chunk, key_cols, redigest_cols)
         if len(out):
             yield out
+
+
+#: fold position of a CoW merge's change group: newer than every
+#: committed generation of its bucket
+_CHANGES_SEQ = 1 << 62
+
+
+def _arrow_column(s, t):
+    """One pandas column as an Arrow array of type ``t``, NULL and NaN kept
+    apart: masked (nullable) dtypes carry their own NULL mask, and an
+    object column maps only ``None``/``pd.NA`` to NULL."""
+    import pandas as pd
+    import pyarrow as pa
+
+    if isinstance(s.dtype, pd.api.extensions.ExtensionDtype):
+        return pa.array(s.array, type=t)
+    vals = s.to_numpy(dtype=object)
+    if pa.types.is_floating(t):
+        return pa.array(
+            [None if v is pd.NA else v for v in vals], type=t, from_pandas=False
+        )
+    return pa.array(vals, type=t, from_pandas=True)
+
+
+#: Arrow's parquet writer keeps a column chunk's min but drops its max
+#: once a value is longer than this many bytes, and pyarrow then reads the
+#: max back as "" (an unsound bound); parquet-mr keeps neither. A CoW
+#: merge task writes such a column with no statistics at all.
+_MAX_STAT_VALUE_BYTES = 4096
+
+
+class _StatsTooLong(Exception):
+    """A row group after the first holds a value too long for sound
+    statistics in columns the open writer keeps statistics for."""
+
+    def __init__(self, cols: set) -> None:
+        super().__init__(sorted(cols))
+        self.cols = cols
+
+
+def _write_bucket_file(bucket_dir: str, frames, schema, group_rows: int,
+                       no_stats: set) -> tuple[int, int]:
+    """Write the ordered ``frames`` as ONE parquet file
+    ``bucket_dir/part-00000.parquet``, in row groups of at least
+    ``group_rows`` rows (the last may be smaller). The file is written
+    under a hidden temp name and renamed into place, so a retried task
+    replaces its own output and no reader ever sees a partial file.
+    Writes nothing when the frames hold no row. Returns ``(rows,
+    bytes)``.
+
+    Columns in ``no_stats``, and string/binary columns whose first row
+    group holds a value over ``_MAX_STAT_VALUE_BYTES``, get no
+    statistics; such a value in a later row group raises
+    ``_StatsTooLong`` (the caller re-runs with those columns added)."""
+    import uuid
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    final = os.path.join(bucket_dir, "part-00000.parquet")
+    tmp = os.path.join(bucket_dir, f".part-00000.{uuid.uuid4().hex}.tmp")
+    writer = None
+    pending: list = []
+    rows = 0
+
+    def flush():
+        nonlocal writer
+        df = pd.concat(pending, ignore_index=True)
+        pending.clear()
+        table = pa.Table.from_arrays(
+            [_arrow_column(df[f.name], f.type) for f in schema], schema=schema
+        )
+        long = {
+            f.name
+            for f in schema
+            if (pa.types.is_string(f.type) or pa.types.is_binary(f.type))
+            and f.name not in no_stats
+            and (pc.max(pc.binary_length(table[f.name])).as_py() or 0) > _MAX_STAT_VALUE_BYTES
+        }
+        if writer is None:
+            no_stats.update(long)
+            os.makedirs(bucket_dir, exist_ok=True)
+            writer = pq.ParquetWriter(
+                tmp, schema, write_statistics=[n for n in schema.names if n not in no_stats]
+            )
+        elif long:
+            raise _StatsTooLong(long)
+        writer.write_table(table)
+
+    try:
+        for df in frames:
+            if not len(df):
+                continue
+            pending.append(df)
+            rows += len(df)
+            if sum(len(p) for p in pending) >= group_rows:
+                flush()
+        if pending:
+            flush()
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            os.remove(tmp)
+        raise
+    if writer is None:
+        return 0, 0
+    writer.close()
+    os.replace(tmp, final)
+    return rows, os.path.getsize(final)
+
+
+def _cluster_sort(df, key_cols: list[str], cluster: dict):
+    """Order one bucket's merged rows as the Spark writer does
+    (lake._write_generation): cluster columns then the remaining keys,
+    NULLs first; a Z-order table with ≥ 2 present cluster columns sorts by
+    the bit-interleaved quantile cell (lake._z_values_np, split points
+    from these rows) then the remaining keys."""
+    cols = cluster["cols"]
+    present = [c for c in cols if c in df.columns]
+    tiebreak = [k for k in key_cols if k not in cols]
+    if cluster["strategy"] == "zorder" and len(present) >= 2:
+        from bcdc2bcdc_spark.sources.lake import _z_values_np
+
+        z = _z_values_np(df, present, cluster["types"])
+        return (
+            df.assign(__z=z)
+            .sort_values(["__z", *tiebreak], kind="mergesort", na_position="first")
+            .drop(columns="__z")
+        )
+    return df.sort_values([*present, *tiebreak], kind="mergesort", na_position="first")
+
+
+def cow_merge_bucket(plan: dict, group):
+    """One CoW merge task (``groupBy("_bucket").applyInArrow``): fold the
+    bucket's change group into its base + outstanding MOR deltas as the
+    newest generation, and write the result as the new generation's
+    bucket file. ``group`` is the Arrow change group (payload, ``op``,
+    ``_bucket``, and ``_digest`` when the JVM digested it; otherwise it
+    is digested here with ``pd_row_digest``, the Arrow UDF's function).
+    Merge semantics are ``_fold_frame``'s: DELETE drops the key (a DELETE
+    of a missing key is a no-op), an upsert whose digest equals the
+    stored one keeps the stored row and its ``commit``, else the change
+    row wins. ``plan`` carries what the driver resolved from the
+    manifest (see ``HashBucketParquetTable._cow_merged_plan``).
+
+    Key-ordered tables stream through ``_fold_bucket_streamed``
+    (bounded memory); clustered tables, and buckets whose files are not
+    key-sorted (written before a ``set_cluster_cols`` flip back to key
+    order), fold the whole bucket and sort it here. Returns one row
+    ``(bucket, rows, bytes)``; 0 rows means the merge emptied the bucket
+    and wrote no file."""
+    import pandas as pd
+    import pyarrow as pa
+
+    bucket = int(group.column("_bucket")[0].as_py())
+    key_cols, columns = plan["key_cols"], plan["columns"]
+    changes = group.drop_columns(["_bucket"]).to_pandas(
+        types_mapper=_nullable_dtypes().get
+    )
+    if "_digest" not in changes.columns:
+        from bcdc2bcdc_spark.functions.digest import pd_row_digest
+
+        changes["_digest"] = pd_row_digest(changes, plan["compare_cols"])
+    changes = changes[columns + ["_digest", "op"]].sort_values(
+        key_cols, kind="mergesort", na_position="first"
+    ).reset_index(drop=True)
+    spec = _bucket_spec(plan, plan["path"], str(bucket))
+    redigest, batch_rows = plan["redigest_cols"], plan["batch_rows"]
+
+    def folded(streamed: bool):
+        if streamed:
+            return _fold_bucket_streamed(
+                spec, key_cols, columns, redigest, batch_rows, changes
+            )
+        versions = pd.concat(
+            [_load_versions(spec, columns), changes.assign(_seq=_CHANGES_SEQ)],
+            ignore_index=True,
+        )
+        merged = _fold_frame(versions, key_cols, redigest)
+        return [_cluster_sort(merged, key_cols, plan["cluster"])]
+
+    streamed, no_stats = not plan["cluster"]["cols"], set()
+    while True:
+        try:
+            rows, nbytes = _write_bucket_file(
+                os.path.join(plan["out"], f"_bucket={bucket}"),
+                folded(streamed),
+                plan["arrow_schema"],
+                batch_rows,
+                no_stats,
+            )
+            break
+        except (UnsortedGenerationError, TypeError):
+            # a generation not in key order (or a NULL key part, which has
+            # no Python order): fold the whole bucket instead
+            if not streamed:
+                raise
+            streamed = False
+        except _StatsTooLong as e:
+            no_stats |= e.cols
+    return pa.table(
+        {
+            "bucket": pa.array([bucket], pa.int32()),
+            "rows": pa.array([rows], pa.int64()),
+            "bytes": pa.array([nbytes], pa.int64()),
+        }
+    )
 
 
 def _diff_bucket(old_spec: dict, new_spec: dict, key_cols: list[str],

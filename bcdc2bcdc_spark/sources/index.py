@@ -251,9 +251,12 @@ class SecondaryIndex:
     def lookup(self, values: DataFrame, allow_stale: bool = False) -> DataFrame:
         """CURRENT base rows whose alt key matches ``values`` (a small
         DataFrame of exactly the index columns). Index buckets are pruned
-        by the alt-value hash (collect bounded by n_buckets), entries
-        semi-join against the broadcast probe set, and the resulting
-        primary keys fan into ``base.lookup`` — never a base scan."""
+        by the alt-value hash (one bucket id collected per probe row, no
+        ``distinct``: an inline probe's hash folds at plan time and runs
+        no job), entries semi-join against the broadcast probe set, and
+        the resulting primary keys fan into ``base.lookup`` — never a base
+        scan. The broadcast semi-joins ignore duplicate probe rows, so
+        neither the probe nor the keys are deduplicated."""
         st = self._state()
         if not allow_stale and self.base.commit_seq() != int(st["indexed_seq"]):
             raise StaleIndexError(
@@ -264,19 +267,16 @@ class SecondaryIndex:
         t = self._table()
         meta = t._meta()
         ic = list(self.index_cols)
-        probe = values.select(*ic).distinct()
-        vb = probe.withColumn(
-            "_b", _bucket_expr(ic, t._n_buckets(meta))
-        )
+        probe = values.select(*ic)
         buckets = sorted(
-            {r["_b"] for r in vb.select("_b").distinct().collect()}
+            {r[0] for r in probe.select(_bucket_expr(ic, t._n_buckets(meta))).collect()}
         )
         ents = (
             t._read_merged_raw(buckets=buckets, meta=meta)
             .drop("_digest")
             .join(F.broadcast(probe), ic, "left_semi")
         )
-        keys = ents.select(*self.base.key_cols).distinct()
+        keys = ents.select(*self.base.key_cols)
         # re-filter the CURRENT base rows against the probe: with
         # allow_stale=True an index entry may point at a key whose alt
         # value has since moved — the contract is "may MISS keys, never

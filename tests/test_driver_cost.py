@@ -95,7 +95,9 @@ def test_merge_plan_build_round_trip_budget(trickle_lake, round_trips):
     compare = list(meta["compare_cols"])
 
     def build():
-        t._cow_merged_plan(changes, compare, "jvm", meta, [0, 1, 2, 3], t.bucket_expr())
+        t._cow_merged_plan(
+            changes, compare, "jvm", meta, [0, 1, 2, 3], t.bucket_expr(), "gen-budget"
+        )
 
     n = round_trips(build)
     assert n <= MERGE_PLAN_BUDGET, f"merge plan: {n} py4j round trips"

@@ -116,7 +116,9 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
         )
 
     winner = HashBucketParquetTable(spark, tmp_table.path, n_buckets=8)
-    orig_stage = tmp_table._write_generation
+    # the staging write: the merge tasks (CoW) or the delta write (MOR)
+    seam = "_write_merged" if mode == "cow" else "_write_generation"
+    orig_stage = getattr(tmp_table, seam)
     won = []
 
     def _interleaved_stage(df):
@@ -126,12 +128,12 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
         won.append(winner._meta())
         return out
 
-    tmp_table._write_generation = _interleaved_stage
+    setattr(tmp_table, seam, _interleaved_stage)
     try:
         with pytest.raises(ConcurrentWriteError):
             tmp_table.upsert(_change("loser-content", 1))
     finally:
-        tmp_table._write_generation = orig_stage
+        setattr(tmp_table, seam, orig_stage)
 
     assert tmp_table._meta() == won[0]
     contents = {r["content"] for r in tmp_table.read().collect()}
@@ -235,14 +237,16 @@ def test_upsert_with_touched_runs_jobs_only_in_staging_write(spark, tmp_path, mo
     )
     touched = [r[0] for r in changes.select(t.bucket_expr()).collect()]
     staging = []
-    orig = t._write_generation
+    # the staging write: the merge tasks (CoW) or the delta write (MOR)
+    seam = "_write_merged" if mode == "cow" else "_write_generation"
+    orig = getattr(t, seam)
 
-    def _write_generation(df):
+    def _staging_write(df):
         jobs, out = count_jobs(sc, lambda: orig(df))
         staging.append(jobs)
         return out
 
-    t._write_generation = _write_generation
+    setattr(t, seam, _staging_write)
     assert count_jobs(sc, lambda: t.upsert(changes, touched=touched))[0] == 0
     assert sum(staging)
     assert t.read().where(F.col("content") == "budgeted").count() == 1

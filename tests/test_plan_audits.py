@@ -117,12 +117,13 @@ def test_cc_round_no_single_partition(spark):
 
 
 def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypatch):
-    """The one place the Arrow digest UDF runs is the epoch change set
-    ``CDCPipeline`` upserts; a replica sync and a predicate DELETE commit
-    with JVM digests only (the perf split between write and sync rests on
-    it). On an evolved table, whose stored digests lag the compare set,
-    the touched base rows are re-digested on the JVM too: the staged plan
-    still holds exactly one Arrow digest, the change set's."""
+    """The one place a change set is digested in Python is the epoch
+    change set ``CDCPipeline`` upserts, inside its CoW merge tasks
+    (``pd_row_digest``); a replica sync and a predicate DELETE pass a JVM
+    ``sha2`` column into the tasks. No staged CoW plan holds an Arrow
+    digest UDF: each is one ``FlatMapGroupsInArrow`` over the change set
+    with no join. On an evolved table, whose stored digests lag the
+    compare set, the pipeline's plan is the same (the tasks re-digest)."""
     from bcdc2bcdc_spark.generator import gen_events
     from bcdc2bcdc_spark.plans.checkpoint import CheckpointStore
     from bcdc2bcdc_spark.plans.pipeline import CDCPipeline
@@ -131,18 +132,29 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
     from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
 
     plans = []
-    real = HashBucketParquetTable._write_generation
+    real = HashBucketParquetTable._cow_merged_plan
 
-    def capture(self, df_with_bucket):
-        plans.append(_plan(df_with_bucket))
-        return real(self, df_with_bucket)
+    def capture(self, *args):
+        merged = real(self, *args)
+        plans.append(_plan(merged))
+        return merged
 
-    monkeypatch.setattr(HashBucketParquetTable, "_write_generation", capture)
+    monkeypatch.setattr(HashBucketParquetTable, "_cow_merged_plan", capture)
 
     def lake(name):
         t = HashBucketParquetTable(spark, str(tmp_path / name), n_buckets=4)
         t.init(spark.createDataFrame([], REPOS_SCHEMA))
         return t
+
+    def jvm_digested(plans):
+        """Whether the one merge's change set carries a JVM ``_digest``
+        column into the tasks."""
+        assert len(plans) == 1
+        (plan,) = plans
+        assert plan.count("FlatMapGroupsInArrow") == 1
+        assert "ArrowEvalPython" not in plan
+        (merge,) = [ln for ln in plan.splitlines() if "FlatMapGroupsInArrow" in ln]
+        return "_digest#" in merge
 
     src, dst = lake("src"), lake("dst")
     ev = gen_events(spark, n_events=200, n_keys=50, n_epochs=1, seed=5).drop("epoch")
@@ -151,19 +163,19 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
     CDCPipeline(table=src, checkpoints=CheckpointStore(str(tmp_path / "ck"))).apply_epoch(
         ev, 0
     )
-    assert len(plans) == 1 and "ArrowEvalPython" in plans[0]
+    assert not jvm_digested(plans)
 
     plans.clear()
     rep = TableReplicator(
         src=src, dst=dst, checkpoints=CheckpointStore(str(tmp_path / "rck"))
     )
     assert rep.sync()["changes"] > 0
-    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+    assert jvm_digested(plans)
 
     plans.clear()
     lang = src.read().where("lang IS NOT NULL").first()["lang"]
     assert src.delete_where(F.col("lang") == lang) > 0
-    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+    assert jvm_digested(plans)
 
     assert src.evolve(
         T.StructType(src.data_schema().fields + [T.StructField("stars", T.LongType())])
@@ -174,7 +186,7 @@ def test_arrow_digest_only_on_the_pipeline_change_set(spark, tmp_path, monkeypat
     CDCPipeline(table=src, checkpoints=CheckpointStore(str(tmp_path / "ck"))).apply_epoch(
         ev2, 1
     )
-    assert len(plans) == 1 and plans[0].count("ArrowEvalPython") == 1
+    assert not jvm_digested(plans)
 
 
 def test_inline_key_lookup_is_one_broadcast_semi_join(spark, tmp_path):
@@ -193,3 +205,30 @@ def test_inline_key_lookup_is_one_broadcast_semi_join(spark, tmp_path):
     assert plan.count("BroadcastHashJoin") == 1 and "LeftSemi" in plan
     assert plan.count("Exchange") == plan.count("BroadcastExchange") == 1
     assert "HashAggregate" not in plan
+
+
+@pytest.mark.parametrize("impl", ["arrow", "jvm"])
+def test_cow_merge_is_one_grouped_arrow_task_per_bucket(spark, tmp_path, impl):
+    """The staged CoW plan is the change set's one shuffle by bucket into
+    one ``FlatMapGroupsInArrow``: no join, no base scan, no second
+    exchange. The merge tasks read the base themselves. The shuffle is a
+    ``repartition`` (one partition per four buckets to merge, so a single
+    one for this 4-bucket table), which AQE does not coalesce."""
+    from bcdc2bcdc_spark.functions.canonicalize import canonicalize_snapshot
+    from bcdc2bcdc_spark.generator import gen_repos
+    from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=50, seed=4)))
+    changes = t.read().where(F.col("lang") == "go").withColumn("op", F.lit("UPDATE"))
+    meta = t._meta()
+    plan = _plan(
+        t._cow_merged_plan(
+            changes, meta["compare_cols"], impl, meta, None, t.bucket_expr(), "gen-audit"
+        )
+    )
+    assert plan.count("FlatMapGroupsInArrow") == 1
+    assert "Join" not in plan and "ArrowEvalPython" not in plan
+    # the change set's own scan and its one shuffle
+    assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM") == 1
+    assert plan.count("FileScan") == 1

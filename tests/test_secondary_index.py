@@ -316,3 +316,31 @@ def test_stale_lookup_never_invents_rows(spark, base, tmp_path):
     assert (row["repo"], row["path"]) not in {
         (r["repo"], r["path"]) for r in got.collect()
     }
+
+
+def test_lookup_job_budget(spark, tmp_path):
+    """An inline probe's index-bucket hash folds at plan time: building
+    the lookup frame runs 2 jobs (the base-bucket discovery over the
+    matched index entries) and its collect 3. A duplicated probe value
+    returns each row once at the same cost; a parquet-backed probe adds
+    one job, its own bucket collect."""
+    from tests.conftest import count_jobs
+
+    sc = spark.sparkContext
+    base = HashBucketParquetTable(spark, str(tmp_path / "base"), n_buckets=8)
+    base.init(canonicalize_snapshot(gen_repos(spark, n_keys=200, seed=3)))
+    idx = _index(base, tmp_path)
+    idx.build()
+    want = base.read().where(F.col("lang") == "go")
+    spark.createDataFrame([("go",)], "lang string").write.parquet(str(tmp_path / "probe"))
+    for probe, build_jobs in (
+        (spark.sql("SELECT * FROM VALUES ('go') AS v(lang)"), 2),
+        (spark.sql("SELECT * FROM VALUES ('go'), ('go') AS v(lang)"), 2),
+        (spark.read.parquet(str(tmp_path / "probe")), 3),
+    ):
+        jobs, got = count_jobs(sc, lambda: idx.lookup(probe))
+        assert jobs == build_jobs
+        jobs, rows = count_jobs(sc, got.collect)
+        assert jobs == 3
+        by_name = lambda rs: sorted(sorted(r.asDict().items()) for r in rs)  # noqa: E731
+        assert by_name(rows) == by_name(want.collect())
