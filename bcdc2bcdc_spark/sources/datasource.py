@@ -21,21 +21,20 @@ digest-equal upsert keeps the prior row (no-op suppression preserves
 together. Work per partition is O(bucket + its deltas); planning is
 driver-side manifest JSON only.
 
-Per-task memory on the snapshot path is BOUNDED: key-sorted tables (the
-default layout — no cluster_cols) fold through a boundary-chunked k-way
-merge over the generation streams (``_fold_bucket_streamed``), peak
-O(batch_rows × generations) regardless of bucket size. Clustered tables
-(whose files are ordered by non-key columns) fall back to whole-bucket
-materialization behind ``_guard_bucket_bytes``, as does the change-feed
-diff path (two full folds per bucket).
+A table's row layout is fixed at ``init``: every generation is sorted
+by the key columns in Spark's ascending order (NULL first, a float NaN
+above every number) exactly when the manifest declares no
+``cluster_cols``, and that one fact picks the fold, for the snapshot
+reader and the CoW merge task alike. Key-sorted tables fold through a
+boundary-chunked k-way merge over the generation streams
+(``_fold_bucket_streamed``), peak O(batch_rows × generations) regardless
+of bucket size; clustered tables fold the whole bucket, the reader
+behind ``_guard_bucket_bytes``, as does the change-feed diff path.
+Rows are yielded as Arrow RecordBatches, one per folded chunk.
 
 Offsets/retention: a stream that falls more than ``retain_generations``
 commits behind loses the frozen manifests it needs — same contract as
 ``read_version``. Size retention to the longest expected stream outage.
-
-Rows are yielded as Arrow RecordBatches (one per partition), not
-per-row tuples — the Arrow path keeps the Python-source overhead at the
-batch level.
 
 The same executor-side fold runs the lake's copy-on-write commit: one
 ``applyInArrow`` task per touched bucket (``cow_merge_bucket``) folds the
@@ -132,14 +131,11 @@ def _read_dir(path: str, columns: list[str]):
     return _backfill(pd.concat(frames, ignore_index=True), columns)
 
 
-#: default per-task ceiling on one bucket's LIVE parquet bytes
-#: (base + outstanding deltas, compressed on-disk size) — applies only
-#: where a task materializes its whole bucket in pandas before folding
-#: (the feed's diff path, clustered tables, streamfold=false); there peak
-#: memory is O(bucket bytes × decompression ratio), unlike the JVM read
-#: path (streaming hash aggregate) and the default streamed snapshot fold
-#: (O(batch × generations)). 2 GiB compressed is a conservative fit for
-#: the default 4-8 GiB Python-worker budget; override per read with
+#: default per-task ceiling on one bucket's LIVE parquet bytes (base +
+#: outstanding deltas, compressed) — applies only where a task folds its
+#: whole bucket in pandas (the feed's diff path, clustered tables), whose
+#: peak memory is O(bucket bytes × decompression ratio). 2 GiB fits the
+#: default 4-8 GiB Python-worker budget; override per read with
 #: .option("maxbucketbytes", n) — 0 disables the guard.
 DEFAULT_MAX_BUCKET_BYTES = 2 * 1024**3
 
@@ -162,10 +158,7 @@ def _guard_bucket_bytes(specs: list[dict], max_bytes: int) -> None:
     """Refuse — BEFORE allocating anything — to materialize a bucket whose
     live on-disk bytes exceed the ceiling, pointing at the actual fixes.
     Runs executor-side per task: O(files in this bucket) stat calls, no
-    data read. This is the table_stats-per-bucket-bytes check pushed to
-    the one place it cannot be skipped (the 100 TB failure mode is a
-    silent worker OOM mid-scan; this turns it into a planned, actionable
-    error)."""
+    data read — a silent worker OOM mid-scan becomes a planned error."""
     if max_bytes <= 0:
         return
     total = sum(
@@ -209,20 +202,70 @@ def _fold_bucket(spec: dict, key_cols: list[str], columns: list[str],
                  redigest_cols: list[str] | None = None):
     """The per-key version fold (pandas mirror of lake._merge_versions):
     sort by seq, DELETE resets, digest-equal upsert is a no-op that keeps
-    the prior row. O(rows) single pass after one sort.
+    the prior row. O(rows) single pass after one sort. ``redigest_cols``
+    (``_redigest_cols``) recomputes ``_digest`` with the engine's
+    bit-exact formula (functions/digest.py pd_row_digest)."""
+    return _fold_frame(_load_versions(spec, columns), key_cols, redigest_cols)
 
-    ``redigest_cols``: when the manifest's stored digests are incoherent
-    (digest_cols lags compare_cols after evolve(), or the caller spans
-    two compare sets), recompute ``_digest`` over this column set with
-    the SAME bit-exact formula as the engine (functions/digest.py
-    pd_row_digest) — mirroring lake._read_merged_raw's lag branch."""
-    df = _load_versions(spec, columns)
-    return _fold_frame(df, key_cols, redigest_cols)
+
+def _key_parts(s):
+    """One key column in Spark's ascending order, as ``(cls, vals)``:
+    ``cls`` is 0 for NULL (first), 1 for a value, and 2 for a float NaN
+    (above every number, equal to itself); ``vals`` holds the values,
+    compared only where both sides' ``cls`` is 1."""
+    import numpy as np
+
+    cls = np.ones(len(s), dtype=np.int8)
+    if s.dtype.kind == "f":  # a masked float keeps NaN apart from NULL
+        cls[np.isnan(s.to_numpy(dtype="float64", na_value=np.nan))] = 2
+    cls[s.isna().to_numpy()] = 0
+    return cls, s.to_numpy(dtype=object)
+
+
+def _row_key(parts, i: int) -> tuple:
+    """Row ``i`` of ``_key_parts`` columns as a tuple that Python orders
+    the same way: one ``(cls, value or None)`` pair per column."""
+    return tuple((int(c[i]), v[i] if c[i] == 1 else None) for c, v in parts)
+
+
+def _key_lt_eq(a, b, n: int):
+    """Lexicographic ``(lt, eq)`` masks of ``n`` key rows ``a`` (a list
+    of ``_key_parts``) against ``b``: as many rows, or one ``_row_key``."""
+    import numpy as np
+
+    lt, eq = np.zeros(n, dtype=bool), np.ones(n, dtype=bool)
+    for (ca, va), (cb, vb) in zip(a, b):
+        col_lt, col_eq = ca < cb, (ca == cb) & (ca != 1)
+        both = (ca == 1) & (ca == cb)
+        if both.any():
+            x, y = va[both], vb[both] if isinstance(vb, np.ndarray) else vb
+            col_lt[both], col_eq[both] = x < y, x == y
+        lt |= eq & col_lt
+        eq &= col_eq
+    return lt, eq
+
+
+def _key_codes(df, key_cols: list[str]) -> list:
+    """Per key column, int codes in Spark's ascending order (NULL lowest,
+    NaN highest, equal values equal): ``np.lexsort`` input."""
+    import numpy as np
+    import pandas as pd
+
+    out = []
+    for k in key_cols:
+        cls, vals = _key_parts(df[k])
+        live = cls == 1
+        codes, uniq = pd.factorize(vals[live], sort=True)
+        c = np.where(cls == 0, -1, len(uniq)).astype(np.int64)
+        c[live] = codes
+        out.append(c)
+    return out
 
 
 def _fold_frame(df, key_cols: list[str], redigest_cols: list[str] | None = None):
     """The vectorized fold core over one frame holding ALL versions of
-    every key it contains (columns ``*payload, _digest, op, _seq``)."""
+    every key it contains (columns ``*payload, _digest, op, _seq``).
+    Returns the surviving rows in key order (``_key_codes``)."""
     if df.empty:
         return df.drop(columns=["op", "_seq"], errors="ignore")
     if redigest_cols is not None:
@@ -232,7 +275,14 @@ def _fold_frame(df, key_cols: list[str], redigest_cols: list[str] | None = None)
     import numpy as np
     import pandas as pd
 
-    df = df.sort_values([*key_cols, "_seq"], kind="mergesort").reset_index(drop=True)
+    codes = _key_codes(df, key_cols)
+    order = np.lexsort([df["_seq"].to_numpy(), *codes[::-1]])
+    df = df.iloc[order].reset_index(drop=True)
+    same = np.ones(len(df) - 1, dtype=bool)
+    for c in codes:
+        c = c[order]
+        same &= c[1:] == c[:-1]
+    key_id = np.concatenate([[0], np.cumsum(~same)])
     # Vectorized fold (no per-row Python): walking versions in seq order,
     # the state's digest always equals the last non-delete row's digest
     # (a no-op keeps a state whose digest already matches), so the
@@ -241,7 +291,6 @@ def _fold_frame(df, key_cols: list[str], redigest_cols: list[str] | None = None)
     # first row is what preserves `commit` across no-op upserts.
     n = len(df)
     pos = np.arange(n)
-    key_id = df.groupby(key_cols, sort=False, dropna=False).ngroup().to_numpy()
     isdel = df["op"].to_numpy(dtype=object) == OP_DELETE
     last_del = (
         pd.Series(np.where(isdel, pos, -1))
@@ -267,7 +316,8 @@ STREAM_FOLD_BATCH_ROWS = 65536
 
 
 class UnsortedGenerationError(RuntimeError):
-    """A generation file violated the writer's key-sorted layout."""
+    """A generation file of a key-sorted table is not in key order: a
+    safety check against a foreign or corrupt file."""
 
 
 class _SortedGenStream:
@@ -281,8 +331,9 @@ class _SortedGenStream:
     generation's rows with key ≤ K. ``source`` may instead be an
     in-memory key-sorted pandas frame (a CoW merge's change group).
 
-    Monotonicity across batch/file boundaries is verified as batches
-    arrive (two scalar tuple compares per batch); a violation raises
+    Keys compare in the writers' order, Spark's ascending order
+    (``_key_parts``), so NULL and NaN key parts stream like any value.
+    Monotonicity is verified as batches arrive; a violation raises
     ``UnsortedGenerationError`` rather than silently mis-folding."""
 
     def __init__(self, source, seq: int, key_cols: list[str],
@@ -318,23 +369,6 @@ class _SortedGenStream:
                         types_mapper=nullable.get
                     )
 
-    @staticmethod
-    def _sorted_ok(frame, key_cols: list[str]) -> bool:
-        """Every adjacent row pair non-decreasing on the key (vectorized
-        shift-compare — loops over key COLUMNS, never rows)."""
-        import numpy as np
-
-        if len(frame) <= 1:
-            return True
-        n = len(frame) - 1
-        lt = np.zeros(n, dtype=bool)
-        eq = np.ones(n, dtype=bool)
-        for col in key_cols:
-            v = frame[col].to_numpy(dtype=object)
-            lt |= eq & (v[:-1] < v[1:])
-            eq &= v[:-1] == v[1:]
-        return bool((lt | eq).all())
-
     def pull(self) -> None:
         """Append the next batch to the buffer (marks exhausted at EOF)."""
         import pandas as pd
@@ -345,45 +379,47 @@ class _SortedGenStream:
             return
         nxt = _backfill(nxt, self.columns)
         if len(nxt):
-            first = tuple(nxt.iloc[0][k] for k in self.key_cols)
+            parts = [_key_parts(nxt[k]) for k in self.key_cols]
+            # adjacent rows non-decreasing (vectorized shift-compare)
+            lt, eq = _key_lt_eq(
+                [(c[:-1], v[:-1]) for c, v in parts],
+                [(c[1:], v[1:]) for c, v in parts],
+                len(nxt) - 1,
+            )
+            first = _row_key(parts, 0)
             bad_seam = self._last_seen is not None and first < self._last_seen
-            if bad_seam or not self._sorted_ok(nxt, self.key_cols):
+            if bad_seam or not (lt | eq).all():
                 raise UnsortedGenerationError(
-                    f"cdclake: generation at {self.path} is not key-sorted; "
-                    "the table was written by a writer without the "
-                    "key-sorted layout. Read with "
-                    ".option('streamfold', 'false') to fall back to "
-                    "whole-bucket materialization."
+                    f"cdclake: generation at {self.path} is not key-sorted, "
+                    "but its table declares no cluster_cols, so every "
+                    "generation is written in key order: the file is foreign "
+                    "to this table's writers or corrupt."
                 )
-            self._last_seen = tuple(nxt.iloc[-1][k] for k in self.key_cols)
+            self._last_seen = _row_key(parts, -1)
         nxt["_seq"] = self.seq
-        if "op" not in nxt.columns:  # base generation carries no op column
-            nxt["op"] = None
         self.buf = nxt if self.buf is None else pd.concat(
             [self.buf, nxt], ignore_index=True
         )
 
     def buffered_max(self) -> tuple | None:
+        """The ``_row_key`` of the buffer's last row: the last row pulled."""
         if self.buf is None or not len(self.buf):
             return None
-        return tuple(self.buf.iloc[-1][k] for k in self.key_cols)
+        return self._last_seen
 
     def split_le(self, boundary: tuple):
-        """Vectorized lexicographic split: rows with key ≤ boundary leave
-        the buffer and are returned (column-wise compares — loops over
-        key COLUMNS, never rows)."""
-        import numpy as np
-
+        """Vectorized lexicographic split: rows with key ≤ ``boundary``
+        (a ``_row_key``; None for every row) leave the buffer and are
+        returned (column-wise compares — loops over key COLUMNS, never
+        rows)."""
         if self.buf is None or not len(self.buf):
             return None
-        n = len(self.buf)
-        le = np.zeros(n, dtype=bool)
-        eq = np.ones(n, dtype=bool)
-        for col, bval in zip(self.key_cols, boundary):
-            v = self.buf[col].to_numpy(dtype=object)
-            le |= eq & (v < bval)
-            eq &= v == bval
-        le |= eq
+        if boundary is None:
+            out, self.buf = self.buf, None
+            return out
+        parts = [_key_parts(self.buf[k]) for k in self.key_cols]
+        lt, eq = _key_lt_eq(parts, boundary, len(self.buf))
+        le = lt | eq
         if not le.any():
             return None
         out = self.buf[le]
@@ -397,8 +433,7 @@ def _fold_bucket_streamed(spec: dict, key_cols: list[str], columns: list[str],
                           changes=None):
     """Bounded-memory version of ``_fold_bucket``: a boundary-chunked
     k-way merge over the bucket's (base + delta) generation streams, plus
-    ``changes`` (a key-sorted in-memory frame with ``op``, the CoW
-    merge's change group) as the newest stream when given.
+    ``changes`` (the CoW merge's key-sorted change group) as the newest.
 
     Each round picks boundary B = min over non-exhausted streams of their
     buffered max key. Every live stream's buffer is a prefix reaching
@@ -406,48 +441,33 @@ def _fold_bucket_streamed(spec: dict, key_cols: list[str], columns: list[str],
     version sets across all generations — they split off, fold through
     the same vectorized core as the materialized path (`_fold_frame`,
     bit-exact by construction), and yield as one chunk. Peak memory is
-    O(batch_rows × generations), independent of bucket size — the 100 TB
-    fix for the whole-bucket ``pd.concat`` this module previously
-    required (and still uses, behind ``_guard_bucket_bytes``, for tables
-    whose cluster_cols order files by non-key columns)."""
+    O(batch_rows × generations), independent of bucket size."""
     import pandas as pd
 
-    streams: list[_SortedGenStream] = []
-    if spec.get("base"):
-        streams.append(
-            _SortedGenStream(spec["base"], -1, key_cols,
-                             columns + ["_digest"], batch_rows)
-        )
-    for d in spec.get("deltas", []):
-        streams.append(
-            _SortedGenStream(d["dir"], int(d["seq"]), key_cols,
-                             columns + ["_digest", "op"], batch_rows)
-        )
+    sources = [(spec["base"], -1)] if spec.get("base") else []
+    sources += [(d["dir"], int(d["seq"])) for d in spec.get("deltas", [])]
     if changes is not None:
-        streams.append(
-            _SortedGenStream(changes, _CHANGES_SEQ, key_cols,
-                             columns + ["_digest", "op"], batch_rows)
-        )
+        sources.append((changes, _CHANGES_SEQ))
     all_cols = columns + ["_digest", "op", "_seq"]
+    streams = [  # a base file has no op column: it backfills NULL
+        _SortedGenStream(src, seq, key_cols, all_cols[:-1], batch_rows)
+        for src, seq in sources
+    ]
     while True:
         for s in streams:
             while not s.exhausted and s.buffered_max() is None:
                 s.pull()
-        live = [s for s in streams if not s.exhausted]
-        if not live:
-            tails = [s.buf for s in streams if s.buf is not None and len(s.buf)]
-            if tails:
-                chunk = pd.concat(tails, ignore_index=True)[all_cols]
-                out = _fold_frame(chunk, key_cols, redigest_cols)
-                if len(out):
-                    yield out
-            return
-        boundary = min(s.buffered_max() for s in live)
+        live = [s.buffered_max() for s in streams if not s.exhausted]
+        boundary = min(live) if live else None  # None: the tails
         parts = [p for p in (s.split_le(boundary) for s in streams) if p is not None]
-        chunk = pd.concat(parts, ignore_index=True)[all_cols]
-        out = _fold_frame(chunk, key_cols, redigest_cols)
-        if len(out):
-            yield out
+        if parts:
+            out = _fold_frame(
+                pd.concat(parts, ignore_index=True)[all_cols], key_cols, redigest_cols
+            )
+            if len(out):
+                yield out
+        if not live:
+            return
 
 
 #: fold position of a CoW merge's change group: newer than every
@@ -595,12 +615,12 @@ def cow_merge_bucket(plan: dict, group):
     row wins. ``plan`` carries what the driver resolved from the
     manifest (see ``HashBucketParquetTable._cow_merged_plan``).
 
-    Key-ordered tables stream through ``_fold_bucket_streamed``
-    (bounded memory); clustered tables, and buckets whose files are not
-    key-sorted (written before a ``set_cluster_cols`` flip back to key
-    order), fold the whole bucket and sort it here. Returns one row
-    ``(bucket, rows, bytes)``; 0 rows means the merge emptied the bucket
-    and wrote no file."""
+    Key-sorted tables (no ``cluster_cols``) stream through
+    ``_fold_bucket_streamed`` (bounded memory); clustered tables fold the
+    whole bucket and sort it here. Returns one row ``(bucket, rows,
+    bytes)``; 0 rows means the merge emptied the bucket and wrote no
+    file."""
+    import numpy as np
     import pandas as pd
     import pyarrow as pa
 
@@ -613,16 +633,15 @@ def cow_merge_bucket(plan: dict, group):
         from bcdc2bcdc_spark.functions.digest import pd_row_digest
 
         changes["_digest"] = pd_row_digest(changes, plan["compare_cols"])
-    changes = changes[columns + ["_digest", "op"]].sort_values(
-        key_cols, kind="mergesort", na_position="first"
-    ).reset_index(drop=True)
+    changes = changes[columns + ["_digest", "op"]]
+    changes = changes.iloc[np.lexsort(_key_codes(changes, key_cols)[::-1])].reset_index(drop=True)
     spec = _bucket_spec(plan, plan["path"], str(bucket))
-    redigest, batch_rows = plan["redigest_cols"], plan["batch_rows"]
+    redigest = plan["redigest_cols"]
 
-    def folded(streamed: bool):
-        if streamed:
+    def folded():
+        if not plan["cluster"]["cols"]:
             return _fold_bucket_streamed(
-                spec, key_cols, columns, redigest, batch_rows, changes
+                spec, key_cols, columns, redigest, changes=changes
             )
         versions = pd.concat(
             [_load_versions(spec, columns), changes.assign(_seq=_CHANGES_SEQ)],
@@ -631,23 +650,17 @@ def cow_merge_bucket(plan: dict, group):
         merged = _fold_frame(versions, key_cols, redigest)
         return [_cluster_sort(merged, key_cols, plan["cluster"])]
 
-    streamed, no_stats = not plan["cluster"]["cols"], set()
+    no_stats = set()
     while True:
         try:
             rows, nbytes = _write_bucket_file(
                 os.path.join(plan["out"], f"_bucket={bucket}"),
-                folded(streamed),
+                folded(),
                 plan["arrow_schema"],
-                batch_rows,
+                STREAM_FOLD_BATCH_ROWS,
                 no_stats,
             )
             break
-        except (UnsortedGenerationError, TypeError):
-            # a generation not in key order (or a NULL key part, which has
-            # no Python order): fold the whole bucket instead
-            if not streamed:
-                raise
-            streamed = False
         except _StatsTooLong as e:
             no_stats |= e.cols
     return pa.table(
@@ -726,16 +739,14 @@ def _arrow_schema(spark_schema: T.StructType):
 
 
 def _to_record_batch(df, schema: T.StructType):
+    """``df`` as one RecordBatch of ``schema``, built by the merge
+    writer's converter (``_arrow_column``): a float NaN stays NaN."""
     import pyarrow as pa
 
-    names = [f.name for f in schema.fields]
-    clean = df[names].astype("object")
-    clean = clean.where(clean.notna(), None)
     arrow = _arrow_schema(schema)
-    arrays = [
-        pa.array(list(clean[n]), type=arrow.field(n).type) for n in names
-    ]
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow)
+    return pa.RecordBatch.from_arrays(
+        [_arrow_column(df[f.name], f.type) for f in arrow], schema=arrow
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -770,15 +781,44 @@ def _bucket_spec(meta: dict, table_path: str, bucket: str) -> dict:
 
 
 def _entry(meta: dict, bucket: str):
+    """One bucket's manifest entry: its base generation and delta list."""
     return (
         meta.get("buckets", {}).get(bucket),
         tuple((e["gen"], int(e["seq"])) for e in meta.get("deltas", {}).get(bucket, [])),
     )
 
 
+def _changed_entries(m_a: dict, m_b: dict) -> list[str]:
+    """Bucket ids (ascending) whose ``_entry`` differs between two
+    manifests of one bucket scheme. Generations are immutable, so an
+    identical entry proves identical content."""
+    all_b = set(m_a.get("buckets", {})) | set(m_b.get("buckets", {}))
+    all_b |= set(m_a.get("deltas", {})) | set(m_b.get("deltas", {}))
+    return sorted((b for b in all_b if _entry(m_a, b) != _entry(m_b, b)), key=int)
+
+
+def _redigest_cols(meta: dict, default=()) -> list[str] | None:
+    """Whether ``meta``'s stored digests are comparable: they cover its
+    compare set (``default`` when it has none) unless ``digest_cols``
+    lags it (after ``evolve()``, until ``redigest()``). Returns the
+    compare set to recompute digests over, or None."""
+    compare = list(meta.get("compare_cols", default))
+    return None if meta.get("digest_cols", compare) == compare else compare
+
+
+def _redigest_cols_between(m_a: dict, m_b: dict, default=()) -> list[str] | None:
+    """The same across two versions: their stored digests compare only
+    when both cover ONE column set. A lagging side alone breaks that (an
+    upsert re-digests only the buckets it touches). Returns ``m_b``'s
+    compare set to recompute both sides over, or None."""
+    cmp_b = list(m_b.get("compare_cols", default))
+    same = list(m_a.get("compare_cols", default)) == cmp_b
+    lag = _redigest_cols(m_a, default) is not None or _redigest_cols(m_b, default) is not None
+    return None if same and not lag else cmp_b
+
+
 class _BucketPartition(InputPartition):
-    def __init__(self, payload: dict) -> None:
-        super().__init__(payload)
+    """One bucket's read spec (``_bucket_spec``, or the feed's old/new pair)."""
 
 
 # ---------------------------------------------------------------------------
@@ -846,10 +886,6 @@ class LakeChangeFeedDataSource(DataSource):
             schema,
             self._frozen_meta(),
             max_bucket_bytes=self._max_bucket_bytes(),
-            stream_fold=self.options.get("streamfold", "true").lower() != "false",
-            fold_batch_rows=int(
-                self.options.get("foldbatchrows", str(STREAM_FOLD_BATCH_ROWS))
-            ),
         )
 
     def streamReader(self, schema: T.StructType) -> "LakeFeedStreamReader":
@@ -870,33 +906,26 @@ class LakeSnapshotReader(DataSourceReader):
         schema: T.StructType,
         meta: dict | None = None,
         max_bucket_bytes: int = DEFAULT_MAX_BUCKET_BYTES,
-        stream_fold: bool = True,
-        fold_batch_rows: int = STREAM_FOLD_BATCH_ROWS,
     ) -> None:
         self.path = path
         self.out_schema = schema
         self.max_bucket_bytes = max_bucket_bytes
         if meta is None:  # standalone use; DataSource passes its frozen copy
             meta = _manifest(path)
-        # bounded-memory chunked fold: requires the writer's key-sorted
-        # file layout, which cluster_cols replace with their own order —
-        # clustered tables fall back to whole-bucket materialization
-        # behind the byte guard
-        self.stream_fold = stream_fold and not meta.get("cluster_cols")
-        self.fold_batch_rows = fold_batch_rows
+        # bounded-memory chunked fold on key-sorted tables; cluster_cols
+        # order files by their own columns, so clustered tables fold the
+        # whole bucket behind the byte guard
+        self.streamed = not meta.get("cluster_cols")
         self.key_cols = list(meta.get("key_cols", ["repo", "path"]))
         self.columns = [f.name for f in T.StructType.fromJson(meta["schema"]).fields]
         self.head = int(meta.get("commit_seq", 0))
-        # stored digests are mixed-column-set while digest_cols lags the
-        # compare set (post-evolve, pre-redigest) — recompute in the fold
-        # so no-op suppression matches the JVM read exactly
-        compare = meta.get("compare_cols", [])
-        self.redigest = compare if meta.get("digest_cols", compare) != compare else None
+        # recompute lagging digests in the fold so no-op suppression
+        # matches the JVM read exactly
+        self.redigest = _redigest_cols(meta)
         self._meta = meta  # frozen manifest — pushFilters prunes against it
         self._buckets = sorted(
             set(meta.get("buckets", {})) | set(meta.get("deltas", {})), key=int
         )
-        self.specs = [_bucket_spec(meta, path, b) for b in self._buckets]
 
     def pushFilters(self, filters):
         """Manifest-bounds partition pruning (PySpark 4.1 filter pushdown):
@@ -908,12 +937,9 @@ class LakeSnapshotReader(DataSourceReader):
         Spark must still re-apply the full predicate to the folded rows —
         the same never-load-bearing contract as ``read_where``.
 
-        Hash pruning on the bucket columns is deliberately absent on this
-        path: it needs the engine's own ``_bucket_expr`` (a Spark job over
-        the candidate tuples), and no SparkSession exists in a data-source
-        planning worker — re-implementing xxhash64 in Python would fork
-        the hash definition. Use ``HashBucketParquetTable.read_where`` /
-        ``lookup`` when bucket-column pruning matters."""
+        No hash pruning on the bucket columns: it needs the engine's
+        ``_bucket_expr`` and a SparkSession, which a planning worker lacks
+        (use ``read_where`` / ``lookup`` for that)."""
         from bcdc2bcdc_spark.sources.lake import (
             _bounds_exclude_bucket,
             _usable_bounds_preds,
@@ -931,28 +957,26 @@ class LakeSnapshotReader(DataSourceReader):
             preds.append((attr[0], op, val))
         usable = _usable_bounds_preds(self._meta, preds)
         if usable:
-            keep = [
-                (b, s)
-                for b, s in zip(self._buckets, self.specs)
+            self._buckets = [
+                b for b in self._buckets
                 if not _bounds_exclude_bucket(self._meta, int(b), usable)
             ]
-            self._buckets = [b for b, _ in keep]
-            self.specs = [s for _, s in keep]
         return filters
 
     def partitions(self):
-        return [_BucketPartition(s) for s in self.specs] or [_BucketPartition({})]
+        return [
+            _BucketPartition(_bucket_spec(self._meta, self.path, b)) for b in self._buckets
+        ] or [_BucketPartition({})]
 
     def read(self, partition: _BucketPartition) -> Iterator:
         spec = partition.value
         if not spec:
             return
-        if self.stream_fold:
+        if self.streamed:
             # bounded memory: one Arrow batch per folded key-range chunk;
             # the byte ceiling is irrelevant here (peak is O(batch × gens))
             for df in _fold_bucket_streamed(
-                spec, self.key_cols, self.columns, self.redigest,
-                batch_rows=self.fold_batch_rows,
+                spec, self.key_cols, self.columns, self.redigest
             ):
                 yield self._finish(df)
             return
@@ -986,15 +1010,11 @@ class LakeFeedStreamReader(DataSourceStreamReader):
         self.include_pre = include_pre
         self.max_bucket_bytes = max_bucket_bytes
         #: rate limit (maxOffsetsPerTrigger analog): cap how many source
-        #: commits one micro-batch may span. 0 = unbounded (each batch
-        #: coalesces everything outstanding — cheapest, but nets out
-        #: intermediate states); 1 = per-commit replay (exact audit
-        #: trail, one batch per source version). The FIRST batch of a
-        #: (re)started stream is always unbounded: the reader cannot see
-        #: Spark's checkpointed progress until a batch is planned, so a
-        #: start-seq-anchored clamp would hand a restarted stream an
-        #: offset BEHIND its checkpoint and stall it (restart-regression
-        #: bug, fixed). Limiting kicks in from the second batch on.
+        #: commits one micro-batch may span. 0 = unbounded (cheapest, nets
+        #: out intermediate states); 1 = per-commit replay. The FIRST batch
+        #: of a (re)started stream is always unbounded: the reader cannot
+        #: see Spark's checkpointed progress until a batch is planned, and
+        #: a start-seq-anchored clamp would stall a restarted stream.
         self.max_versions_per_batch = max_versions_per_batch
         self._cursor: int | None = None
         meta = _manifest(path)
@@ -1026,34 +1046,19 @@ class LakeFeedStreamReader(DataSourceStreamReader):
                 "or use the batch read_changes path"
             )
         columns = [f["name"] for f in m_b["schema"]["fields"]]
-        # stored digests are comparable only when both versions' digests
-        # provably cover ONE column set (same rule as lake.read_changes);
-        # otherwise every partition recomputes over the newer compare set
-        cmp_a = m_a.get("compare_cols", [])
-        cmp_b = m_b.get("compare_cols", [])
-        coherent = (
-            cmp_a == cmp_b
-            and m_a.get("digest_cols", cmp_a) == cmp_a
-            and m_b.get("digest_cols", cmp_b) == cmp_b
-        )
-        redigest = None if coherent else cmp_b
-        out = []
-        all_b = set(m_a.get("buckets", {})) | set(m_b.get("buckets", {}))
-        all_b |= set(m_a.get("deltas", {})) | set(m_b.get("deltas", {}))
-        for bucket in sorted(all_b, key=int):
-            if _entry(m_a, bucket) == _entry(m_b, bucket):
-                continue  # immutable generations: identical entry ⇒ no change
-            out.append(
-                _BucketPartition(
-                    {
-                        "old": _bucket_spec(m_a, self.path, bucket),
-                        "new": _bucket_spec(m_b, self.path, bucket),
-                        "columns": columns,
-                        "version": b,
-                        "redigest": redigest,
-                    }
-                )
+        redigest = _redigest_cols_between(m_a, m_b)
+        out = [
+            _BucketPartition(
+                {
+                    "old": _bucket_spec(m_a, self.path, bucket),
+                    "new": _bucket_spec(m_b, self.path, bucket),
+                    "columns": columns,
+                    "version": b,
+                    "redigest": redigest,
+                }
             )
+            for bucket in _changed_entries(m_a, m_b)
+        ]
         return out or [_BucketPartition({})]
 
     def read(self, partition: _BucketPartition) -> Iterator:
@@ -1084,15 +1089,12 @@ class LakeFeedStreamReader(DataSourceStreamReader):
 def register_lake_source(spark: SparkSession) -> None:
     """Register the ``cdclake`` source.
 
-    SESSION-GLOBAL SIDE EFFECT, documented: when the session has no
-    explicit setting for ``spark.sql.python.filterPushdown.enabled``,
-    this turns it on — a reader that implements ``pushFilters`` is
-    REJECTED outright while the (default-false) conf is off, so cdclake
-    reads need it, and enabling it also makes every OTHER registered
-    Python data source's ``pushFilters`` start being invoked. A value the
-    user set explicitly (either way) is respected and never overridden;
-    note that with an explicit ``false`` cdclake reads will fail with
-    Spark's pushdown-disabled error until it is re-enabled."""
+    SESSION-GLOBAL SIDE EFFECT: when the session has no explicit
+    ``spark.sql.python.filterPushdown.enabled``, this turns it on (Spark
+    rejects a reader with ``pushFilters`` while it is off), which also
+    makes every OTHER Python data source's ``pushFilters`` run. An
+    explicit value is never overridden; an explicit ``false`` makes
+    cdclake reads fail until it is re-enabled."""
     if spark.conf.get("spark.sql.python.filterPushdown.enabled", None) is None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(LakeChangeFeedDataSource)
@@ -1129,20 +1131,18 @@ def read_snapshot(
     spark: SparkSession,
     table_path: str,
     max_bucket_bytes: int = DEFAULT_MAX_BUCKET_BYTES,
-    stream_fold: bool = True,
 ):
     """The current merged table state via the Python source (one
-    partition per bucket, MOR deltas folded executor-side). On key-sorted
-    tables (no cluster_cols) the fold streams in bounded-memory key-range
-    chunks (``_fold_bucket_streamed``); clustered tables — or
-    ``stream_fold=False`` — materialize the whole bucket behind the
-    ``max_bucket_bytes`` guard (``_guard_bucket_bytes``) instead of
-    OOMing the worker."""
+    partition per bucket, MOR deltas folded executor-side). The table's
+    manifest picks the fold: on key-sorted tables (no cluster_cols) it
+    streams in bounded-memory key-range chunks
+    (``_fold_bucket_streamed``); clustered tables materialize the whole
+    bucket behind the ``max_bucket_bytes`` guard
+    (``_guard_bucket_bytes``) instead of OOMing the worker."""
     register_lake_source(spark)
     return (
         spark.read.format("cdclake")
         .option("path", table_path)
         .option("maxbucketbytes", str(max_bucket_bytes))
-        .option("streamfold", "true" if stream_fold else "false")
         .load()
     )

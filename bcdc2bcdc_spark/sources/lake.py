@@ -69,6 +69,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from bcdc2bcdc_spark.functions.digest import with_row_digest
 from bcdc2bcdc_spark.operators.diff import COMPARE_COLS
 from bcdc2bcdc_spark.schema import KEY_COLS, OP_ADD, OP_DELETE, OP_UPDATE
+from bcdc2bcdc_spark.sources.datasource import (
+    _changed_entries,
+    _redigest_cols,
+    _redigest_cols_between,
+)
 from bcdc2bcdc_spark.sources.fs import LocalFS
 
 
@@ -490,10 +495,11 @@ class HashBucketParquetTable:
     #: per-BUCKET bounds on an uncorrelated column never prune; per-ROW-
     #: GROUP bounds on a sorted column always do). Key columns are
     #: appended as tiebreak, so rows lose their leading-key order — the
-    #: same tradeoff ZORDER makes. Persisted like
-    #: stats_cols; flip with ``set_cluster_cols`` (affects generations
-    #: written after the flip; rewrite everything via ``rebucket`` to
-    #: re-cluster history).
+    #: same tradeoff ZORDER makes. Seeds ``init()`` and is persisted; it
+    #: is not flippable afterwards, so every generation of a table is
+    #: key-sorted exactly when its manifest has no ``cluster_cols`` — the
+    #: one fact the ``cdclake`` reader and the CoW merge task pick their
+    #: fold by (``datasource._fold_bucket_streamed`` or the whole bucket).
     cluster_cols: tuple[str, ...] | None = None
     #: HOW multi-column cluster_cols order rows within a bucket:
     #: * "lexicographic" (default) — plain multi-column sort. Row groups
@@ -546,17 +552,9 @@ class HashBucketParquetTable:
                 f"{list(self.key_cols)} (bucket placement must be a function "
                 "of row identity)"
             )
-        with_digest = with_row_digest(
-            df, [c for c in self.compare_cols if c in df.columns], "_digest", impl="jvm"
-        )
-        self._initializing = True  # stats_cols resolve from the ctor, not a prior table
-        try:
-            gen, written = self._write_generation(
-                with_digest.withColumn("_bucket", _bucket_expr(bcols, self.n_buckets))
-            )
-        finally:
-            self._initializing = False
         compare = [c for c in self.compare_cols if c in df.columns]
+        # the constructor's settings, not a prior table's: init overwrites
+        # all prior state
         meta = {
             "key_cols": list(self.key_cols),
             "n_buckets": self.n_buckets,
@@ -566,7 +564,7 @@ class HashBucketParquetTable:
             # only trust stored digests while this equals compare_cols
             "digest_cols": compare,
             "schema": df.schema.jsonValue(),
-            "buckets": {str(b): gen for b in written},
+            "buckets": {},
             "deltas": {},
             "write_mode": self._validated_mode(self.write_mode),
             "stats_cols": list(self.stats_cols or ()),
@@ -574,6 +572,13 @@ class HashBucketParquetTable:
             "cluster_strategy": self._validated_strategy(self.cluster_strategy),
             "commit_seq": 1,
         }
+        gen, written = self._write_generation(
+            with_row_digest(df, compare, "_digest", impl="jvm").withColumn(
+                "_bucket", _bucket_expr(bcols, self.n_buckets)
+            ),
+            meta,
+        )
+        meta["buckets"] = {str(b): gen for b in written}
         if gen in self._pending_gen_stats:
             meta["stats"] = {gen: self._pending_gen_stats.pop(gen)}
         self.fs.write_json_atomic(self.meta_path, meta)
@@ -590,7 +595,9 @@ class HashBucketParquetTable:
 
         return f"gen-{_uuid.uuid4().hex[:12]}"
 
-    def _write_generation(self, df_with_bucket: DataFrame) -> tuple[str, set[int]]:
+    def _write_generation(
+        self, df_with_bucket: DataFrame, meta: dict
+    ) -> tuple[str, set[int]]:
         """Stage one immutable generation with Spark's writer — ``init``,
         the maintenance rewrites (``compact``, ``compact_deltas``,
         ``redigest``, ``rebucket``) and MOR deltas; a CoW upsert writes
@@ -598,7 +605,8 @@ class HashBucketParquetTable:
         by bucket (each bucket dir written by few tasks — no small-file
         explosion), ONE write job, then a single listing of the FRESH
         output to learn which buckets produced rows. Nothing existing is
-        touched."""
+        touched. The row layout and the stats columns come from ``meta``,
+        the manifest the caller holds (``init``'s own settings)."""
         gen = self._new_gen()
         out = os.path.join(self.data_path, gen)
         # sortWithinPartitions: rows inside each bucket file are ordered by
@@ -608,10 +616,10 @@ class HashBucketParquetTable:
         # scan (a clustered-range read_where) skips row groups inside the
         # buckets it reads (free at write time, the sort rides the same
         # shuffle). A lookup's semi-join pushes no such filter.
-        ccols = self._cluster_cols_resolved()
+        ccols = meta.get("cluster_cols", [])
         present = [c for c in ccols if c in df_with_bucket.columns]
         tiebreak = [k for k in self.key_cols if k not in ccols]
-        if self._cluster_strategy_resolved() == "zorder" and len(present) >= 2:
+        if meta.get("cluster_strategy") == "zorder" and len(present) >= 2:
             # Z-order: sort by the bit-interleaved quantile-cell value so
             # row groups stay narrow on EVERY cluster dimension. Costs one
             # extra pass over the staged generation (approxQuantile) —
@@ -635,7 +643,7 @@ class HashBucketParquetTable:
             if d.startswith("_bucket=")
         }
         if written:
-            stats = self._collect_gen_stats(out)
+            stats = self._collect_gen_stats(out, meta)
             if stats:
                 self._pending_gen_stats[gen] = stats
         return gen, written
@@ -679,8 +687,8 @@ class HashBucketParquetTable:
             or pa.types.is_floating(t)
         )
 
-    def _collect_gen_stats(self, out: str) -> dict:
-        """Per-bucket min/max/nonnull for the declared stats columns over a
+    def _collect_gen_stats(self, out: str, meta: dict) -> dict:
+        """Per-bucket min/max/nonnull for ``meta``'s ``stats_cols`` over a
         FRESHLY WRITTEN generation, read from the files' parquet FOOTERS
         (row-group statistics + null counts): O(files) driver-side metadata
         reads, ZERO data scanned and ZERO Spark jobs — the
@@ -692,8 +700,14 @@ class HashBucketParquetTable:
         min/max for those) simply leaves that bucket's entry, and a missing
         entry can never exclude a bucket on the read side. A column that is
         entirely NULL in a bucket yields the same ``{min: None, max: None,
-        nonnull: 0}`` entry the old aggregate produced."""
-        scols = self._stats_cols_resolved()
+        nonnull: 0}`` entry the old aggregate produced.
+
+        The manifest is the only authority once the table exists, with no
+        constructor fallback: ``_usable_bounds_preds`` prunes from the
+        persisted set alone, so a fallback would collect (and pay for)
+        stats the read side never uses. Enable stats on a table that has
+        none via ``set_stats_cols``."""
+        scols = meta.get("stats_cols", [])
         if not scols:
             return {}
         import pyarrow.parquet as pq
@@ -749,29 +763,12 @@ class HashBucketParquetTable:
                 stats[str(int(d.split("=", 1)[1]))] = entry
         return stats
 
-    def _stats_cols_resolved(self, meta: dict | None = None) -> list[str]:
-        """Authoritative stats column set: persisted once the table exists
-        (constructor arg only seeds init), like bucket_cols/write_mode.
-        During init() the constructor arg wins even over a prior table's
-        manifest (init overwrites all prior state).
-
-        Once the table exists the manifest is the ONLY authority — no
-        constructor fallback: ``_usable_bounds_preds`` prunes from the
-        persisted key alone, so a ctor fallback here would collect (and
-        pay for) stats the read side never uses on pre-feature tables.
-        Enable stats on a legacy table explicitly via ``set_stats_cols``."""
-        if meta is None:
-            if getattr(self, "_initializing", False) or not self.exists():
-                return list(self.stats_cols or ())
-            meta = self._meta()
-        return list(meta.get("stats_cols", []))
-
     def _commit_meta_flip(self, field: str, value, default=None) -> None:
-        """Shared metadata-flip commit (``write_mode`` / ``stats_cols`` /
-        ``cluster_cols``): a no-op when the field already holds ``value``,
-        else a REAL commit through ``_commit`` that sets the one field — a
-        commit interleaved since this read aborts the flip with
-        ``ConcurrentWriteError`` instead of being clobbered by it."""
+        """Shared metadata-flip commit (``write_mode`` / ``stats_cols``):
+        a no-op when the field already holds ``value``, else a REAL commit
+        through ``_commit`` that sets the one field — a commit interleaved
+        since this read aborts the flip with ``ConcurrentWriteError``
+        instead of being clobbered by it."""
         self._check_writable()
         meta = self._meta()
         if meta.get(field, default) == value:
@@ -790,25 +787,6 @@ class HashBucketParquetTable:
         once via ``compact()``/``rebucket``)."""
         self._commit_meta_flip("stats_cols", list(cols or ()), default=[])
 
-    def _cluster_cols_resolved(self, meta: dict | None = None) -> list[str]:
-        """Authoritative cluster column set — same resolution contract as
-        ``_stats_cols_resolved`` (persisted wins, ctor seeds init, no ctor
-        fallback once the table exists)."""
-        if meta is None:
-            if getattr(self, "_initializing", False) or not self.exists():
-                return list(self.cluster_cols or ())
-            meta = self._meta()
-        return list(meta.get("cluster_cols", []))
-
-    def set_cluster_cols(self, cols: Sequence[str]) -> None:
-        """Flip the persisted cluster column set — a real commit, same
-        contract as ``set_stats_cols``. Affects generations written after
-        the flip only: clustering is a physical-layout property of each
-        immutable generation, so history keeps the layout it was written
-        with (still correct, just un-clustered); rewrite it all at once
-        with ``rebucket`` when the new layout should apply retroactively."""
-        self._commit_meta_flip("cluster_cols", list(cols or ()), default=[])
-
     @staticmethod
     def _validated_strategy(strategy: str) -> str:
         if strategy not in ("lexicographic", "zorder"):
@@ -817,14 +795,6 @@ class HashBucketParquetTable:
                 f"got {strategy!r}"
             )
         return strategy
-
-    def _cluster_strategy_resolved(self, meta: dict | None = None) -> str:
-        """Same resolution contract as ``_cluster_cols_resolved``."""
-        if meta is None:
-            if getattr(self, "_initializing", False) or not self.exists():
-                return self._validated_strategy(self.cluster_strategy)
-            meta = self._meta()
-        return meta.get("cluster_strategy", "lexicographic")
 
     def _sweep_unreferenced_generations(
         self, expired_now: Sequence[str] = ()
@@ -1083,12 +1053,12 @@ class HashBucketParquetTable:
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
-        compare = list(meta.get("compare_cols", self.compare_cols))
-        if meta.get("digest_cols", compare) != compare:
+        redo = _redigest_cols(meta, self.compare_cols)
+        if redo is not None:
             # stored digests predate a compare-set change (schema
             # evolution): recompute so the no-op fold compares digests
             # over ONE column set — same rule as the CoW upsert path
-            u = with_row_digest(u.drop("_digest"), compare, "_digest", impl="jvm")
+            u = with_row_digest(u.drop("_digest"), redo, "_digest", impl="jvm")
         return self._merge_versions(u, schema)
 
     def _read_raw_from(
@@ -1303,17 +1273,7 @@ class HashBucketParquetTable:
         """``changed_buckets`` over two already-loaded manifests."""
         if self._n_buckets(m_from) != self._n_buckets(m_to):
             return None
-        def entry(m: dict, b: str):
-            return (
-                m.get("buckets", {}).get(b),
-                tuple(
-                    (e["gen"], int(e["seq"]))
-                    for e in m.get("deltas", {}).get(b, [])
-                ),
-            )
-        all_b = set(m_from.get("buckets", {})) | set(m_to.get("buckets", {}))
-        all_b |= set(m_from.get("deltas", {})) | set(m_to.get("deltas", {}))
-        return sorted(int(b) for b in all_b if entry(m_from, b) != entry(m_to, b))
+        return [int(b) for b in _changed_entries(m_from, m_to)]
 
     #: manifest fields that describe the DATA STATE of a version — what
     #: ``restore`` moves. Operational fields (write_mode, GC bookkeeping)
@@ -1420,29 +1380,16 @@ class HashBucketParquetTable:
             return self.spark.createDataFrame([], empty_feed)
         old = self._read_merged_raw(buckets=buckets, meta=m_from)
         new = self._read_merged_raw(buckets=buckets, meta=m_to)
-        cmp_from = m_from.get("compare_cols", list(self.compare_cols))
-        cmp_to = m_to.get("compare_cols", list(self.compare_cols))
-        # Stored digests are only comparable when BOTH versions' digests
-        # provably cover ONE column set: the compare sets must match AND
-        # each side's digest_cols must equal its compare set. The second
-        # condition matters on its own — after evolve() (digest_cols lags
-        # compare_cols until redigest()), upserts recompute digests per
-        # TOUCHED bucket, so a single version can hold buckets digested
-        # over different column sets.
-        coherent = (
-            cmp_from == cmp_to
-            and m_from.get("digest_cols", cmp_from) == cmp_from
-            and m_to.get("digest_cols", cmp_to) == cmp_to
-        )
-        if not coherent:
+        redo = _redigest_cols_between(m_from, m_to, self.compare_cols)
+        if redo is not None:
             # re-digest BOTH sides over the newer compare set so UPDATE
             # detection is exact (the old side NULL-backfills evolved
             # columns)
             from bcdc2bcdc_spark.evolution import reconcile_to_schema
 
             old = reconcile_to_schema(old.drop("_digest"), schema_to)
-            old = with_row_digest(old, cmp_to, "_digest", impl="jvm")
-            new = with_row_digest(new.drop("_digest"), cmp_to, "_digest", impl="jvm")
+            old = with_row_digest(old, redo, "_digest", impl="jvm")
+            new = with_row_digest(new.drop("_digest"), redo, "_digest", impl="jvm")
         o = old.select(
             *key_cols,
             *[F.col(c).alias(f"_pre_{c}") for c in payload],
@@ -1627,7 +1574,7 @@ class HashBucketParquetTable:
                 )
             written = {b for b, (rows, _) in tasks.items() if rows}
             if written:
-                stats = self._collect_gen_stats(os.path.join(self.data_path, gen))
+                stats = self._collect_gen_stats(os.path.join(self.data_path, gen), meta)
                 if stats:
                     self._pending_gen_stats[gen] = stats
             return StagedUpsert(self, gen, written, sorted(tasks), base_seq, meta, mode)
@@ -1645,8 +1592,9 @@ class HashBucketParquetTable:
                 return empty
         gen, written = self._write_generation(
             self._mor_delta_frame(
-                changes.withColumn("_bucket", bucket), persisted, digest_impl
-            )
+                changes.withColumn("_bucket", bucket), persisted, digest_impl, meta
+            ),
+            meta,
         )
         if not written:
             # an empty delta changes nothing: no commit, no dir left behind
@@ -1802,16 +1750,12 @@ class HashBucketParquetTable:
         are recomputed in the task over the compare set, until
         ``redigest()`` re-baselines. Every column type must map to Arrow
         (``datasource._arrow_schema``, else ``TypeError``)."""
-        from bcdc2bcdc_spark.sources.datasource import (
-            STREAM_FOLD_BATCH_ROWS,
-            _arrow_schema,
-            cow_merge_bucket,
-        )
+        from bcdc2bcdc_spark.sources.datasource import _arrow_schema, cow_merge_bucket
         import functools
 
         schema = T.StructType.fromJson(meta["schema"])
         columns = [f.name for f in schema.fields]
-        ccols = self._cluster_cols_resolved(meta)
+        ccols = meta.get("cluster_cols", [])
         plan = {
             "path": self.path,
             "out": os.path.join(self.data_path, gen),
@@ -1823,15 +1767,12 @@ class HashBucketParquetTable:
                 T.StructType(schema.fields + [T.StructField("_digest", T.StringType())])
             ),
             "compare_cols": list(compare_cols),
-            "redigest_cols": list(compare_cols)
-            if meta.get("digest_cols", compare_cols) != compare_cols
-            else None,
+            "redigest_cols": _redigest_cols(meta, compare_cols),
             "cluster": {
                 "cols": ccols,
-                "strategy": self._cluster_strategy_resolved(meta),
+                "strategy": meta.get("cluster_strategy", "lexicographic"),
                 "types": {f.name: f.dataType for f in schema.fields if f.name in ccols},
             },
-            "batch_rows": STREAM_FOLD_BATCH_ROWS,
         }
         if digest_impl == "jvm":
             changes = with_row_digest(changes, list(compare_cols), "_digest", impl="jvm")
@@ -1860,7 +1801,7 @@ class HashBucketParquetTable:
         return {int(r[0]): (int(r[1]), int(r[2])) for r in merged.collect()}
 
     def _mor_delta_frame(
-        self, changes_b: DataFrame, compare_cols: list[str], digest_impl: str
+        self, changes_b: DataFrame, compare_cols: list[str], digest_impl: str, meta: dict
     ) -> DataFrame:
         """The merge-on-read staging frame: the change set AS a delta
         generation (no base read, no base rewrite — write cost
@@ -1868,7 +1809,7 @@ class HashBucketParquetTable:
         tombstones, ADD/UPDATE rows are upserts; ``read()`` resolves them
         per key. The change set must be key-unique (lww_dedup first), same
         precondition as CoW."""
-        schema_cols = [f.name for f in self.data_schema().fields]
+        schema_cols = [f["name"] for f in meta["schema"]["fields"]]
         return with_row_digest(
             changes_b, compare_cols, "_digest", impl=digest_impl
         ).select(*schema_cols, "_digest", "op", "_bucket")
@@ -1903,24 +1844,25 @@ class HashBucketParquetTable:
         self,
         merged: DataFrame,
         touched: Sequence[int],
+        meta: dict,
         expected_seq: int | None = None,
         meta_updates: dict | None = None,
         mode: str = "cow",
     ) -> None:
         """Stage → commit for the maintenance rewrites: write ``merged``
-        as a generation, then ``_apply_staged`` it as a CoW swap of the
-        ``touched`` buckets (or, in ``full_replace`` mode, as the whole
-        table) plus ``meta_updates``. A touched bucket with no staged
-        output was emptied and simply leaves the map.
+        as a generation laid out as ``meta`` says, then ``_apply_staged``
+        it as a CoW swap of the ``touched`` buckets (or, in
+        ``full_replace`` mode, as the whole table) plus ``meta_updates``.
+        A touched bucket with no staged output was emptied and simply
+        leaves the map.
 
-        ``expected_seq`` is the caller's base read; None takes the
-        sequence current before the write. If another writer commits
-        meanwhile, this commit ABORTS (``ConcurrentWriteError``) leaving
-        the staged generation unreferenced — the winner's table state is
-        untouched."""
+        ``meta`` is the caller's base read, and ``expected_seq`` its
+        sequence unless given. If another writer commits meanwhile, this
+        commit ABORTS (``ConcurrentWriteError``) leaving the staged
+        generation unreferenced — the winner's table state is untouched."""
         if expected_seq is None:
-            expected_seq = self.commit_seq()
-        gen, written = self._write_generation(merged)
+            expected_seq = int(meta.get("commit_seq", 0))
+        gen, written = self._write_generation(merged, meta)
         self._apply_staged(
             gen,
             written,
@@ -2096,7 +2038,7 @@ class HashBucketParquetTable:
                 "_bucket", self._bucket_of(meta)
             ),
             buckets,
-            expected_seq=int(meta.get("commit_seq", 0)),
+            meta,
         )
 
     #: event-control columns that never belong to the table schema
@@ -2135,7 +2077,6 @@ class HashBucketParquetTable:
         action — full table rewrite, schedule accordingly."""
         self._check_writable()
         meta = self._meta()
-        base_seq = int(meta.get("commit_seq", 0))
         compare = list(meta.get("compare_cols", self.compare_cols))
         if meta.get("digest_cols") == compare:
             return
@@ -2156,10 +2097,7 @@ class HashBucketParquetTable:
         # a concurrent upsert's commit aborts this maintenance run instead
         # of being clobbered by it.
         self._commit_generation(
-            rewritten,
-            touched,
-            expected_seq=base_seq,
-            meta_updates={"digest_cols": compare},
+            rewritten, touched, meta, meta_updates={"digest_cols": compare}
         )
 
     def compact(self, max_files_per_bucket: int = 4) -> list[int]:
@@ -2197,9 +2135,6 @@ class HashBucketParquetTable:
         """
         self._check_writable()
         meta = self._meta()
-        base_seq = int(meta.get("commit_seq", 0))
-        if expected_seq is None:
-            expected_seq = base_seq
         new_n_buckets = int(new_n_buckets)
         if new_n_buckets < 1:
             raise ValueError(f"n_buckets must be ≥ 1, got {new_n_buckets}")
@@ -2210,7 +2145,8 @@ class HashBucketParquetTable:
         )
         self._commit_generation(
             rewritten,
-            touched=[],
+            [],
+            meta,
             expected_seq=expected_seq,
             meta_updates={"n_buckets": new_n_buckets},
             mode="full_replace",

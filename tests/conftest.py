@@ -7,6 +7,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bcdc2bcdc_spark.session import get_spark  # noqa: E402
+from bcdc2bcdc_spark.sources.fs import LocalFS  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -31,3 +32,38 @@ def count_jobs(sc, fn):
         for k, v in zip(keys, outer):
             sc.setLocalProperty(k, v)
     return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def sorted_reprs(df):
+    """``df``'s rows as sorted reprs, so NULL and NaN compare as
+    themselves (a row tuple holding NaN never equals another)."""
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+class _CountingFS(LocalFS):
+    """A metadata FS that counts the manifest (``_table.json``) reads and
+    ``exists`` checks it serves."""
+
+    def __init__(self) -> None:
+        self.reads = self.exists_calls = 0
+
+    def read_json(self, path):
+        self.reads += path.endswith("_table.json")
+        return super().read_json(path)
+
+    def exists(self, path):
+        self.exists_calls += path.endswith("_table.json")
+        return super().exists(path)
+
+
+def manifest_reads(table, fn):
+    """Run ``fn()`` with ``table``'s metadata FS counting and return
+    ``(reads, exists, result)``: the ``_table.json`` reads and ``exists``
+    checks ``fn`` made through the table, and ``fn``'s return value."""
+    fs, orig = _CountingFS(), table.fs
+    table.fs = fs
+    try:
+        result = fn()
+    finally:
+        table.fs = orig
+    return fs.reads, fs.exists_calls, result

@@ -86,7 +86,9 @@ def test_default_sort_is_key_order(spark, tmp_path):
         assert vals == sorted(vals), f"repo not sorted within {f}"
 
 
-def test_cluster_cols_persisted_and_flippable(spark, tmp_path):
+def test_cluster_cols_persisted(spark, tmp_path):
+    """cluster_cols seed init() and are persisted: a fresh handle without
+    the ctor arg writes its next generation clustered."""
     t = HashBucketParquetTable(
         spark,
         str(tmp_path / "t"),
@@ -96,13 +98,11 @@ def test_cluster_cols_persisted_and_flippable(spark, tmp_path):
         cluster_cols=("content",),
     )
     t.init(_df(spark, 200))
-    # a fresh handle WITHOUT the ctor arg resolves the persisted set and
-    # writes the next generation clustered
     t2 = HashBucketParquetTable(
         spark, str(tmp_path / "t"), key_cols=("repo", "path"), n_buckets=N_BUCKETS,
         compare_cols=("lang", "content"),
     )
-    assert t2._cluster_cols_resolved() == ["content"]
+    assert t2._meta()["cluster_cols"] == ["content"]
     before = set(_gen_files(t))
     t2.upsert(
         _df(spark, 300).withColumn("op", F.lit("UPDATE")).withColumn(
@@ -112,23 +112,6 @@ def test_cluster_cols_persisted_and_flippable(spark, tmp_path):
     new = [f for f in _gen_files(t2) if f not in before]
     assert new
     _assert_sorted_within_files(new, "content")
-    # flip back to key order — a real commit
-    seq = t2.commit_seq()
-    t2.set_cluster_cols(())
-    assert t2.commit_seq() == seq + 1
-    assert t2._cluster_cols_resolved() == []
-    # same-value flip: no commit
-    t2.set_cluster_cols(())
-    assert t2.commit_seq() == seq + 1
-    before = set(_gen_files(t2))
-    t2.upsert(
-        _df(spark, 100).withColumn("op", F.lit("UPDATE")).withColumn(
-            "event_seq", 10**7 + F.col("path").substr(2, 10).cast("long")
-        )
-    )
-    newest = [f for f in _gen_files(t2) if f not in before]
-    assert newest
-    _assert_sorted_within_files(newest, "repo")
 
 
 def test_clustered_read_where_parity(spark, tmp_path):
@@ -161,24 +144,6 @@ def test_clustered_read_where_parity(spark, tmp_path):
             got, want, key_cols=("repo", "path"), compare_cols=("lang", "content")
         )
         assert got.count() > 0  # non-vacuous
-
-
-def test_set_cluster_cols_concurrency_guard(spark, tmp_path):
-    """A commit landing between two handles' flips: second writer must not
-    silently revert — it either sees the new seq (wins cleanly) or loses
-    with ConcurrentWriteError. Here we just assert the flip is a real
-    commit visible cross-handle."""
-    t = HashBucketParquetTable(
-        spark, str(tmp_path / "t"), key_cols=("repo", "path"), n_buckets=N_BUCKETS,
-        compare_cols=("lang", "content"),
-    )
-    t.init(_df(spark, 50))
-    other = HashBucketParquetTable(
-        spark, str(tmp_path / "t"), key_cols=("repo", "path"), n_buckets=N_BUCKETS,
-        compare_cols=("lang", "content"),
-    )
-    t.set_cluster_cols(("content",))
-    assert other._cluster_cols_resolved() == ["content"]
 
 
 # ---------------------------------------------------------------------------
@@ -291,7 +256,7 @@ def test_cluster_strategy_persisted(spark, tmp_path):
         spark, str(tmp_path / "t"), key_cols=("repo", "path"), n_buckets=2,
         compare_cols=("x", "y"),
     )
-    assert t2._cluster_strategy_resolved() == "zorder"
+    assert t2._meta()["cluster_strategy"] == "zorder"
     before = set(_gen_files(t2))
     t2.upsert(
         _grid_df(spark, 512).withColumn("op", F.lit("UPDATE")).withColumn(

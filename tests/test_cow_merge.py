@@ -27,7 +27,7 @@ from bcdc2bcdc_spark.sources.lake import (
     _z_surrogate,
     _z_surrogate_np,
 )
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, sorted_reprs
 
 CHANGE_SCHEMA = "repo string, path string, commit string, lang string, content string, op string"
 PAYLOAD = ("commit", "lang", "content")
@@ -364,3 +364,68 @@ def test_long_value_in_a_later_row_group_drops_that_columns_stats(tmp_path):
     assert md.num_row_groups == 2
     assert all(md.row_group(g).column(1).statistics is None for g in range(2))
     assert md.row_group(0).column(0).statistics.has_min_max
+
+
+@pytest.fixture
+def whole_fold_raises(monkeypatch):
+    """Run the CoW merge tasks with the whole-bucket fold's reader
+    (``datasource._load_versions``) raising inside the Python worker."""
+    from bcdc2bcdc_spark.sources import datasource
+
+    def merge(plan, group):  # nested: shipped to the worker by value
+        from bcdc2bcdc_spark.sources import datasource as ds
+
+        def refuse(*_):
+            raise AssertionError("the merge folded a key-sorted bucket whole")
+
+        orig, ds._load_versions = ds._load_versions, refuse
+        try:
+            return ds.cow_merge_bucket(plan, group)
+        finally:
+            ds._load_versions = orig
+
+    monkeypatch.setattr(datasource, "cow_merge_bucket", merge)
+
+
+def _two_upserts_match_apply_changes(spark, t, batches, schema, key_cols, compare_cols):
+    for batch in batches:
+        pre = spark.createDataFrame(t.read().collect(), t.data_schema())
+        changes = spark.createDataFrame(batch, schema + ", op string")
+        want = apply_changes(pre, changes, key_cols=key_cols, compare_cols=compare_cols)
+        t.upsert(changes)
+        assert sorted_reprs(t.read()) == sorted_reprs(want)
+    snap = read_snapshot(spark, t.path).drop("op", "_version")
+    assert sorted_reprs(snap) == sorted_reprs(t.read())
+
+
+def test_null_key_part_bucket_merges_streamed(spark, tmp_path, whole_fold_raises):
+    """A bucket holding a NULL key part merges through the streamed fold
+    (NULL sorts first, as Spark's writer puts it), twice, and matches
+    ``apply_changes``."""
+    schema = "repo string, path string, commit string, lang string, content string"
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=1)
+    t.init(spark.createDataFrame(
+        [(None, "p0", "c0", "go", "x"), ("r1", None, "c1", "py", "y"), ("r1", "p1", "c2", "go", "z")],
+        schema,
+    ))
+    _two_upserts_match_apply_changes(spark, t, [
+        [("r1", "p1", "c3", "go", "z2", "UPDATE"), ("r0", "p9", "c4", "rs", "new", "ADD")],
+        [("r0", "p9", None, None, None, "DELETE"), ("a", "b", "c5", "go", "first", "ADD")],
+    ], schema, ("repo", "path"), ("lang", "content"))
+
+
+def test_nan_key_part_bucket_merges_streamed(spark, tmp_path, whole_fold_raises):
+    """The same for a NaN in a double key column: NaN sorts above every
+    number and equals itself, as in Spark."""
+    schema = "k string, d double, v string"
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "lake"), key_cols=("k", "d"), n_buckets=1, compare_cols=("v",)
+    )
+    nan = float("nan")
+    t.init(spark.createDataFrame(
+        [("a", nan, "x"), ("a", 1.0, "y"), ("b", nan, "z"), ("b", -2.0, "w")], schema
+    ))
+    _two_upserts_match_apply_changes(spark, t, [
+        [("a", nan, "x2", "UPDATE"), ("c", nan, "new", "ADD"), ("a", 0.5, "mid", "ADD")],
+        [("b", nan, None, "DELETE"), ("a", 1.0, "y", "UPDATE"), ("c", nan, "again", "UPDATE")],
+    ], schema, ("k", "d"), ("v",))

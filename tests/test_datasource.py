@@ -12,6 +12,7 @@ from bcdc2bcdc_spark.operators.lww import lww_dedup
 from bcdc2bcdc_spark.schema import REPOS_SCHEMA
 from bcdc2bcdc_spark.sources.datasource import read_snapshot, stream_changes
 from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+from tests.conftest import sorted_reprs
 
 
 def _rows(df):
@@ -364,22 +365,27 @@ def test_bucket_bytes_guard_unit(tmp_path):
         _guard_bucket_bytes([spec, spec], 2999)
 
 
-def test_bucket_bytes_guard_fires_through_scan(spark, mor_table):
+@pytest.fixture
+def clustered_table(spark, tmp_path):
+    """cluster_cols order files by non-key columns, so the table's
+    manifest makes the reader fold each bucket whole."""
+    base = canonicalize_snapshot(gen_repos(spark, n_keys=100, seed=3))
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "clustered"), n_buckets=2, cluster_cols=["lang"]
+    )
+    t.init(base)
+    return t
+
+
+def test_bucket_bytes_guard_fires_through_scan(spark, clustered_table, mor_table):
     """An oversized bucket turns into a planned, actionable task error —
     not a worker OOM: the guard message (with the rebucket hint) surfaces
-    through the real cdclake scan path when the materialized fold is in
-    force (stream_fold=False) — while the DEFAULT streamed fold reads the
-    same 'oversized' bucket fine, because its peak memory is
+    through the real cdclake scan of a clustered table, which folds each
+    bucket whole — while a key-sorted table's streamed fold reads the
+    same 'oversized' ceiling fine, because its peak memory is
     O(batch × generations), not O(bucket bytes)."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PySparkException
-
-    from bcdc2bcdc_spark.sources.datasource import read_snapshot
-
-    with pytest.raises((PySparkException, Py4JJavaError, Exception)) as ei:
-        read_snapshot(
-            spark, mor_table.path, max_bucket_bytes=1, stream_fold=False
-        ).count()
+    with pytest.raises(Exception) as ei:
+        read_snapshot(spark, clustered_table.path, max_bucket_bytes=1).count()
     assert "rebucket" in str(ei.value)
 
     # the streamed fold is exempt from the byte ceiling by construction
@@ -398,23 +404,34 @@ def test_bucket_bytes_guard_fires_through_scan(spark, mor_table):
 
 
 def test_stream_fold_chunked_parity(spark, mor_table):
-    """foldbatchrows=7 forces many key-range chunks per bucket (200 keys /
-    4 buckets ≈ 50 keys per bucket); the chunked merge must reproduce the
-    materialized fold — and the JVM read — row-for-row, including commit
-    preservation through no-op upserts and DELETE resets."""
-    from bcdc2bcdc_spark.sources.datasource import register_lake_source
+    """batch_rows=7 cuts every bucket (200 keys / 4 buckets ≈ 50 keys per
+    bucket) into many key-range chunks; the streamed fold must reproduce
+    the materialized fold — and the JVM read — row-for-row, including
+    commit preservation through no-op upserts and DELETE resets."""
+    import pandas as pd
 
-    register_lake_source(spark)
-    chunked = (
-        spark.read.format("cdclake")
-        .option("path", mor_table.path)
-        .option("foldbatchrows", "7")
-        .load()
+    from bcdc2bcdc_spark.sources.datasource import (
+        _bucket_spec,
+        _fold_bucket,
+        _fold_bucket_streamed,
+        _manifest,
     )
-    legacy = read_snapshot(spark, mor_table.path, stream_fold=False)
-    want = _rows(mor_table.read())
-    assert _rows(chunked.drop("op", "_version")) == want
-    assert _rows(legacy.drop("op", "_version")) == want
+
+    meta = _manifest(mor_table.path)
+    key_cols = meta["key_cols"]
+    columns = [f["name"] for f in meta["schema"]["fields"]]
+    streamed, whole = [], []
+    for b in sorted(set(meta["buckets"]) | set(meta["deltas"]), key=int):
+        spec = _bucket_spec(meta, mor_table.path, b)
+        streamed += _fold_bucket_streamed(spec, key_cols, columns, batch_rows=7)
+        whole.append(_fold_bucket(spec, key_cols, columns))
+
+    def rows(frames):
+        df = pd.concat(frames, ignore_index=True)[columns].astype(object)
+        return sorted(tuple(None if pd.isna(v) else v for v in r) for r in df.values)
+
+    assert len(streamed) > len(whole)
+    assert rows(streamed) == rows(whole) == _rows(mor_table.read())
 
 
 def test_stream_fold_pure_python_chunks(spark, mor_table):
@@ -458,21 +475,11 @@ def test_stream_fold_pure_python_chunks(spark, mor_table):
     pd.testing.assert_frame_equal(got[list(want.columns)], want)
 
 
-def test_stream_fold_clustered_falls_back(spark, tmp_path):
-    """cluster_cols order files by non-key columns, so the streamed fold's
-    sortedness precondition fails — the reader must use the materialized
-    path (guard active) and still read correctly."""
-    base = canonicalize_snapshot(gen_repos(spark, n_keys=100, seed=3))
-    t = HashBucketParquetTable(
-        spark, str(tmp_path / "clustered"), n_buckets=2, cluster_cols=["lang"]
-    )
-    t.init(base)
-    with pytest.raises(Exception) as ei:
-        read_snapshot(spark, t.path, max_bucket_bytes=1).count()
-    assert "rebucket" in str(ei.value)  # guard active ⇒ materialized path
-    assert _rows(read_snapshot(spark, t.path).drop("op", "_version")) == _rows(
-        t.read()
-    )
+def test_stream_fold_clustered_falls_back(spark, clustered_table):
+    """The clustered table's whole-bucket fold reads what read() reads."""
+    assert _rows(
+        read_snapshot(spark, clustered_table.path).drop("op", "_version")
+    ) == _rows(clustered_table.read())
 
 
 def test_unsorted_generation_raises(tmp_path):
@@ -496,5 +503,27 @@ def test_unsorted_generation_raises(tmp_path):
     s = _SortedGenStream(
         str(d), -1, ["repo", "path"], ["repo", "path", "_digest"], batch_rows=10
     )
-    with pytest.raises(UnsortedGenerationError, match="streamfold"):
+    with pytest.raises(UnsortedGenerationError, match="foreign .* or corrupt"):
         s.pull()
+
+
+def test_null_key_part_streams(spark, tmp_path):
+    """A NULL key part sorts first, as Spark's writer puts it, so the
+    streamed fold reads the bucket holding it like any other."""
+    t = HashBucketParquetTable(spark, str(tmp_path / "t"), n_buckets=1)
+    rows = [(None, "p0", "c0", "go", "x"), ("r1", None, "c1", "py", "y"), ("r1", "p1", "c2", "go", "z")]
+    t.init(spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string"))
+    snap = read_snapshot(spark, t.path).drop("op", "_version")
+    assert sorted_reprs(snap) == sorted_reprs(t.read()) and snap.count() == 3
+
+
+def test_nan_and_null_payload_read_apart(spark, tmp_path):
+    """The reader keeps a double NaN apart from NULL, as read() does."""
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "t"), key_cols=("k",), n_buckets=1, compare_cols=("d",)
+    )
+    t.init(spark.createDataFrame([("a", float("nan")), ("b", None), ("c", 1.5)], "k string, d double"))
+    snap = read_snapshot(spark, t.path).drop("op", "_version")
+    assert sorted_reprs(snap) == sorted_reprs(t.read()) == [
+        "('a', nan)", "('b', None)", "('c', 1.5)"
+    ]

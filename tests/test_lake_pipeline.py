@@ -23,7 +23,7 @@ from bcdc2bcdc_spark.sources.lake import (
     iceberg_merge_sql,
 )
 
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, manifest_reads
 from tests.oracle import content_sha_index, replay
 
 
@@ -121,8 +121,8 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
     orig_stage = getattr(tmp_table, seam)
     won = []
 
-    def _interleaved_stage(df):
-        out = orig_stage(df)
+    def _interleaved_stage(*args):
+        out = orig_stage(*args)
         # the OTHER writer commits while this writer is still staging
         winner.upsert(_change("winner-content", 2))
         won.append(winner._meta())
@@ -169,11 +169,10 @@ class _RacingFS(LocalFS):
     "op",
     [
         lambda t: t.set_stats_cols(["lang"]),
-        lambda t: t.set_cluster_cols(["content"]),
         lambda t: t.set_write_mode("mor"),
         lambda t: t.restore(1),
     ],
-    ids=["set_stats_cols", "set_cluster_cols", "set_write_mode", "restore"],
+    ids=["set_stats_cols", "set_write_mode", "restore"],
 )
 def test_metadata_commit_loses_cleanly(spark, tmp_path, op):
     """Metadata-only commits carry the upserts' guard: a second handle
@@ -210,14 +209,36 @@ def test_metadata_commit_loses_cleanly(spark, tmp_path, op):
 
 
 def test_metadata_commits_launch_no_job(spark, tmp_path):
-    """restore and set_stats_cols are manifest-only commits: 0 Spark jobs."""
+    """restore and set_stats_cols are manifest-only commits: 0 Spark jobs;
+    a flip to the value already held is no commit."""
     sc = spark.sparkContext
     t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
     t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
     t.upsert(t.read().limit(1).withColumn("op", F.lit("DELETE")))
     assert count_jobs(sc, lambda: t.restore(1))[0] == 0
     assert count_jobs(sc, lambda: t.set_stats_cols(["lang"]))[0] == 0
+    t.set_stats_cols(["lang"])  # the same value again commits nothing
     assert t.commit_seq() == 4
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_upsert_manifest_read_budget(spark, tmp_path, mode):
+    """An upsert reads the manifest at most 5 times (schema evolution's
+    check, the base read, the commit head and the post-commit sweep) and
+    never asks whether it exists: the row layout and stats columns come
+    from the base read, not from resolvers of their own."""
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "lake"), n_buckets=4, write_mode=mode,
+        stats_cols=("lang",),
+    )
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
+    changes = t.read().limit(2).withColumn("op", F.lit("UPDATE")).withColumn(
+        "content", F.lit("budget")
+    )
+    reads, exists, _ = manifest_reads(t, lambda: t.upsert(changes))
+    assert (reads <= 5, exists) == (True, 0), (reads, exists)
+    assert t.read().where(F.col("content") == "budget").count() == 2
+    assert t._meta()["stats"]  # the stats columns still came from the manifest
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
@@ -241,8 +262,8 @@ def test_upsert_with_touched_runs_jobs_only_in_staging_write(spark, tmp_path, mo
     seam = "_write_merged" if mode == "cow" else "_write_generation"
     orig = getattr(t, seam)
 
-    def _staging_write(df):
-        jobs, out = count_jobs(sc, lambda: orig(df))
+    def _staging_write(*args):
+        jobs, out = count_jobs(sc, lambda: orig(*args))
         staging.append(jobs)
         return out
 
@@ -535,7 +556,7 @@ def test_crashed_commit_leaves_table_intact_and_is_swept(spark, tmp_path):
         canonicalize_snapshot(gen_repos(spark, n_keys=10, seed=99)),
         ["lang", "content"], "_digest",
     ).withColumn("_bucket", _bucket_expr(table.key_cols, table.n_buckets))
-    orphan_gen, _ = table._write_generation(doomed)
+    orphan_gen, _ = table._write_generation(doomed, table._meta())
     orphan_dir = os.path.join(table.data_path, orphan_gen)
     assert os.path.isdir(orphan_dir)
 
@@ -667,7 +688,7 @@ def test_commit_rejects_staged_buckets_outside_touched(spark, tmp_path):
     table.init(base)
     before = table._meta()
     with pytest.raises(ConcurrentWriteError, match="outside the declared"):
-        table._commit_generation(table._read_raw(), touched=[0])
+        table._commit_generation(table._read_raw(), [0], before)
     assert table._meta() == before  # manifest untouched by the abort
     assert datasets_equal(table.read(), base)
 
@@ -699,8 +720,8 @@ def test_maintenance_ops_lose_cleanly_to_concurrent_upsert(spark, tmp_path):
     other = HashBucketParquetTable(spark, table.path, n_buckets=4)
     orig_stage = table._write_generation
 
-    def _interleaved_stage(df):
-        out = orig_stage(df)
+    def _interleaved_stage(*args):
+        out = orig_stage(*args)
         other.upsert(_change("concurrent-win", 50))
         return out
 
