@@ -36,10 +36,12 @@ Offsets/retention: a stream that falls more than ``retain_generations``
 commits behind loses the frozen manifests it needs — same contract as
 ``read_version``. Size retention to the longest expected stream outage.
 
-The same executor-side fold runs the lake's copy-on-write commit: one
-``applyInArrow`` task per touched bucket (``cow_merge_bucket``) folds the
-bucket's change group in as its newest generation and writes the
-bucket's new file with pyarrow.
+The same executor-side code writes every generation of the lake: one
+``applyInArrow`` task per bucket writes the bucket's one file with
+pyarrow (``_write_bucket_file``). A copy-on-write upsert's task
+(``cow_merge_bucket``) folds the bucket's change group in as its newest
+generation; every other generation's task (``write_bucket_task``)
+writes its rows as given.
 """
 
 from __future__ import annotations
@@ -322,10 +324,9 @@ class UnsortedGenerationError(RuntimeError):
 
 class _SortedGenStream:
     """Sequential batched reader over ONE generation's bucket dir,
-    exploiting the writer's layout guarantee (every bucket file is sorted
-    by key_cols when no cluster_cols are declared: the Spark writer's
-    ``sortWithinPartitions`` keeps a task's file splits globally sorted
-    in filename order, and a CoW merge task writes one key-sorted file).
+    exploiting the writer's layout guarantee (when no cluster_cols are
+    declared, every bucket task writes its bucket as one file sorted by
+    key_cols).
     Keys are UNIQUE per generation (each generation is one LWW-deduped
     batch), so a buffered prefix reaching key K holds ALL of this
     generation's rows with key ≤ K. ``source`` may instead be an
@@ -494,81 +495,105 @@ def _arrow_column(s, t):
 
 #: Arrow's parquet writer keeps a column chunk's min but drops its max
 #: once a value is longer than this many bytes, and pyarrow then reads the
-#: max back as "" (an unsound bound); parquet-mr keeps neither. A CoW
-#: merge task writes such a column with no statistics at all.
+#: max back as "" (an unsound bound); parquet-mr keeps neither.
 _MAX_STAT_VALUE_BYTES = 4096
 
 
-class _StatsTooLong(Exception):
-    """A row group after the first holds a value too long for sound
-    statistics in columns the open writer keeps statistics for."""
+def _unsound_stats(table, skip: set) -> set:
+    """Columns of ``table`` (outside ``skip``) whose parquet statistics
+    Arrow's writer would get wrong: a string or binary column holding a
+    value over ``_MAX_STAT_VALUE_BYTES``, and a float column holding a
+    NaN (Arrow leaves NaN out of min/max, so ``[1.0, NaN, 3.0]`` gets max
+    3.0, and a filter ``d > 5`` pushed into the scan, or a manifest bound,
+    would skip the row that Spark's ``NaN > 5`` keeps)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def __init__(self, cols: set) -> None:
-        super().__init__(sorted(cols))
-        self.cols = cols
+    out = set()
+    for f in table.schema:
+        if f.name in skip:
+            continue
+        col = table[f.name]
+        if pa.types.is_string(f.type) or pa.types.is_binary(f.type):
+            bad = (pc.max(pc.binary_length(col)).as_py() or 0) > _MAX_STAT_VALUE_BYTES
+        elif pa.types.is_floating(f.type):
+            bad = bool(pc.any(pc.is_nan(col)).as_py())
+        else:
+            continue
+        if bad:
+            out.add(f.name)
+    return out
 
 
-def _write_bucket_file(bucket_dir: str, frames, schema, group_rows: int,
-                       no_stats: set) -> tuple[int, int]:
-    """Write the ordered ``frames`` as ONE parquet file
-    ``bucket_dir/part-00000.parquet``, in row groups of at least
-    ``group_rows`` rows (the last may be smaller). The file is written
-    under a hidden temp name and renamed into place, so a retried task
-    replaces its own output and no reader ever sees a partial file.
-    Writes nothing when the frames hold no row. Returns ``(rows,
-    bytes)``.
+def _write_bucket_file(bucket_dir: str, frames, schema, group_rows: int) -> tuple[int, int]:
+    """Write the ordered ``frames`` (pandas frames, or Arrow tables of
+    ``schema``) as ONE parquet file ``bucket_dir/part-00000.parquet``, in
+    row groups of ``group_rows`` rows (the last may be smaller), however
+    the frames are cut: a clustered bucket arrives as one frame, and its
+    row groups are what a pushed filter skips.
+    The file is written under a hidden temp name and renamed into place,
+    so a retried task replaces its own output and no reader ever sees a
+    partial file. Writes nothing when the frames hold no row. Returns
+    ``(rows, bytes)``.
 
-    Columns in ``no_stats``, and string/binary columns whose first row
-    group holds a value over ``_MAX_STAT_VALUE_BYTES``, get no
-    statistics; such a value in a later row group raises
-    ``_StatsTooLong`` (the caller re-runs with those columns added)."""
+    Columns whose statistics would be unsound (``_unsound_stats``) get
+    none, in every row group: the first row group decides, and a later
+    one that finds another such column rewrites the groups written so far
+    into a fresh temp file without that column's statistics (frames are
+    consumed once, so the task's input is never replayed)."""
     import uuid
 
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     final = os.path.join(bucket_dir, "part-00000.parquet")
-    tmp = os.path.join(bucket_dir, f".part-00000.{uuid.uuid4().hex}.tmp")
-    writer = None
+    no_stats: set = set()
+    writer = tmp = None
     pending: list = []
-    rows = 0
+    rows = buffered = 0
 
-    def flush():
-        nonlocal writer
-        df = pd.concat(pending, ignore_index=True)
-        pending.clear()
-        table = pa.Table.from_arrays(
-            [_arrow_column(df[f.name], f.type) for f in schema], schema=schema
+    def open_writer():
+        nonlocal writer, tmp
+        tmp = os.path.join(bucket_dir, f".part-00000.{uuid.uuid4().hex}.tmp")
+        writer = pq.ParquetWriter(
+            tmp, schema, write_statistics=[n for n in schema.names if n not in no_stats]
         )
-        long = {
-            f.name
-            for f in schema
-            if (pa.types.is_string(f.type) or pa.types.is_binary(f.type))
-            and f.name not in no_stats
-            and (pc.max(pc.binary_length(table[f.name])).as_py() or 0) > _MAX_STAT_VALUE_BYTES
-        }
+
+    def flush(table):
+        unsound = _unsound_stats(table, no_stats)
+        no_stats.update(unsound)
         if writer is None:
-            no_stats.update(long)
             os.makedirs(bucket_dir, exist_ok=True)
-            writer = pq.ParquetWriter(
-                tmp, schema, write_statistics=[n for n in schema.names if n not in no_stats]
-            )
-        elif long:
-            raise _StatsTooLong(long)
+            open_writer()
+        elif unsound:
+            old = tmp
+            writer.close()
+            open_writer()
+            with pq.ParquetFile(old) as pf:
+                for g in range(pf.num_row_groups):
+                    writer.write_table(pf.read_row_group(g))
+            os.remove(old)
         writer.write_table(table)
 
     try:
-        for df in frames:
-            if not len(df):
+        for frame in frames:
+            if not len(frame):
                 continue
-            pending.append(df)
-            rows += len(df)
-            if sum(len(p) for p in pending) >= group_rows:
-                flush()
-        if pending:
-            flush()
+            if isinstance(frame, pd.DataFrame):
+                frame = pa.Table.from_arrays(
+                    [_arrow_column(frame[f.name], f.type) for f in schema], schema=schema
+                )
+            pending.append(frame)
+            rows += len(frame)
+            buffered += len(frame)
+            while buffered >= group_rows:
+                table = pa.concat_tables(pending)
+                flush(table.slice(0, group_rows))
+                pending = [table.slice(group_rows)]
+                buffered -= group_rows
+        if buffered:
+            flush(pa.concat_tables(pending))
     except BaseException:
         if writer is not None:
             writer.close()
@@ -581,12 +606,26 @@ def _write_bucket_file(bucket_dir: str, frames, schema, group_rows: int,
     return rows, os.path.getsize(final)
 
 
+def _task_result(bucket: int, rows: int, nbytes: int):
+    """A bucket task's one output row ``(bucket, rows, bytes)``."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "bucket": pa.array([bucket], pa.int32()),
+            "rows": pa.array([rows], pa.int64()),
+            "bytes": pa.array([nbytes], pa.int64()),
+        }
+    )
+
+
 def _cluster_sort(df, key_cols: list[str], cluster: dict):
-    """Order one bucket's merged rows as the Spark writer does
-    (lake._write_generation): cluster columns then the remaining keys,
-    NULLs first; a Z-order table with ≥ 2 present cluster columns sorts by
-    the bit-interleaved quantile cell (lake._z_values_np, split points
-    from these rows) then the remaining keys."""
+    """Order one bucket's rows of a clustered table: cluster columns then
+    the remaining keys, NULLs first; a Z-order table with ≥ 2 present
+    cluster columns sorts by the bit-interleaved quantile cell
+    (``lake._z_values_np``, split points from these rows) then the
+    remaining keys. Both bucket tasks sort with it (``write_bucket_task``
+    and ``cow_merge_bucket``)."""
     cols = cluster["cols"]
     present = [c for c in cols if c in df.columns]
     tiebreak = [k for k in key_cols if k not in cols]
@@ -602,27 +641,61 @@ def _cluster_sort(df, key_cols: list[str], cluster: dict):
     return df.sort_values([*present, *tiebreak], kind="mergesort", na_position="first")
 
 
+def write_bucket_task(plan: dict):
+    """The write-as-given bucket task (``groupBy("_bucket").applyInArrow``,
+    iterator form): write one bucket's rows, as they arrive, as the
+    bucket's one file of the generation ``plan["out"]``, and yield one
+    row ``(bucket, rows, bytes)``. A key-sorted table's rows arrive
+    sorted by key (the plan sorts them), so the task holds one Arrow
+    batch and one row group at a time; a clustered table's task gathers
+    the bucket and orders it with ``_cluster_sort``. ``plan`` carries
+    the file schema, the key columns and the cluster layout (see
+    ``HashBucketParquetTable._given_plan``)."""
+    import pyarrow as pa
+
+    def task(key, batches):
+        bucket = int(key[0].as_py())
+        schema = plan["arrow_schema"]
+        frames = (
+            pa.Table.from_batches([rb]).select(schema.names).cast(schema) for rb in batches
+        )
+        if plan["cluster"]["cols"]:
+            whole = pa.concat_tables(list(frames)).to_pandas(types_mapper=_nullable_dtypes().get)
+            frames = [_cluster_sort(whole, plan["key_cols"], plan["cluster"])]
+        rows, nbytes = _write_bucket_file(
+            os.path.join(plan["out"], f"_bucket={bucket}"), frames, schema, STREAM_FOLD_BATCH_ROWS
+        )
+        yield from _task_result(bucket, rows, nbytes).to_batches()
+
+    # these hints select applyInArrow's iterator form
+    task.__annotations__ = {
+        "key": tuple,
+        "batches": Iterator[pa.RecordBatch],
+        "return": Iterator[pa.RecordBatch],
+    }
+    return task
+
+
 def cow_merge_bucket(plan: dict, group):
-    """One CoW merge task (``groupBy("_bucket").applyInArrow``): fold the
-    bucket's change group into its base + outstanding MOR deltas as the
-    newest generation, and write the result as the new generation's
-    bucket file. ``group`` is the Arrow change group (payload, ``op``,
-    ``_bucket``, and ``_digest`` when the JVM digested it; otherwise it
-    is digested here with ``pd_row_digest``, the Arrow UDF's function).
-    Merge semantics are ``_fold_frame``'s: DELETE drops the key (a DELETE
-    of a missing key is a no-op), an upsert whose digest equals the
-    stored one keeps the stored row and its ``commit``, else the change
-    row wins. ``plan`` carries what the driver resolved from the
-    manifest (see ``HashBucketParquetTable._cow_merged_plan``).
+    """The fold bucket task of a CoW upsert (``groupBy("_bucket").applyInArrow``):
+    fold the bucket's change group into its base + outstanding MOR deltas
+    as the newest generation, and write the result as the new
+    generation's bucket file. ``group`` is the Arrow change group
+    (payload, ``op``, ``_bucket``, and ``_digest`` when the JVM digested
+    it; otherwise it is digested here with ``pd_row_digest``, the Arrow
+    UDF's function). Merge semantics are ``_fold_frame``'s: DELETE drops
+    the key (a DELETE of a missing key is a no-op), an upsert whose
+    digest equals the stored one keeps the stored row and its ``commit``,
+    else the change row wins. ``plan`` carries what the driver resolved
+    from the manifest (see ``HashBucketParquetTable._cow_merged_plan``).
 
     Key-sorted tables (no ``cluster_cols``) stream through
     ``_fold_bucket_streamed`` (bounded memory); clustered tables fold the
-    whole bucket and sort it here. Returns one row ``(bucket, rows,
-    bytes)``; 0 rows means the merge emptied the bucket and wrote no
-    file."""
+    whole bucket and sort it with ``_cluster_sort``. The writer is
+    ``write_bucket_task``'s. Returns one row ``(bucket, rows, bytes)``; 0
+    rows means the merge emptied the bucket and wrote no file."""
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
 
     bucket = int(group.column("_bucket")[0].as_py())
     key_cols, columns = plan["key_cols"], plan["columns"]
@@ -637,39 +710,22 @@ def cow_merge_bucket(plan: dict, group):
     changes = changes.iloc[np.lexsort(_key_codes(changes, key_cols)[::-1])].reset_index(drop=True)
     spec = _bucket_spec(plan, plan["path"], str(bucket))
     redigest = plan["redigest_cols"]
-
-    def folded():
-        if not plan["cluster"]["cols"]:
-            return _fold_bucket_streamed(
-                spec, key_cols, columns, redigest, changes=changes
-            )
+    if not plan["cluster"]["cols"]:
+        folded = _fold_bucket_streamed(spec, key_cols, columns, redigest, changes=changes)
+    else:
         versions = pd.concat(
             [_load_versions(spec, columns), changes.assign(_seq=_CHANGES_SEQ)],
             ignore_index=True,
         )
         merged = _fold_frame(versions, key_cols, redigest)
-        return [_cluster_sort(merged, key_cols, plan["cluster"])]
-
-    no_stats = set()
-    while True:
-        try:
-            rows, nbytes = _write_bucket_file(
-                os.path.join(plan["out"], f"_bucket={bucket}"),
-                folded(),
-                plan["arrow_schema"],
-                STREAM_FOLD_BATCH_ROWS,
-                no_stats,
-            )
-            break
-        except _StatsTooLong as e:
-            no_stats |= e.cols
-    return pa.table(
-        {
-            "bucket": pa.array([bucket], pa.int32()),
-            "rows": pa.array([rows], pa.int64()),
-            "bytes": pa.array([nbytes], pa.int64()),
-        }
+        folded = [_cluster_sort(merged, key_cols, plan["cluster"])]
+    rows, nbytes = _write_bucket_file(
+        os.path.join(plan["out"], f"_bucket={bucket}"),
+        folded,
+        plan["arrow_schema"],
+        STREAM_FOLD_BATCH_ROWS,
     )
+    return _task_result(bucket, rows, nbytes)
 
 
 def _diff_bucket(old_spec: dict, new_spec: dict, key_cols: list[str],

@@ -41,8 +41,14 @@ Write modes (Iceberg v2's ``write.merge.mode`` duality):
   rewrite actions), restoring scan-speed reads; read-time-merge results
   are bit-identical before and after.
 
+One generation writer. Every generation — ``init``, an upsert, a
+maintenance rewrite — is staged by ``_write_generation``: one Arrow task
+per bucket writes the bucket's one parquet file
+(``datasource._write_bucket_file``), folding a CoW change group into the
+bucket or writing its rows as given.
+
 One commit path. An upsert is a staging published at once: ``_stage``
-runs the merge tasks (CoW) or the delta write job (MOR) and returns a
+runs the bucket tasks (a CoW merge or a MOR delta) and returns a
 ``StagedUpsert``; ``upsert`` publishes it immediately, ``stage_upsert``
 hands it to the caller for an audit first. ``_apply_generation`` is the
 one mapping of a staged generation into a manifest (CoW swap, MOR delta
@@ -102,56 +108,13 @@ def _bucket_expr(key_cols: Sequence[str], n_buckets: int):
 _Z_BITS = 6
 
 
-def _z_surrogate(col_name: str, dt) -> F.Column:
-    """An order-preserving NUMERIC image of a cluster column, for quantile
-    ranking. Strings use a 2-byte code-point prefix (coarse for non-ASCII
-    data — ranks only need a monotone image, not an injection); booleans
-    and numerics cast; anything else casts-to-double and degrades to rank
-    0 where the cast nulls out (harmless: the column simply stops
-    contributing order, it never breaks correctness)."""
-    c = F.col(col_name)
-    if isinstance(dt, T.StringType):
-        return (
-            F.coalesce(F.ascii(F.substring(c, 1, 1)), F.lit(-1)) * 256
-            + F.coalesce(F.ascii(F.substring(c, 2, 1)), F.lit(0))
-        ).cast("double")
-    if isinstance(dt, T.BooleanType):
-        return c.cast("int").cast("double")
-    return c.cast("double")
-
-
-def _z_rank(surrogate: F.Column, splits: list[float]) -> F.Column:
-    """Quantile cell id (0 .. len(splits)) = how many split points the
-    value is ≥ of — one pass over a LITERAL array per row, pure codegen
-    (no join, no shuffle). NULL surrogates rank 0 (NULLS FIRST)."""
-    arr = F.array(*[F.lit(float(s)) for s in splits])
-    return F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, s: acc + F.when(surrogate >= s, 1).otherwise(0),
-    )
-
-
-def _z_interleave(ranks: list[F.Column]) -> F.Column:
-    """Bit-interleave per-dimension cell ids into one sort value:
-    bit i of dimension d lands at position i*D + d, so the sort refines
-    all dimensions together instead of exhausting the first one first."""
-    n_dims = len(ranks)
-    z = F.lit(0).cast("long")
-    for i in range(_Z_BITS):
-        for d, r in enumerate(ranks):
-            z = z + F.shiftleft(
-                F.shiftright(r.cast("long"), i).bitwiseAND(F.lit(1)),
-                i * n_dims + d,
-            )
-    return z
-
-
 def _z_surrogate_np(s, dt):
-    """``_z_surrogate`` over a pandas column (a CoW merge task sorts its
-    bucket with it): the same numeric image, NaN where the Column version
-    is NULL. A float NaN maps to +inf, the place Spark's ordering gives
-    it."""
+    """An order-preserving NUMERIC image of one cluster column (a pandas
+    column of a bucket's rows), for quantile ranking. Strings use a
+    2-byte code-point prefix (coarse for non-ASCII data — ranks only need
+    a monotone image, not an injection); a NULL string maps to -256,
+    below every string. Booleans and numerics cast, with NULL as NaN and
+    a float NaN as +inf, the place Spark's ordering gives it."""
     import numpy as np
     import pandas as pd
 
@@ -169,8 +132,9 @@ def _z_surrogate_np(s, dt):
 
 
 def _z_rank_np(surrogate, splits):
-    """``_z_rank`` over a numpy surrogate: how many of the sorted, unique
-    ``splits`` each value is ≥ of; NaN (NULL) ranks 0."""
+    """Quantile cell id (0 .. len(splits)) of each surrogate value: how
+    many of the sorted, unique ``splits`` it is ≥ of; NaN (NULL) ranks 0
+    (NULLS FIRST)."""
     import numpy as np
 
     rank = np.searchsorted(np.asarray(splits, dtype=np.float64), surrogate, side="right")
@@ -178,7 +142,9 @@ def _z_rank_np(surrogate, splits):
 
 
 def _z_interleave_np(ranks):
-    """``_z_interleave`` over numpy rank arrays."""
+    """Bit-interleave per-dimension cell ids into one sort value: bit i
+    of dimension d lands at position i*D + d, so the sort refines all
+    dimensions together instead of exhausting the first one first."""
     import numpy as np
 
     n_dims = len(ranks)
@@ -190,11 +156,12 @@ def _z_interleave_np(ranks):
 
 
 def _z_values_np(df, cols, types):
-    """The Z-value of each row of one bucket's merged rows: the numpy
-    mirror of ``HashBucketParquetTable._zorder_sort_col``, with each
-    column's ``2^_Z_BITS`` quantile split points taken from these rows
-    (exact quantiles where the Spark writer uses approxQuantile over the
-    whole generation)."""
+    """The Z-value of each row of one bucket's rows, the only Z-order of
+    the lake (``datasource._cluster_sort`` sorts by it in every bucket
+    task): each cluster column's surrogate is ranked into ``2^_Z_BITS``
+    cells by exact quantile split points taken from these rows (an
+    all-NULL column contributes rank 0), then the ranks' bits are
+    interleaved."""
     import numpy as np
 
     probs = [j / (1 << _Z_BITS) for j in range(1, 1 << _Z_BITS)]
@@ -293,6 +260,17 @@ def _stats_entry_excludes(entry: dict | None, op: str, val) -> bool:
     except TypeError:
         return False  # incomparable value/stat types — never exclude
     return False
+
+
+def _file_schema(schema: T.StructType, delta: bool = False) -> T.StructType:
+    """What a generation's files physically hold: the payload of
+    ``schema``, the persisted digest and, in a MOR ``delta``, the op
+    marker (ADD/UPDATE upsert vs DELETE tombstone). The bucket id is
+    derivable from the keys, never stored."""
+    extra = ["_digest", "op"] if delta else ["_digest"]
+    return T.StructType(
+        list(schema.fields) + [T.StructField(c, T.StringType(), True) for c in extra]
+    )
 
 
 def _apply_generation(
@@ -508,10 +486,11 @@ class HashBucketParquetTable:
     #:   trailing column's whole domain).
     #: * "zorder" — bit-interleaved Z-ordering (Delta OPTIMIZE ZORDER
     #:   analog): each cluster column is quantile-ranked into 2^6 cells
-    #:   over the generation being written (one approxQuantile pass,
-    #:   O(written bytes)) and the ranks' bits are interleaved into one
-    #:   sort value, so row-group min/max become selective on EVERY
-    #:   cluster dimension at the cost of coarser per-dimension locality.
+    #:   over the bucket being written (exact quantiles of the bucket's
+    #:   own rows, in its write task: no extra Spark job) and the ranks'
+    #:   bits are interleaved into one sort value (``_z_values_np``), so
+    #:   row-group min/max become selective on EVERY cluster dimension at
+    #:   the cost of coarser per-dimension locality.
     #: Seeds ``init()`` (an unknown value is rejected there) and is
     #: persisted; it is not flippable afterwards. Layout-only: no read
     #: path changes either way.
@@ -543,7 +522,9 @@ class HashBucketParquetTable:
 
     def init(self, df: DataFrame) -> None:
         """Create the table from a snapshot. Overwrites any prior state.
-        Computes and persists the `_digest` column."""
+        Computes and persists the `_digest` column. A column type the
+        bucket writer cannot map to Arrow raises ``TypeError`` before
+        anything is written (``_given_plan``)."""
         self._check_writable()
         bcols = list(self.bucket_cols or self.key_cols)
         if not set(bcols) <= set(self.key_cols):
@@ -572,13 +553,12 @@ class HashBucketParquetTable:
             "cluster_strategy": self._validated_strategy(self.cluster_strategy),
             "commit_seq": 1,
         }
-        gen, written = self._write_generation(
-            with_row_digest(df, compare, "_digest", impl="jvm").withColumn(
-                "_bucket", _bucket_expr(bcols, self.n_buckets)
-            ),
-            meta,
+        gen = self._new_gen()
+        rows = with_row_digest(df, compare, "_digest", impl="jvm").withColumn(
+            "_bucket", _bucket_expr(bcols, self.n_buckets)
         )
-        meta["buckets"] = {str(b): gen for b in written}
+        tasks = self._write_generation(self._given_plan(rows, meta, gen), gen, meta)
+        meta["buckets"] = {str(b): gen for b in tasks}
         if gen in self._pending_gen_stats:
             meta["stats"] = {gen: self._pending_gen_stats.pop(gen)}
         self.fs.write_json_atomic(self.meta_path, meta)
@@ -596,81 +576,69 @@ class HashBucketParquetTable:
         return f"gen-{_uuid.uuid4().hex[:12]}"
 
     def _write_generation(
-        self, df_with_bucket: DataFrame, meta: dict
-    ) -> tuple[str, set[int]]:
-        """Stage one immutable generation with Spark's writer — ``init``,
-        the maintenance rewrites (``compact``, ``compact_deltas``,
-        ``redigest``, ``rebucket``) and MOR deltas; a CoW upsert writes
-        through its merge tasks instead (``_write_merged``). ONE shuffle
-        by bucket (each bucket dir written by few tasks — no small-file
-        explosion), ONE write job, then a single listing of the FRESH
-        output to learn which buckets produced rows. Nothing existing is
-        touched. The row layout and the stats columns come from ``meta``,
-        the manifest the caller holds (``init``'s own settings)."""
-        gen = self._new_gen()
-        out = os.path.join(self.data_path, gen)
-        # sortWithinPartitions: rows inside each bucket file are ordered by
-        # the cluster columns (key_cols when none are declared, keys as
-        # tiebreak otherwise), so parquet row-group min/max stats on those
-        # columns become selective — a filter Catalyst pushes into the
-        # scan (a clustered-range read_where) skips row groups inside the
-        # buckets it reads (free at write time, the sort rides the same
-        # shuffle). A lookup's semi-join pushes no such filter.
-        ccols = meta.get("cluster_cols", [])
-        present = [c for c in ccols if c in df_with_bucket.columns]
-        tiebreak = [k for k in self.key_cols if k not in ccols]
-        if meta.get("cluster_strategy") == "zorder" and len(present) >= 2:
-            # Z-order: sort by the bit-interleaved quantile-cell value so
-            # row groups stay narrow on EVERY cluster dimension. Costs one
-            # extra pass over the staged generation (approxQuantile) —
-            # opt-in, like Delta's OPTIMIZE ZORDER rewrite cost.
-            order: list = [self._zorder_sort_col(df_with_bucket, present), *tiebreak]
-        else:
-            order = [*present, *tiebreak]
-        (
-            # `_bucket` must LEAD the sort: partitionBy's writer requires
-            # task rows ordered by the partition columns and would insert
-            # its own (non-stable) sort on `_bucket` alone otherwise,
-            # destroying the secondary order the row-group stats depend on
-            df_with_bucket.repartition("_bucket")
-            .sortWithinPartitions("_bucket", *order)
-            .write.partitionBy("_bucket")
-            .parquet(out)
-        )
-        written = {
-            int(d.split("=", 1)[1])
-            for d in self.fs.list_subdirs(out)
-            if d.startswith("_bucket=")
-        }
-        if written:
-            stats = self._collect_gen_stats(out, meta)
-            if stats:
-                self._pending_gen_stats[gen] = stats
-        return gen, written
+        self, tasks: DataFrame, gen: str, meta: dict
+    ) -> dict[int, tuple[int, int]]:
+        """The one staging write of every generation: run ``tasks``, one
+        ``applyInArrow`` task per bucket that writes the bucket's one
+        file of the new generation ``gen`` (``_given_plan`` writes rows
+        as given: ``init``, the maintenance rewrites and MOR deltas;
+        ``_cow_merged_plan`` folds a CoW upsert's change set), in one job
+        after the input's shuffle. Nothing existing is touched. Returns
+        ``{bucket: (rows, bytes)}`` for every bucket that got a task (0
+        rows: a CoW merge emptied the bucket and wrote no file). The
+        written buckets' bounds for ``meta``'s stats columns are read
+        from the new files' footers and wait for the commit."""
+        out = {int(r[0]): (int(r[1]), int(r[2])) for r in tasks.collect()}
+        written = {b for b, (rows, _) in out.items() if rows}
+        stats = self._collect_gen_stats(gen, written, meta)
+        if stats:
+            self._pending_gen_stats[gen] = stats
+        return out
 
-    def _zorder_sort_col(self, df: DataFrame, cols: Sequence[str]) -> F.Column:
-        """The Z-value sort expression for one staged generation: each
-        cluster column's numeric surrogate is quantile-ranked into
-        ``2^_Z_BITS`` cells (split points from ONE approxQuantile job over
-        the generation being written — O(written bytes), adapts to skew
-        the way Delta's range-partition ids do), then the cell ids'
-        bits are interleaved. Everything after the quantile probe is a
-        literal-array codegen expression riding the write's own shuffle."""
-        dts = {f.name: f.dataType for f in df.schema.fields}
-        surrogates = [(c, _z_surrogate(c, dts[c])) for c in cols]
-        probe = df.select(
-            *[s.alias(f"__zs_{i}") for i, (_, s) in enumerate(surrogates)]
+    def _bucket_plan(self, meta: dict, gen: str, delta: bool = False) -> dict:
+        """What every bucket task of generation ``gen`` takes from the
+        manifest: the output dir, the key columns, the files' Arrow schema
+        (``_file_schema``; every column type must map to Arrow,
+        ``datasource._arrow_schema``, else ``TypeError``) and the cluster
+        layout ``datasource._cluster_sort`` orders a clustered bucket by."""
+        from bcdc2bcdc_spark.sources.datasource import _arrow_schema
+
+        schema = T.StructType.fromJson(meta["schema"])
+        ccols = meta.get("cluster_cols", [])
+        return {
+            "out": os.path.join(self.data_path, gen),
+            "key_cols": list(self.key_cols),
+            "arrow_schema": _arrow_schema(_file_schema(schema, delta)),
+            "cluster": {
+                "cols": ccols,
+                "strategy": meta.get("cluster_strategy", "lexicographic"),
+                "types": {f.name: f.dataType for f in schema.fields if f.name in ccols},
+            },
+        }
+
+    def _given_plan(
+        self, rows: DataFrame, meta: dict, gen: str, delta: bool = False
+    ) -> DataFrame:
+        """The write-as-given tasks of generation ``gen``, lazy: ``rows``
+        (the file columns and ``_bucket``; ``op`` too for a MOR ``delta``)
+        shuffled by ``_bucket`` and written by one
+        ``datasource.write_bucket_task`` per bucket. A task's work is the
+        rows it is sent, so AQE may coalesce the shuffle's partitions by
+        size, as it did for the Spark writer: a small generation runs in
+        one Python worker. A key-sorted table's rows are sorted by
+        ``(_bucket, *key_cols)`` in the shuffle's partitions — the sort
+        the grouping needs anyway, extended — so each task streams its
+        bucket in key order; a clustered table's task orders its bucket
+        itself."""
+        from bcdc2bcdc_spark.sources.datasource import write_bucket_task
+
+        plan = self._bucket_plan(meta, gen, delta)
+        shuffled = rows.select(*plan["arrow_schema"].names, "_bucket").repartition("_bucket")
+        if not plan["cluster"]["cols"]:
+            shuffled = shuffled.sortWithinPartitions("_bucket", *self.key_cols)
+        return shuffled.groupBy("_bucket").applyInArrow(
+            write_bucket_task(plan), "bucket int, rows long, bytes long"
         )
-        probs = [j / (1 << _Z_BITS) for j in range(1, 1 << _Z_BITS)]
-        all_splits = probe.stat.approxQuantile(
-            [f"__zs_{i}" for i in range(len(surrogates))], probs, 0.01
-        )
-        ranks = []
-        for (_c, s), sp in zip(surrogates, all_splits):
-            uniq = sorted({x for x in sp if x is not None})
-            # all-NULL / constant column: contributes nothing to the order
-            ranks.append(_z_rank(s, uniq) if uniq else F.lit(0))
-        return _z_interleave(ranks)
 
     #: arrow types whose parquet footer stats we trust for bounds — the
     #: arrow mirror of ``_STATS_TYPES`` (date/timestamp/decimal stay out of
@@ -687,20 +655,23 @@ class HashBucketParquetTable:
             or pa.types.is_floating(t)
         )
 
-    def _collect_gen_stats(self, out: str, meta: dict) -> dict:
-        """Per-bucket min/max/nonnull for ``meta``'s ``stats_cols`` over a
-        FRESHLY WRITTEN generation, read from the files' parquet FOOTERS
-        (row-group statistics + null counts): O(files) driver-side metadata
-        reads, ZERO data scanned and ZERO Spark jobs — the
-        manifests-from-file-metadata pattern Iceberg uses (guide §6;
-        formerly one aggregate job over the written bytes per commit).
+    def _collect_gen_stats(self, gen: str, written: set[int], meta: dict) -> dict:
+        """Per-bucket min/max/nonnull for ``meta``'s ``stats_cols`` over
+        the ``written`` buckets of a FRESHLY WRITTEN generation, read from
+        the files' parquet FOOTERS (row-group statistics + null counts):
+        O(files) driver-side metadata reads, ZERO data scanned and ZERO
+        Spark jobs — the manifests-from-file-metadata pattern Iceberg uses
+        (guide §6; formerly one aggregate job over the written bytes per
+        commit).
 
         Conservative by construction: a column whose stats any row group
-        omits (e.g. huge binary values, NaN-bearing floats — writers drop
-        min/max for those) simply leaves that bucket's entry, and a missing
-        entry can never exclude a bucket on the read side. A column that is
-        entirely NULL in a bucket yields the same ``{min: None, max: None,
-        nonnull: 0}`` entry the old aggregate produced.
+        omits leaves that bucket's entry, and a missing entry can never
+        exclude a bucket on the read side. The bucket writer omits them
+        where Arrow's would be unsound (``datasource._unsound_stats``: a
+        NaN-bearing float column, whose min/max leave NaN out, and a
+        string or binary value over 4096 bytes). A column that is
+        entirely NULL in a bucket yields the same ``{min: None, max:
+        None, nonnull: 0}`` entry the old aggregate produced.
 
         The manifest is the only authority once the table exists, with no
         constructor fallback: ``_usable_bounds_preds`` prunes from the
@@ -713,10 +684,8 @@ class HashBucketParquetTable:
         import pyarrow.parquet as pq
 
         stats: dict = {}
-        for d in sorted(self.fs.list_subdirs(out)):
-            if not d.startswith("_bucket="):
-                continue
-            bdir = os.path.join(out, d)
+        for b in sorted(written):
+            bdir = self._bucket_dir(b, gen)
             # col -> [min, max, nonnull]; None value = stats unusable
             acc: dict[str, list | None] = {}
             for fname in self.fs.list_files(bdir, ".parquet"):
@@ -760,7 +729,7 @@ class HashBucketParquetTable:
                 if v is not None
             }
             if entry:
-                stats[str(int(d.split("=", 1)[1]))] = entry
+                stats[str(b)] = entry
         return stats
 
     def _commit_meta_flip(self, field: str, value, default=None) -> None:
@@ -878,28 +847,28 @@ class HashBucketParquetTable:
     def data_schema(self) -> T.StructType:
         return T.StructType.fromJson(self._meta()["schema"])
 
-    def _file_schema(self) -> T.StructType:
-        # what generation files physically hold: payload + persisted digest
-        # (the bucket id is derivable from the keys, never stored)
-        return T.StructType(
-            list(self.data_schema().fields)
-            + [T.StructField("_digest", T.StringType(), True)]
-        )
-
-    def evolve(self, incoming: T.StructType) -> bool:
+    def evolve(self, incoming: T.StructType, meta: dict | None = None) -> bool:
         """Widen the table schema to accept ``incoming`` payload columns:
         new columns append (existing files backfill NULL on read — the
         explicit-schema read makes this free, exactly like Iceberg
-        ADD COLUMN); widened types update; narrowing raises. Metadata-only —
-        no data files are rewritten. Returns True if the schema changed."""
-        from bcdc2bcdc_spark.evolution import unioned_schema
+        ADD COLUMN); widened types update; narrowing raises, and so does
+        a type the bucket writer cannot map to Arrow (``TypeError``, as
+        at ``init``). Metadata-only — no data files are rewritten.
+        Returns True if the schema changed.
 
-        current = self.data_schema()
+        ``meta`` is the caller's manifest read (else it is read here);
+        an evolution updates it in place to the manifest it writes."""
+        from bcdc2bcdc_spark.evolution import unioned_schema
+        from bcdc2bcdc_spark.sources.datasource import _arrow_schema
+
+        if meta is None:
+            meta = self._meta()
+        current = T.StructType.fromJson(meta["schema"])
         evolved = unioned_schema(current, incoming)
         if evolved.jsonValue() == current.jsonValue():
             return False
         self._check_writable()
-        meta = self._meta()
+        _arrow_schema(evolved)
         base_seq = int(meta.get("commit_seq", 0))
         meta["schema"] = evolved.jsonValue()
         # Evolved payload columns JOIN the compare set (they are user data,
@@ -940,18 +909,6 @@ class HashBucketParquetTable:
         meta = self._meta()
         return self._read_raw_from(meta, buckets).withColumn(
             "_bucket", self._bucket_of(meta)
-        )
-
-    def _delta_file_schema(self, schema: T.StructType | None = None) -> T.StructType:
-        """What MOR delta files physically hold: payload + persisted digest
-        + the op marker (ADD/UPDATE upsert vs DELETE tombstone)."""
-        base = schema if schema is not None else self.data_schema()
-        return T.StructType(
-            list(base.fields)
-            + [
-                T.StructField("_digest", T.StringType(), True),
-                T.StructField("op", T.StringType(), True),
-            ]
         )
 
     def _delta_index(
@@ -1027,11 +984,12 @@ class HashBucketParquetTable:
     ) -> DataFrame:
         """Manifest-resolved read with outstanding MOR deltas FOLDED IN —
         same output shape as ``_read_raw_from`` (payload + ``_digest``), so
-        every rewrite path (CoW upsert base, compaction, redigest, rebucket)
-        sees the merged truth. Zero overhead when the requested buckets
-        have no deltas (plain base scan). Callers that stage the result as
-        a generation add ``_bucket`` themselves (``_bucket_of``); readers
-        never pay for it."""
+        every maintenance rewrite (``compact``, ``compact_deltas``,
+        ``redigest``, ``rebucket``) stages the merged truth; a CoW upsert's
+        merge tasks fold the deltas themselves. Zero overhead when the
+        requested buckets have no deltas (plain base scan). Callers that
+        stage the result as a generation add ``_bucket`` themselves
+        (``_bucket_of``); readers never pay for it."""
         if meta is None:
             meta = self._meta()
         schema = T.StructType.fromJson(meta["schema"])
@@ -1043,7 +1001,7 @@ class HashBucketParquetTable:
             base.withColumn("op", F.lit(None).cast("string"))
             .withColumn("_seq", F.lit(-1).cast("long"))
         ]
-        dschema = self._delta_file_schema(schema)
+        dschema = _file_schema(schema, delta=True)
         for _gen, seq, dirs in deltas:
             parts.append(
                 self.spark.read.schema(dschema)
@@ -1067,10 +1025,7 @@ class HashBucketParquetTable:
         """``_read_raw`` against an EXPLICIT manifest (current or a frozen
         history manifest — time travel shares the code path), without the
         ``_bucket`` column: payload + ``_digest``."""
-        schema = T.StructType(
-            list(T.StructType.fromJson(meta["schema"]).fields)
-            + [T.StructField("_digest", T.StringType(), True)]
-        )
+        schema = _file_schema(T.StructType.fromJson(meta["schema"]))
         bmap = meta.get("buckets", {})
         items = (
             bmap.items()
@@ -1495,12 +1450,10 @@ class HashBucketParquetTable:
         contents), so a crashed epoch is safely re-applied from checkpoint.
 
         ``touched`` may pass a precomputed (superset of the) touched-bucket
-        id set. A CoW upsert runs no discovery job either way: one merge
+        id set. An upsert runs no discovery job either way: one bucket
         task runs per bucket that holds a change, and only those buckets
         are committed, so a bucket ``touched`` names without a change
-        keeps its files; ``touched`` is checked to cover them. A MOR
-        upsert without ``touched`` collects the change set's bucket ids
-        first (one more pass of the change-set plan).
+        keeps its files; ``touched`` is checked to cover them.
 
         Concurrency — OPTIMISTIC, single-winner: the commit head
         (``_commit``) re-reads the manifest and ABORTS with
@@ -1526,21 +1479,21 @@ class HashBucketParquetTable:
     ) -> "StagedUpsert":
         """The one staging body of ``upsert`` and ``stage_upsert``: evolve
         the schema, validate the compare set and write the change set as a
-        generation. Commits nothing; the returned handle's ``publish``
-        does.
+        generation through ``_write_generation``, from one manifest read.
+        Commits nothing; the returned handle's ``publish`` does.
 
-        CoW: ``_cow_merged_plan`` groups the change set by bucket and
-        ``_write_merged`` runs one Arrow merge task per bucket that holds
-        a change (one shuffle of the change set, no base shuffle, no
-        discovery job). The staging's touched set is exactly the buckets
-        that got a task; a caller's ``touched`` is only checked to cover
-        them, never committed itself (a bucket it names with no change
-        keeps its rows). MOR: ``_mor_delta_frame`` appends the change set
-        as a delta through ``_write_generation``; without ``touched`` it
-        first collects the change set's bucket ids."""
+        One bucket task runs per bucket that holds a change (one shuffle
+        of the change set, no base shuffle, no discovery job): CoW folds
+        the change group into the bucket (``_cow_merged_plan``), MOR
+        writes it as the bucket's delta, ``op`` column and all
+        (``_given_plan``): DELETE rows are tombstones, ADD/UPDATE rows
+        upserts, resolved per key at read time. The staging's touched
+        set is exactly the buckets that got a task; a caller's
+        ``touched`` is only checked to cover them, never committed itself
+        (a bucket it names with no change keeps its rows)."""
         self._check_writable()
-        changes = self._evolve_and_reconcile(changes)
         meta = self._meta()
+        changes = self._evolve_and_reconcile(changes, meta)
         base_seq = int(meta.get("commit_seq", 0))
         persisted = list(meta.get("compare_cols", self.compare_cols))
         if compare_cols is not None and list(compare_cols) != persisted:
@@ -1555,52 +1508,33 @@ class HashBucketParquetTable:
         empty = StagedUpsert(self, None, set(), [], base_seq, meta, mode)
         if touched is not None and not touched:
             return empty  # empty change set: no staging job, no orphan dir
+        gen = self._new_gen()
         if mode == "cow":
-            gen = self._new_gen()
-            tasks = self._write_merged(
-                self._cow_merged_plan(
-                    changes, persisted, digest_impl, meta, touched, bucket, gen
-                )
+            tasks = self._cow_merged_plan(
+                changes, persisted, digest_impl, meta, touched, bucket, gen
             )
-            if not tasks:
-                return empty
-            extra = set(tasks) - set(touched if touched is not None else tasks)
-            if extra:
-                raise ConcurrentWriteError(
-                    f"staged output holds buckets {sorted(extra)} outside the "
-                    f"declared touched set; the caller passed an incomplete "
-                    f"touched list. Staged generation {gen} left for the "
-                    "next sweep, manifest untouched"
-                )
-            written = {b for b, (rows, _) in tasks.items() if rows}
-            if written:
-                stats = self._collect_gen_stats(os.path.join(self.data_path, gen), meta)
-                if stats:
-                    self._pending_gen_stats[gen] = stats
-            return StagedUpsert(self, gen, written, sorted(tasks), base_seq, meta, mode)
-        if touched is None:
-            # Touched-bucket set: bounded by n_buckets (collect is
-            # O(n_buckets)). This job executes the caller's change plan
-            # once ahead of the staging write — callers whose change set
-            # is an expensive derivation should persist it or pass
-            # ``touched`` (CDCPipeline, delete_where/update_where and the
-            # join-view refresh all do); an unconditional persist here was
-            # measured to ADD ~0.2 s to the 1-row commit floor while
-            # saving nothing for those callers.
-            touched = [r[0] for r in changes.select(bucket).distinct().collect()]
-            if not touched:
-                return empty
-        gen, written = self._write_generation(
-            self._mor_delta_frame(
-                changes.withColumn("_bucket", bucket), persisted, digest_impl, meta
-            ),
-            meta,
-        )
-        if not written:
-            # an empty delta changes nothing: no commit, no dir left behind
-            self.fs.remove_dir(os.path.join(self.data_path, gen))
-            gen = None
-        return StagedUpsert(self, gen, written, sorted(set(touched)), base_seq, meta, mode)
+        else:
+            tasks = self._given_plan(
+                with_row_digest(changes, persisted, "_digest", impl=digest_impl)
+                .withColumn("_bucket", bucket),
+                meta,
+                gen,
+                delta=True,
+            )
+        out = self._write_generation(tasks, gen, meta)
+        if not out:
+            return empty  # no change row: no task ran, no dir was made
+        extra = set(out) - set(touched if touched is not None else out)
+        if extra:
+            self._pending_gen_stats.pop(gen, None)
+            raise ConcurrentWriteError(
+                f"staged output holds buckets {sorted(extra)} outside the "
+                f"declared touched set; the caller passed an incomplete "
+                f"touched list. Staged generation {gen} left for the "
+                "next sweep, manifest untouched"
+            )
+        written = {b for b, (rows, _) in out.items() if rows}
+        return StagedUpsert(self, gen, written, sorted(out), base_seq, meta, mode)
 
     def _dml_matched(self, predicate) -> DataFrame:
         """Resolve a DML predicate — Column, SQL string, or the predicate
@@ -1741,38 +1675,27 @@ class HashBucketParquetTable:
         ``_MERGE_BUCKETS_PER_TASK`` buckets to merge (``touched``, else
         every bucket), capped at the default parallelism: AQE would
         coalesce a small change set into one partition and run every
-        bucket's merge in one task.
+        bucket's merge in one task, though a merge task's work is the
+        bucket it reads, not the changes it is sent.
 
         ``digest_impl`` digests the change set only: ``"jvm"`` adds a
         ``sha2`` column before the shuffle, ``"arrow"`` leaves it to the
         task's ``pd_row_digest``. Stored digests that predate a
         compare-set change (``digest_cols`` lags after schema evolution)
         are recomputed in the task over the compare set, until
-        ``redigest()`` re-baselines. Every column type must map to Arrow
-        (``datasource._arrow_schema``, else ``TypeError``)."""
-        from bcdc2bcdc_spark.sources.datasource import _arrow_schema, cow_merge_bucket
+        ``redigest()`` re-baselines."""
+        from bcdc2bcdc_spark.sources.datasource import cow_merge_bucket
         import functools
 
-        schema = T.StructType.fromJson(meta["schema"])
-        columns = [f.name for f in schema.fields]
-        ccols = meta.get("cluster_cols", [])
+        columns = [f["name"] for f in meta["schema"]["fields"]]
         plan = {
+            **self._bucket_plan(meta, gen),
             "path": self.path,
-            "out": os.path.join(self.data_path, gen),
             "buckets": meta.get("buckets", {}),
             "deltas": meta.get("deltas", {}),
-            "key_cols": list(self.key_cols),
             "columns": columns,
-            "arrow_schema": _arrow_schema(
-                T.StructType(schema.fields + [T.StructField("_digest", T.StringType())])
-            ),
             "compare_cols": list(compare_cols),
             "redigest_cols": _redigest_cols(meta, compare_cols),
-            "cluster": {
-                "cols": ccols,
-                "strategy": meta.get("cluster_strategy", "lexicographic"),
-                "types": {f.name: f.dataType for f in schema.fields if f.name in ccols},
-            },
         }
         if digest_impl == "jvm":
             changes = with_row_digest(changes, list(compare_cols), "_digest", impl="jvm")
@@ -1793,26 +1716,6 @@ class HashBucketParquetTable:
                 "bucket int, rows long, bytes long",
             )
         )
-
-    def _write_merged(self, merged: DataFrame) -> dict[int, tuple[int, int]]:
-        """The CoW staging write: run the ``_cow_merged_plan`` tasks (one
-        job's result stage after the change set's shuffle) and return
-        ``{bucket: (rows, bytes)}`` for every bucket that got one."""
-        return {int(r[0]): (int(r[1]), int(r[2])) for r in merged.collect()}
-
-    def _mor_delta_frame(
-        self, changes_b: DataFrame, compare_cols: list[str], digest_impl: str, meta: dict
-    ) -> DataFrame:
-        """The merge-on-read staging frame: the change set AS a delta
-        generation (no base read, no base rewrite — write cost
-        O(changes)). The ``op`` column rides along: DELETE rows are
-        tombstones, ADD/UPDATE rows are upserts; ``read()`` resolves them
-        per key. The change set must be key-unique (lww_dedup first), same
-        precondition as CoW."""
-        schema_cols = [f["name"] for f in meta["schema"]["fields"]]
-        return with_row_digest(
-            changes_b, compare_cols, "_digest", impl=digest_impl
-        ).select(*schema_cols, "_digest", "op", "_bucket")
 
     def stage_upsert(
         self, changes: DataFrame, digest_impl: str = "jvm"
@@ -1850,11 +1753,12 @@ class HashBucketParquetTable:
         mode: str = "cow",
     ) -> None:
         """Stage → commit for the maintenance rewrites: write ``merged``
-        as a generation laid out as ``meta`` says, then ``_apply_staged``
-        it as a CoW swap of the ``touched`` buckets (or, in
-        ``full_replace`` mode, as the whole table) plus ``meta_updates``.
-        A touched bucket with no staged output was emptied and simply
-        leaves the map.
+        (rows with ``_bucket``) as given as a generation laid out as
+        ``meta`` says, then ``_apply_staged`` it as a CoW swap of the
+        ``touched`` buckets (or, in ``full_replace`` mode, as the whole
+        table) plus ``meta_updates``. A touched
+        bucket with no staged output was emptied and simply leaves the
+        map.
 
         ``meta`` is the caller's base read, and ``expected_seq`` its
         sequence unless given. If another writer commits meanwhile, this
@@ -1862,10 +1766,11 @@ class HashBucketParquetTable:
         generation unreferenced — the winner's table state is untouched."""
         if expected_seq is None:
             expected_seq = int(meta.get("commit_seq", 0))
-        gen, written = self._write_generation(merged, meta)
+        gen = self._new_gen()
+        out = self._write_generation(self._given_plan(merged, meta, gen), gen, meta)
         self._apply_staged(
             gen,
-            written,
+            set(out),
             touched,
             expected_seq,
             mode=mode,
@@ -2044,20 +1949,21 @@ class HashBucketParquetTable:
     #: event-control columns that never belong to the table schema
     _CONTROL_COLS = ("op", "event_seq", "epoch")
 
-    def _evolve_and_reconcile(self, changes: DataFrame) -> DataFrame:
+    def _evolve_and_reconcile(self, changes: DataFrame, meta: dict) -> DataFrame:
         """Schema evolution at the MERGE boundary: payload columns the
         table lacks widen the table (metadata-only, NULL-backfilled reads);
         payload columns the changes lack materialize as typed NULLs
         (old-producer events post the full replacement payload they know).
-        Plan-side only — column expressions, no data rewrite."""
+        Plan-side only — column expressions, no data rewrite. ``meta`` is
+        the caller's manifest read; an evolution updates it in place."""
         from bcdc2bcdc_spark.evolution import reconcile_to_schema
 
         fields = changes.schema.fields
         incoming = T.StructType(
             [f for f in fields if f.name not in self._CONTROL_COLS]
         )
-        self.evolve(incoming)
-        target = self.data_schema()
+        self.evolve(incoming, meta)
+        target = T.StructType.fromJson(meta["schema"])
         full = T.StructType(
             list(target.fields)
             + [f for f in fields if f.name in self._CONTROL_COLS]
@@ -2165,8 +2071,8 @@ class StagedUpsert:
     work is done, the atomic manifest swap is pending.
 
     Lifecycle: ``read()`` any number of times (the audit), then exactly
-    one of ``publish()`` / ``abandon()``. ``gen is None`` marks an empty
-    change set or an empty MOR delta — publish is then a recorded no-op.
+    one of ``publish()`` / ``abandon()``. ``gen is None`` marks a change
+    set with no row — publish is then a recorded no-op.
     ``mode`` is the table's write mode at staging time."""
 
     table: HashBucketParquetTable

@@ -34,6 +34,22 @@ def count_jobs(sc, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
 
+def staging_jobs(sc, table):
+    """Count the Spark jobs of each of ``table``'s staging writes
+    (``_write_generation``, patched on the instance) into the returned
+    list; a ``count_jobs`` around the caller leaves them out."""
+    staged = []
+    orig = table._write_generation
+
+    def _write_generation(*args):
+        jobs, out = count_jobs(sc, lambda: orig(*args))
+        staged.append(jobs)
+        return out
+
+    table._write_generation = _write_generation
+    return staged
+
+
 def sorted_reprs(df):
     """``df``'s rows as sorted reprs, so NULL and NaN compare as
     themselves (a row tuple holding NaN never equals another)."""

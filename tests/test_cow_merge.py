@@ -20,14 +20,11 @@ from bcdc2bcdc_spark.plans.pipeline import CDCPipeline
 from bcdc2bcdc_spark.sources.datasource import _arrow_schema, _nullable_dtypes, read_snapshot
 from bcdc2bcdc_spark.sources.lake import (
     HashBucketParquetTable,
-    _z_interleave,
     _z_interleave_np,
-    _z_rank,
     _z_rank_np,
-    _z_surrogate,
     _z_surrogate_np,
 )
-from tests.conftest import count_jobs, sorted_reprs
+from tests.conftest import count_jobs, sorted_reprs, staging_jobs
 
 CHANGE_SCHEMA = "repo string, path string, commit string, lang string, content string, op string"
 PAYLOAD = ("commit", "lang", "content")
@@ -238,33 +235,81 @@ def test_nullable_typed_compare_columns(spark, tmp_path, impl):
 
 
 def test_unmappable_type_raises(spark, tmp_path):
+    """The bucket writer's Arrow type mapping is the table's type
+    contract: ``init`` refuses a column it cannot map, before writing
+    anything, and so does an upsert that would evolve the schema to one."""
     t = HashBucketParquetTable(spark, str(tmp_path / "dated"), key_cols=("k",), n_buckets=2,
                                compare_cols=("v",))
-    t.init(spark.sql("SELECT 'a' AS k, DATE'2024-01-01' AS v"))
     with pytest.raises(TypeError, match="unsupported column type"):
-        t.upsert(spark.sql("SELECT 'a' AS k, DATE'2024-01-02' AS v, 'UPDATE' AS op"))
+        t.init(spark.sql("SELECT 'a' AS k, DATE'2024-01-01' AS v"))
+    assert not t.exists()
+    t.init(spark.sql("SELECT 'a' AS k, 'x' AS v"))
+    with pytest.raises(TypeError, match="unsupported column type"):
+        t.upsert(spark.sql("SELECT 'a' AS k, 'y' AS v, DATE'2024-01-02' AS d, 'UPDATE' AS op"))
+    assert [f.name for f in t.data_schema().fields] == ["k", "v"]
 
 
-def test_cow_bucket_files_read_through_streamed_fold(spark, lake):
-    """A CoW-written bucket is one key-sorted file: the ``cdclake``
-    source's bounded-memory fold reads it and agrees with ``read()``."""
+def _gen_cow_upsert(spark, t):
+    t.upsert(spark.createDataFrame(_mixed(t), CHANGE_SCHEMA))
+
+
+def _gen_mor_delta(spark, t):
+    t.set_write_mode("mor")
+    t.upsert(spark.createDataFrame(_mixed(t), CHANGE_SCHEMA))
+
+
+def _gen_compact_deltas(spark, t):
+    _gen_mor_delta(spark, t)
+    t.compact_deltas()
+
+
+def _gen_redigest(spark, t):
+    assert t.evolve(T.StructType(t.data_schema().fields + [T.StructField("stars", T.LongType())]))
+    t.redigest()
+
+
+#: how to write the newest generation of each kind on top of ``lake``
+GENERATIONS = {
+    "init": lambda spark, t: None,
+    "cow_upsert": _gen_cow_upsert,
+    "mor_delta": _gen_mor_delta,
+    "compact": lambda spark, t: t.compact(max_files_per_bucket=0),
+    "compact_deltas": _gen_compact_deltas,
+    "redigest": _gen_redigest,
+    "rebucket": lambda spark, t: t.rebucket(3),
+}
+
+
+@pytest.mark.parametrize("kind", list(GENERATIONS))
+def test_generation_files_read_through_streamed_fold(spark, lake, kind):
+    """Every generation kind is written by one bucket task per bucket:
+    each bucket of the newest generation is one key-sorted file, and the
+    ``cdclake`` source's bounded-memory fold reads the table as ``read()``
+    does."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
-    lake.upsert(spark.createDataFrame(_mixed(lake), CHANGE_SCHEMA))
-    gen = max(set(lake._meta()["buckets"].values()) - set(lake._hist_meta(1)["buckets"].values()))
-    for f in glob.glob(os.path.join(lake.data_path, gen, "_bucket=*", "*.parquet")):
-        keys = pq.read_table(f, columns=["repo", "path"]).to_pylist()
+    before = lake._referenced_gens(lake._meta())
+    GENERATIONS[kind](spark, lake)
+    (gen,) = lake._referenced_gens(lake._meta()) - before if kind != "init" else before
+    dirs = glob.glob(os.path.join(lake.data_path, gen, "_bucket=*"))
+    assert dirs
+    for d in dirs:
+        assert os.listdir(d) == ["part-00000.parquet"]
+        keys = pq.read_table(os.path.join(d, "part-00000.parquet"), columns=["repo", "path"]).to_pylist()
         assert keys == sorted(keys, key=lambda r: (r["repo"], r["path"]))
     snap = read_snapshot(spark, lake.path).drop("op", "_version")
-    assert datasets_equal(snap, lake.read(), compare_cols=PAYLOAD)
+    assert sorted_reprs(snap) == sorted_reprs(lake.read())
 
 
-def test_zorder_numpy_matches_column_version(spark):
-    """The merge task's Z-value (numpy) equals the Spark writer's Column
-    expression on shared split points, for every surrogate type."""
+def test_zorder_golden_values():
+    """The Z-order's surrogates, ranks and Z-values on fixed rows and
+    split points, for every surrogate type: literal values that the
+    lake's earlier Spark Column version of the Z-order computed."""
+    import numpy as np
+
     rows = [
         ("ab", 3, 2.5, True),
         ("", None, float("nan"), False),
@@ -279,25 +324,33 @@ def test_zorder_numpy_matches_column_version(spark):
         T.StructField("d", T.DoubleType()),
         T.StructField("b", T.BooleanType()),
     ])
-    df = spark.createDataFrame(rows, schema)
     splits = {"s": [-1.0, 24832.0, 24930.0], "n": [0.0, 5.0], "d": [-0.5, 2.5], "b": [1.0]}
     dts = {f.name: f.dataType for f in schema.fields}
-
-    def ranks():
-        return [_z_rank(_z_surrogate(c, dts[c]), splits[c]) for c in splits]
-
-    # two selects: Spark mis-evaluates the same rank lambdas twice in one
-    got = df.select(*[r.alias(c) for r, c in zip(ranks(), splits)]).collect()
-    zs = [r["z"] for r in df.select(_z_interleave(ranks()).alias("z")).collect()]
     # the task's own Arrow → pandas conversion (NaN stays apart from NULL)
     pdf = pa.table(
         {c: [r[i] for r in rows] for i, c in enumerate(schema.names)},
         schema=_arrow_schema(schema),
     ).to_pandas(types_mapper=_nullable_dtypes().get)
-    np_ranks = [_z_rank_np(_z_surrogate_np(pdf[c], dts[c]), splits[c]) for c in splits]
-    for i, c in enumerate(splits):
-        assert [r[c] for r in got] == np_ranks[i].tolist(), c
-    assert zs == _z_interleave_np(np_ranks).tolist()
+    nan, inf = float("nan"), float("inf")
+    surrogates = {
+        "s": [24930.0, 0.0, -256.0, 31232.0, 24832.0, 16738.0],
+        "n": [3.0, nan, -7.0, 100.0, 5.0, 5.0],
+        "d": [2.5, inf, nan, -1.0, 0.0, 1e9],  # NaN sorts above every number
+        "b": [1.0, 0.0, nan, 1.0, 0.0, 1.0],
+    }
+    ranks = {
+        "s": [3, 1, 0, 3, 2, 1],
+        "n": [1, 0, 0, 2, 2, 2],
+        "d": [2, 2, 0, 0, 1, 2],
+        "b": [1, 0, 0, 1, 0, 1],
+    }
+    got = []
+    for c in splits:
+        sur = _z_surrogate_np(pdf[c], dts[c])
+        np.testing.assert_array_equal(sur, surrogates[c], err_msg=c)
+        got.append(_z_rank_np(sur, splits[c]))
+        assert got[-1].tolist() == ranks[c], c
+    assert _z_interleave_np(got).tolist() == [91, 65, 0, 57, 52, 105]
 
 
 def test_cow_upsert_without_touched_runs_no_discovery_job(spark, lake, tmp_path):
@@ -306,15 +359,7 @@ def test_cow_upsert_without_touched_runs_no_discovery_job(spark, lake, tmp_path)
     with an aggregate of its own (here an LWW-style dedup) is 3 jobs."""
     sc = spark.sparkContext
     changes = spark.createDataFrame(_mixed(lake) * 2, CHANGE_SCHEMA).dropDuplicates(["repo", "path"])
-    staged = []
-    orig = lake._write_merged
-
-    def _write_merged(df):
-        jobs, out = count_jobs(sc, lambda: orig(df))
-        staged.append(jobs)
-        return out
-
-    lake._write_merged = _write_merged
+    staged = staging_jobs(sc, lake)
     jobs, _ = count_jobs(sc, lambda: lake.upsert(changes))
     assert jobs == 0 and staged == [3]
 
@@ -330,40 +375,76 @@ def test_apply_epoch_job_budget(spark, tmp_path):
     t.init(canonicalize_snapshot(gen_repos(spark, n_keys=50, seed=5)))
     pipe = CDCPipeline(table=t, checkpoints=CheckpointStore(str(tmp_path / "ck")))
     epoch = spark.read.parquet(str(tmp_path / "ev"))
-    staged = []
-    orig = t._write_merged
-
-    def _write_merged(df):
-        jobs, out = count_jobs(sc, lambda: orig(df))
-        staged.append(jobs)
-        return out
-
-    t._write_merged = _write_merged
+    staged = staging_jobs(sc, t)
     jobs, _ = count_jobs(sc, lambda: pipe.apply_epoch(epoch, 0))
     assert (jobs, staged) == (2, [3])
 
 
 def test_long_value_in_a_later_row_group_drops_that_columns_stats(tmp_path):
     """Arrow keeps an unsound min/max for a chunk holding a value over
-    4096 bytes, so the merge writer writes such a column with no
-    statistics: decided at the first row group, or by a re-run when a
-    later row group brings the value."""
+    4096 bytes, so the bucket writer writes such a column with no
+    statistics: decided at the first row group, or, when a later row
+    group brings the value, by rewriting the groups already written."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from bcdc2bcdc_spark.sources.datasource import _StatsTooLong, _write_bucket_file
+    from bcdc2bcdc_spark.sources.datasource import _write_bucket_file
 
     schema = pa.schema([("k", pa.string()), ("v", pa.string())])
     frames = [pd.DataFrame({"k": ["a"], "v": ["short"]}), pd.DataFrame({"k": ["b"], "v": ["x" * 5000]})]
-    no_stats = set()
-    with pytest.raises(_StatsTooLong):
-        _write_bucket_file(str(tmp_path / "b"), frames, schema, 1, no_stats)
-    assert not list((tmp_path / "b").iterdir())  # the temp file is gone
-    assert _write_bucket_file(str(tmp_path / "b"), frames, schema, 1, {"v"})[0] == 2
-    md = pq.read_metadata(str(tmp_path / "b" / "part-00000.parquet"))
+    assert _write_bucket_file(str(tmp_path / "b"), iter(frames), schema, 1)[0] == 2
+    assert sorted(p.name for p in (tmp_path / "b").iterdir()) == ["part-00000.parquet"]
+    f = str(tmp_path / "b" / "part-00000.parquet")
+    md = pq.read_metadata(f)
     assert md.num_row_groups == 2
     assert all(md.row_group(g).column(1).statistics is None for g in range(2))
     assert md.row_group(0).column(0).statistics.has_min_max
+    assert pq.read_table(f).column("v").to_pylist() == ["short", "x" * 5000]
+
+
+def test_nan_float_column_gets_no_statistics(tmp_path):
+    """Arrow leaves NaN out of a float column's min/max, so the bucket
+    writer writes a NaN-bearing float column with no statistics, from
+    its first row group or from a later one on."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from bcdc2bcdc_spark.sources.datasource import _write_bucket_file
+
+    schema = pa.schema([("k", pa.string()), ("d", pa.float64()), ("e", pa.float32())])
+    frames = [
+        pd.DataFrame({"k": ["a"], "d": [1.0], "e": [float("nan")]}),
+        pd.DataFrame({"k": ["b"], "d": [float("nan")], "e": [2.0]}),
+        pd.DataFrame({"k": ["c"], "d": [None], "e": [None]}),
+    ]
+    _write_bucket_file(str(tmp_path / "b"), iter(frames), schema, 1)
+    md = pq.read_metadata(str(tmp_path / "b" / "part-00000.parquet"))
+    assert md.num_row_groups == 3
+    for g in range(3):
+        assert md.row_group(g).column(0).statistics.has_min_max
+        assert md.row_group(g).column(1).statistics is None
+        assert md.row_group(g).column(2).statistics is None
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_nan_row_survives_pushed_and_pruned_filters(spark, tmp_path, mode):
+    """A NaN written into a double stats column keeps its row in every
+    filtered read: Spark orders NaN above every number, so ``d > 5``
+    holds for it, and neither the parquet scan's row-group statistics nor
+    the manifest bounds may skip it."""
+    schema = "k string, d double"
+    t = HashBucketParquetTable(
+        spark, str(tmp_path / "lake"), key_cols=("k",), n_buckets=1,
+        compare_cols=("d",), stats_cols=("d",), write_mode=mode,
+    )
+    t.init(spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema))
+    t.upsert(spark.createDataFrame([("c", float("nan"), "ADD")], schema + ", op string"))
+    for df in (
+        t.read().filter(F.col("d") > 5.0),
+        t.read().filter(F.col("d") == float("nan")),
+        t.read_where([("d", ">", 5.0)]),
+    ):
+        assert [r["k"] for r in df.collect()] == ["c"]
 
 
 @pytest.fixture

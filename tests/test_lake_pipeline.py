@@ -23,7 +23,7 @@ from bcdc2bcdc_spark.sources.lake import (
     iceberg_merge_sql,
 )
 
-from tests.conftest import count_jobs, manifest_reads
+from tests.conftest import count_jobs, manifest_reads, staging_jobs
 from tests.oracle import content_sha_index, replay
 
 
@@ -116,9 +116,7 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
         )
 
     winner = HashBucketParquetTable(spark, tmp_table.path, n_buckets=8)
-    # the staging write: the merge tasks (CoW) or the delta write (MOR)
-    seam = "_write_merged" if mode == "cow" else "_write_generation"
-    orig_stage = getattr(tmp_table, seam)
+    orig_stage = tmp_table._write_generation  # the staging write
     won = []
 
     def _interleaved_stage(*args):
@@ -128,12 +126,12 @@ def test_concurrent_upsert_loses_cleanly(spark, tmp_path, mode):
         won.append(winner._meta())
         return out
 
-    setattr(tmp_table, seam, _interleaved_stage)
+    tmp_table._write_generation = _interleaved_stage
     try:
         with pytest.raises(ConcurrentWriteError):
             tmp_table.upsert(_change("loser-content", 1))
     finally:
-        setattr(tmp_table, seam, orig_stage)
+        tmp_table._write_generation = orig_stage
 
     assert tmp_table._meta() == won[0]
     contents = {r["content"] for r in tmp_table.read().collect()}
@@ -223,10 +221,10 @@ def test_metadata_commits_launch_no_job(spark, tmp_path):
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 def test_upsert_manifest_read_budget(spark, tmp_path, mode):
-    """An upsert reads the manifest at most 5 times (schema evolution's
-    check, the base read, the commit head and the post-commit sweep) and
-    never asks whether it exists: the row layout and stats columns come
-    from the base read, not from resolvers of their own."""
+    """An upsert reads the manifest at most 3 times (the base read, the
+    commit head and the post-commit sweep) and never asks whether it
+    exists: schema evolution, the row layout and the stats columns all
+    work from the base read, not from reads of their own."""
     t = HashBucketParquetTable(
         spark, str(tmp_path / "lake"), n_buckets=4, write_mode=mode,
         stats_cols=("lang",),
@@ -236,7 +234,7 @@ def test_upsert_manifest_read_budget(spark, tmp_path, mode):
         "content", F.lit("budget")
     )
     reads, exists, _ = manifest_reads(t, lambda: t.upsert(changes))
-    assert (reads <= 5, exists) == (True, 0), (reads, exists)
+    assert (reads <= 3, exists) == (True, 0), (reads, exists)
     assert t.read().where(F.col("content") == "budget").count() == 2
     assert t._meta()["stats"]  # the stats columns still came from the manifest
 
@@ -257,20 +255,57 @@ def test_upsert_with_touched_runs_jobs_only_in_staging_write(spark, tmp_path, mo
         "repo string, path string, commit string, lang string, content string, op string",
     )
     touched = [r[0] for r in changes.select(t.bucket_expr()).collect()]
-    staging = []
-    # the staging write: the merge tasks (CoW) or the delta write (MOR)
-    seam = "_write_merged" if mode == "cow" else "_write_generation"
-    orig = getattr(t, seam)
-
-    def _staging_write(*args):
-        jobs, out = count_jobs(sc, lambda: orig(*args))
-        staging.append(jobs)
-        return out
-
-    setattr(t, seam, _staging_write)
+    staging = staging_jobs(sc, t)
     assert count_jobs(sc, lambda: t.upsert(changes, touched=touched))[0] == 0
     assert sum(staging)
     assert t.read().where(F.col("content") == "budgeted").count() == 1
+
+
+def test_mor_upsert_without_touched_runs_no_discovery_job(spark, tmp_path):
+    """A MOR ``upsert(touched=None)`` runs every job inside its staging
+    write (the delta's bucket tasks find the touched buckets themselves),
+    and an upsert whose change set holds no row stages nothing."""
+    sc = spark.sparkContext
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4, write_mode="mor")
+    t.init(canonicalize_snapshot(gen_repos(spark, n_keys=60, seed=8)))
+    changes = t.read().limit(3).withColumn("op", F.lit("UPDATE")).withColumn(
+        "content", F.lit("mor")
+    )
+    staging = staging_jobs(sc, t)
+    assert count_jobs(sc, lambda: t.upsert(changes))[0] == 0
+    assert len(staging) == 1 and staging[0] > 0
+    assert t.read().where(F.col("content") == "mor").count() == 3
+    seq, gens = t.commit_seq(), set(os.listdir(t.data_path))
+    t.upsert(changes.limit(0))
+    assert (t.commit_seq(), set(os.listdir(t.data_path))) == (seq, gens)
+
+
+def test_generation_write_job_budgets(spark, tmp_path):
+    """``init``, ``compact`` and ``rebucket`` each run 2 jobs (the input's
+    shuffle and the bucket tasks), all inside the staging write. A
+    Z-order table's ``init`` runs the same 2: its split points come from
+    each bucket's rows in the task, with no quantile job."""
+    sc = spark.sparkContext
+    base = canonicalize_snapshot(gen_repos(spark, n_keys=200, seed=3))
+    base.write.parquet(str(tmp_path / "base"))
+    base = spark.read.parquet(str(tmp_path / "base"))
+
+    def budget(t, fn):
+        staging = staging_jobs(sc, t)
+        jobs, _ = count_jobs(sc, fn)
+        del t._write_generation
+        return jobs, staging
+
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=8)
+    assert budget(t, lambda: t.init(base)) == (0, [2])
+    assert budget(t, lambda: t.compact(max_files_per_bucket=0)) == (0, [2])
+    assert budget(t, lambda: t.rebucket(4)) == (0, [2])
+    z = HashBucketParquetTable(
+        spark, str(tmp_path / "z"), n_buckets=4, cluster_cols=("lang", "content"),
+        cluster_strategy="zorder",
+    )
+    assert budget(z, lambda: z.init(base)) == (0, [2])
+    assert datasets_equal(z.read(), base)
 
 
 def test_write_guard(spark, tmp_path):
@@ -556,7 +591,10 @@ def test_crashed_commit_leaves_table_intact_and_is_swept(spark, tmp_path):
         canonicalize_snapshot(gen_repos(spark, n_keys=10, seed=99)),
         ["lang", "content"], "_digest",
     ).withColumn("_bucket", _bucket_expr(table.key_cols, table.n_buckets))
-    orphan_gen, _ = table._write_generation(doomed, table._meta())
+    orphan_gen = table._new_gen()
+    table._write_generation(
+        table._given_plan(doomed, table._meta(), orphan_gen), orphan_gen, table._meta()
+    )
     orphan_dir = os.path.join(table.data_path, orphan_gen)
     assert os.path.isdir(orphan_dir)
 

@@ -232,3 +232,54 @@ def test_cow_merge_is_one_grouped_arrow_task_per_bucket(spark, tmp_path, impl):
     # the change set's own scan and its one shuffle
     assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM") == 1
     assert plan.count("FileScan") == 1
+
+
+def test_every_generation_is_one_bucket_task_plan(spark, tmp_path, monkeypatch):
+    """Every generation kind is staged by ``_write_generation`` from one
+    ``FlatMapGroupsInArrow`` (one bucket task per bucket) over one
+    ``repartition`` by bucket, with no Spark file write. The write-as-given
+    plans of a key-sorted table sort each partition once, by bucket and
+    key: the grouping's own sort, with no second one."""
+    from bcdc2bcdc_spark.functions.canonicalize import canonicalize_snapshot
+    from bcdc2bcdc_spark.generator import gen_repos
+    from bcdc2bcdc_spark.sources.lake import HashBucketParquetTable
+
+    plans = []
+    real = HashBucketParquetTable._write_generation
+
+    def capture(self, tasks, gen, meta):
+        plans.append(_plan(tasks))
+        return real(self, tasks, gen, meta)
+
+    monkeypatch.setattr(HashBucketParquetTable, "_write_generation", capture)
+    t = HashBucketParquetTable(spark, str(tmp_path / "lake"), n_buckets=4)
+
+    def change():
+        return t.read().where(F.col("lang") == "go").withColumn("op", F.lit("UPDATE"))
+
+    kinds = {
+        "init": lambda: t.init(canonicalize_snapshot(gen_repos(spark, n_keys=50, seed=4))),
+        "cow_upsert": lambda: t.upsert(change()),
+        "mor_delta": lambda: (t.set_write_mode("mor"), t.upsert(change())),
+        "compact_deltas": lambda: t.compact_deltas(),
+        "compact": lambda: t.compact(max_files_per_bucket=0),
+        "redigest": lambda: (
+            t.evolve(T.StructType(t.data_schema().fields + [T.StructField("n", T.LongType())])),
+            t.redigest(),
+        ),
+        "rebucket": lambda: t.rebucket(2),
+    }
+    for kind, run in kinds.items():
+        plans.clear()
+        run()
+        assert len(plans) == 1, kind
+        (plan,) = plans
+        assert plan.count("FlatMapGroupsInArrow") == 1, kind
+        # the one shuffle by bucket: coalescable by AQE for rows written
+        # as given, a fixed partition count for the CoW merge
+        by_bucket = "REPARTITION_BY_NUM" if kind == "cow_upsert" else "REPARTITION_BY_COL"
+        assert plan.count("REPARTITION_BY") == plan.count(by_bucket) == 1, kind
+        assert "WriteFiles" not in plan and "InsertIntoHadoopFsRelation" not in plan, kind
+        if kind != "cow_upsert":
+            (sort,) = [ln for ln in plan.splitlines() if "Sort [" in ln]
+            assert "_bucket#" in sort and "repo#" in sort and "path#" in sort, kind
